@@ -814,13 +814,11 @@ object WinnowFpsExpr {
   * SCAN per probe; here each item's gram set loads once per benchmark
   * VALUE into an open-addressing long set, and each doc pays one pass
   * over its grams per touched item plus one union probe per gram. The
-  * prepared sets are cached under a structural fingerprint of the
-  * benchmark array (item count + each item's id/length/first/last gram):
-  * `UnsafeRow.getArray` allocates a fresh ArrayData wrapper per row, so a
-  * reference-identity key would never hit in the broadcast-join plan
-  * (r16 ADVICE) — the O(items) fingerprint probe is what makes the
-  * "loaded once" claim hold; a changed fingerprint just rebuilds
-  * (correctness never depends on the cache hitting).
+  * prepared sets are cached under a private copy of the benchmark array
+  * and reused only while the incoming value is equal to it (see
+  * [[KernelCache]]): `UnsafeRow.getArray` allocates a fresh ArrayData
+  * wrapper per row, so a reference-identity key would never hit in the
+  * broadcast-join plan, and a sampled fingerprint can collide.
   */
 case class DecontamVerdictExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
@@ -857,40 +855,12 @@ case class DecontamVerdictExpr(left: Expression, right: Expression)
     }
   }
 
-  /** Per-benchmark-value prepared sets: (union, per-item). Keyed on a
-    * structural fingerprint — item count, then (bid, set length, first
-    * gram, last gram) per item — because the ArrayData REFERENCE changes
-    * every row (UnsafeRow.getArray allocates a wrapper per call), while
-    * the underlying benchmark value is one broadcast row. The probe is
-    * O(items) per input row, negligible against the per-gram work; a
-    * fingerprint miss just rebuilds. */
-  @transient private var cachedKey: Array[Long] = null
-  @transient private var cachedUnion: LongSet = null
-  @transient private var cachedItems: Array[LongSet] = null
+  /** Per-benchmark-value prepared sets: (union, per-item). */
+  @transient private lazy val cache = new KernelCache[(LongSet, Array[LongSet])]
 
-  private def fingerprint(bs: ArrayData): Array[Long] = {
-    val n = bs.numElements()
-    val key = new Array[Long](1 + 4 * n)
-    key(0) = n
-    var i = 0
-    while (i < n) {
-      val st = bs.getStruct(i, 2)
-      val arr = st.getArray(1)
-      val m = arr.numElements()
-      val base = 1 + 4 * i
-      key(base) = if (st.isNullAt(0)) Long.MinValue else st.getLong(0)
-      key(base + 1) = m
-      key(base + 2) = if (m > 0) arr.getLong(0) else 0L
-      key(base + 3) = if (m > 0) arr.getLong(m - 1) else 0L
-      i += 1
-    }
-    key
-  }
+  private def prepare(bs: ArrayData): (LongSet, Array[LongSet]) = cache.getOrBuild(bs, build)
 
-  private def prepare(bs: ArrayData): (LongSet, Array[LongSet]) = {
-    val key = fingerprint(bs)
-    if (cachedKey != null && java.util.Arrays.equals(cachedKey, key))
-      return (cachedUnion, cachedItems)
+  private def build(bs: ArrayData): (LongSet, Array[LongSet]) = {
     val n = bs.numElements()
     val items = new Array[LongSet](n)
     var total = 0
@@ -914,7 +884,6 @@ case class DecontamVerdictExpr(left: Expression, right: Expression)
       items(i) = set
       i += 1
     }
-    cachedKey = key; cachedUnion = union; cachedItems = items
     (union, items)
   }
 
@@ -998,29 +967,19 @@ object DecontamVerdictExpr {
   * membership set loads ONCE per distinct set value into a hash set
   * instead of ArrayIntersect rebuilding it per evaluation — per ROW, and
   * twice per row when two output columns reference the intersect (the
-  * §4.4 CollapseProject duplication). Cache key = the s17 kernel's
-  * structural-fingerprint idiom (length + first/last element hashes):
-  * UnsafeRow.getArray allocates a fresh wrapper per row, so reference
-  * identity never hits; a fingerprint miss just rebuilds. */
+  * §4.4 CollapseProject duplication). The set is cached like the s17
+  * kernel's, under an equality-checked copy of the set value
+  * ([[KernelCache]]). */
 case class MemberCountExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
   override def nullable: Boolean = left.nullable || right.nullable
   override def dataType: DataType = IntegerType
 
-  @transient private var cachedKey: Array[Long] = null
-  @transient private var cachedSet: java.util.HashSet[UTF8String] = null
+  @transient private lazy val cache = new KernelCache[java.util.HashSet[UTF8String]]
 
-  private def fingerprint(bs: ArrayData): Array[Long] = {
-    val n = bs.numElements()
-    def h(i: Int): Long =
-      if (bs.isNullAt(i)) Long.MinValue else bs.getUTF8String(i).hashCode().toLong
-    Array(n.toLong, if (n > 0) h(0) else 0L, if (n > 0) h(n - 1) else 0L,
-      if (n > 1) h(n / 2) else 0L)
-  }
+  private def prepare(bs: ArrayData): java.util.HashSet[UTF8String] = cache.getOrBuild(bs, build)
 
-  private def prepare(bs: ArrayData): java.util.HashSet[UTF8String] = {
-    val key = fingerprint(bs)
-    if (cachedKey != null && java.util.Arrays.equals(cachedKey, key)) return cachedSet
+  private def build(bs: ArrayData): java.util.HashSet[UTF8String] = {
     val n = bs.numElements()
     val set = new java.util.HashSet[UTF8String](math.max(n * 2, 16))
     var i = 0
@@ -1029,7 +988,6 @@ case class MemberCountExpr(left: Expression, right: Expression)
       if (!bs.isNullAt(i)) set.add(bs.getUTF8String(i).clone())
       i += 1
     }
-    cachedKey = key; cachedSet = set
     set
   }
 
@@ -1061,4 +1019,25 @@ object MemberCountExpr {
       MemberCountExpr(
         org.apache.spark.sql.graftshim.shims.expression(arr),
         org.apache.spark.sql.graftshim.shims.expression(set)))
+}
+
+/** One-entry cache of a value prepared from an array argument that is the
+  * same for long runs of rows (a broadcast benchmark set). The key is a
+  * private deep copy of the array; a cached value is reused only while the
+  * incoming array is equal to that copy, so two distinct arrays can never
+  * share an entry. `UnsafeArrayData` equality compares the bytes (a memcmp
+  * per row, small against the per-row kernel work) and `GenericArrayData`
+  * equality the elements; an unequal representation of equal contents
+  * just rebuilds. */
+final class KernelCache[V] {
+  private var key: ArrayData = null
+  private var value: V = _
+
+  def getOrBuild(arr: ArrayData, build: ArrayData => V): V = {
+    if (key == null || key != arr) {
+      value = build(arr)
+      key = arr.copy()
+    }
+    value
+  }
 }

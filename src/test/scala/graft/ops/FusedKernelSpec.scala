@@ -175,4 +175,28 @@ class FusedKernelSpec extends SparkSpec {
     val got = fusedVerdict(docs, bench).collect().map(r => (r.getInt(1), r.getInt(2)))
     assert(got.toSeq == Seq((0, 0)))
   }
+
+  test("decontam_verdict cache: benchmarks equal in ids, lengths, first and last grams stay apart") {
+    // Two one-item benchmarks with the same id, gram count, first and last
+    // gram (the whole cache key once) but a different middle gram. Rows
+    // alternate between them inside one task; each must score against its
+    // own benchmark.
+    def g(s: String): Long = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s),
+      org.apache.spark.sql.types.StringType, 42L)
+    val first = g("a b c d e"); val last = g("k l m n o")
+    val benchA = Seq((7L, Seq(first, g("p q r s t"), last)))
+    val benchB = Seq((7L, Seq(first, g("u v w x y"), last)))
+    val rows = (1 to 60).map { i =>
+      val useA = i % 2 == 0
+      (i.toLong, "p q r s t", if (useA) benchA else benchB, if (useA) 1 else 0)
+    }.toDF("doc_id", "text", "bs", "expect").repartition(1)
+    val got = rows.select(col("doc_id"), col("expect"),
+        DecontamVerdictExpr.decontam_verdict(split(col("text"), " "), col("bs")).as("v"))
+      .select(col("doc_id"), col("expect"), col("v.hits"), col("v.mr")).collect()
+    assert(got.length == 60)
+    got.foreach { r =>
+      assert(r.getInt(2) == r.getInt(1) && r.getInt(3) == r.getInt(1), s"doc ${r.getLong(0)}")
+    }
+  }
 }

@@ -50,6 +50,22 @@ class Round17KernelSpec extends SparkSpec {
     assert(c2 === 1L)   // only tok7 once
   }
 
+  test("member_count cache: distinct sets with equal length/first/middle/last each count right") {
+    // Both sets share length, first, middle (n/2) and last elements, which
+    // was the whole cache key once; rows alternate between them inside
+    // one task, so a key that ignores element 1 would reuse a stale set.
+    val a = Seq("head", "onlyA", "mid", "tail")
+    val b = Seq("head", "onlyB", "mid", "tail")
+    val rows = (1 to 200).map(i => (i.toLong, Seq("onlyA", s"t$i"), if (i % 3 == 0) b else a))
+      .toDF("id", "arr", "set").repartition(1)
+    val got = rows.select(col("id"),
+      MemberCountExpr.member_count(col("arr"), col("set")).as("mc"),
+      size(array_intersect(col("arr"), col("set"))).as("ai")).collect()
+    assert(got.length == 200)
+    got.foreach { r => assert(r.getInt(1) === r.getInt(2), s"row ${r.getLong(0)}") }
+    assert(got.count(_.getInt(1) == 1) == 134 && got.count(_.getInt(1) == 0) == 66)
+  }
+
   test("x90 cap path: a >128-doc clone group caps every band and is audited") {
     val dir = java.nio.file.Files.createTempDirectory("r17x90").toString
     // 130 identical docs (one text → one rep with m=130, every band bucket
