@@ -23,13 +23,14 @@ trait NerProvider extends Serializable {
 
 /** Offline fallback provider (ner.py:61-81). */
 object OfflineProvider extends NerProvider {
+  /** EMAIL 0.99 then PHONE_NUMBER 0.90 spans of one text, via the rules
+    * detectors. */
+  def spans(text: String): Vector[NerSpan] =
+    Rules.Email.find(text).map(s => NerSpan(s.start, s.end, s.text, PiiTypes.EMAIL, 0.99)) ++
+    Rules.Phone.find(text).map(s => NerSpan(s.start, s.end, s.text, PiiTypes.PHONE_NUMBER, 0.90))
+
   override def analyzeBatch(texts: Iterator[String]): Iterator[Seq[NerSpan]] =
-    texts.map { t =>
-      Rules.findRegex(t, Rules.EMAIL_RE).map(s =>
-        NerSpan(s.start, s.end, s.text, PiiTypes.EMAIL, 0.99)) ++
-      Rules.findRegex(t, Rules.PHONE_US_RE).map(s =>
-        NerSpan(s.start, s.end, s.text, PiiTypes.PHONE_NUMBER, 0.90))
-    }
+    texts.map(spans)
 }
 
 /** Model-less Presidio stand-in: empty results (ner.py:137-139 offline). */

@@ -1,6 +1,6 @@
 package graft.detect
 
-import java.util.regex.Pattern
+import java.util.regex.{Matcher, Pattern}
 
 import graft.core.{Candidate, Checksums, PiiTypes, Span}
 
@@ -28,13 +28,27 @@ object Rules {
   val PAN_RE: Pattern = Pattern.compile("""\b([A-Z]{5}[0-9]{4}[A-Z])\b""", Pattern.CASE_INSENSITIVE)
   val PERSON_RE: Pattern = Pattern.compile("""\b([A-Z][a-z]+\s[A-Z][a-z]+)\b""")
 
-  /** All matches of `p` in `text` as spans (rules.py:89-90). */
-  def findRegex(text: String, p: Pattern): Seq[Span] = {
-    val m = p.matcher(text)
-    val out = Vector.newBuilder[Span]
-    while (m.find()) out += Span(m.start, m.end, m.group(0))
-    out.result()
-  }
+  private val Digits = '0' to '9'
+  private val Letters = ('A' to 'Z') ++ ('a' to 'z')
+  private val Hex = Digits ++ ('A' to 'F') ++ ('a' to 'f')
+  /** `\s` without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]. */
+  private val Space = " \t\n\u000B\f\r"
+
+  /* Each detector's alphabet must contain every char its pattern can consume,
+   * and its minimum length must not exceed the pattern's shortest match. An
+   * ASCII table is enough only while no pattern uses UNICODE_CHARACTER_CLASS
+   * or UNICODE_CASE (\d, \s, the bracket classes and PAN's ASCII-only
+   * CASE_INSENSITIVE then never consume a char >= 128). */
+  private[detect] val Email = new Detector(EMAIL_RE, Letters ++ Digits ++ "._%+@-", minLen = 6)
+  private[detect] val Phone = new Detector(PHONE_US_RE, Digits ++ "+().-" ++ Space, minLen = 10)
+  private[detect] val Cc = new Detector(CC_RE, Digits ++ " -", minLen = 13)
+  private[detect] val Ssn = new Detector(SSN_RE, Digits :+ '-', minLen = 11)
+  private[detect] val Ipv4 = new Detector(IPV4_RE, Digits :+ '.', minLen = 7)
+  private[detect] val Mac = new Detector(MAC_RE, Hex ++ ":-", minLen = 17)
+  private[detect] val Date = new Detector(DATE_RE, Digits ++ "/-", minLen = 10)
+  private[detect] val Aadhaar = new Detector(AADHAAR_RE, Digits ++ " -", minLen = 12)
+  private[detect] val Pan = new Detector(PAN_RE, Letters ++ Digits, minLen = 10)
+  private[detect] val Person = new Detector(PERSON_RE, Letters ++ Space, minLen = 5)
 
   /** The candidate pipeline: detectors run in fixed order, each appending its
     * matches (rules.py:106-166 — "Order matters a bit").
@@ -44,33 +58,33 @@ object Rules {
   def proposeCandidates(text: String, enabled: String => Boolean = _ => true): Vector[Candidate] = {
     val cands = Vector.newBuilder[Candidate]
     if (enabled(PiiTypes.EMAIL))
-      for (s <- findRegex(text, EMAIL_RE))
+      for (s <- Email.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.EMAIL, 0.95)
     if (enabled(PiiTypes.PHONE_NUMBER))
-      for (s <- findRegex(text, PHONE_US_RE))
+      for (s <- Phone.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.PHONE_NUMBER, 0.85)
     if (enabled(PiiTypes.CREDIT_CARD))
-      for (s <- findRegex(text, CC_RE); if Checksums.luhn(s.text))
+      for (s <- Cc.find(text); if Checksums.luhn(s.text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.CREDIT_CARD, 0.9,
           Map(PiiTypes.CREDIT_CARD -> true))
     if (enabled(PiiTypes.SSN))
-      for (s <- findRegex(text, SSN_RE))
+      for (s <- Ssn.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.SSN, 0.9)
     if (enabled(PiiTypes.IP_ADDRESS))
-      for (s <- findRegex(text, IPV4_RE))
+      for (s <- Ipv4.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.IP_ADDRESS, 0.9)
     if (enabled(PiiTypes.MAC_ADDRESS))
-      for (s <- findRegex(text, MAC_RE))
+      for (s <- Mac.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.MAC_ADDRESS, 0.9)
     if (enabled(PiiTypes.AADHAAR))
-      for (s <- findRegex(text, AADHAAR_RE); if Checksums.verhoeff(s.text))
+      for (s <- Aadhaar.find(text); if Checksums.verhoeff(s.text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.AADHAAR, 0.9,
           Map(PiiTypes.AADHAAR -> true))
     if (enabled(PiiTypes.PAN))
-      for (s <- findRegex(text, PAN_RE))
+      for (s <- Pan.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.PAN, 0.9)
     if (enabled(PiiTypes.DATE))
-      for (s <- findRegex(text, DATE_RE)) {
+      for (s <- Date.find(text)) {
         // DOB context boost: ±8-char window, lowercased (rules.py:154-161)
         val left = math.max(0, s.start - 8)
         val right = math.min(text.length, s.end + 8)
@@ -79,7 +93,7 @@ object Rules {
         cands += Candidate(s.start, s.end, s.text, PiiTypes.DATE, 0.7 + boost)
       }
     if (enabled(PiiTypes.PERSON))
-      for (s <- findRegex(text, PERSON_RE))
+      for (s <- Person.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.PERSON, 0.4)
     cands.result()
   }
@@ -112,6 +126,43 @@ object Rules {
           case (kw, idx) =>
             out += Candidate(idx, idx + kw.length, value.substring(idx, idx + kw.length), t, 0.6)
         }
+      }
+    }
+    out.result()
+  }
+}
+
+/** One regex detector scanned only inside maximal runs of its alphabet that
+  * are at least `minLen` chars long. Every match of `pattern` consists of
+  * alphabet chars and is at least `minLen` long, so it lies inside such a
+  * run; transparent bounds let `\b` see the chars around the run. The
+  * engine therefore makes the same attempts at every position it visits,
+  * and the matches equal a whole-text `find()` loop's in spans, order and
+  * text. */
+private[detect] final class Detector(val pattern: Pattern, alphabet: Iterable[Char], val minLen: Int) {
+  private val table = new Array[Boolean](128)
+  alphabet.foreach(c => table(c) = true)
+
+  private def inAlphabet(c: Char): Boolean = c < 128 && table(c)
+
+  /** All matches of `pattern` in `text` as spans (rules.py:89-90). */
+  def find(text: String): Vector[Span] = {
+    val out = Vector.newBuilder[Span]
+    var m: Matcher = null
+    val n = text.length
+    var i = 0
+    while (i < n) {
+      if (!inAlphabet(text.charAt(i))) i += 1
+      else {
+        var j = i + 1
+        while (j < n && inAlphabet(text.charAt(j))) j += 1
+        if (j - i >= minLen) {
+          if (m == null)
+            m = pattern.matcher(text).useTransparentBounds(true).useAnchoringBounds(false)
+          m.region(i, j)
+          while (m.find()) out += Span(m.start, m.end, m.group(0))
+        }
+        i = j + 1 // text(j) ends the run
       }
     }
     out.result()

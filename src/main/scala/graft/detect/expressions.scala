@@ -42,8 +42,8 @@ object CandidateSchema {
   * `candidate_idx`.
   *
   * A custom expression (not a UDF) so the array feeds `posexplode`/`transform`
-  * without Row↔object serialization; regex loops are inherently interpreted,
-  * hence CodegenFallback (same class as Spark's own RegExpExtractAll).
+  * without Row↔object serialization. Each detector's regex runs only inside
+  * runs of its own alphabet ([[Detector.find]]).
   */
 case class PiiCandidatesExpr(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -70,9 +70,8 @@ case class PiiCandidatesExpr(child: Expression)
   *    push into the scan as a re-evaluated DataFilter.
   *
   * Inner-generate semantics (zero-candidate docs emit nothing) — the
-  * behavior every explode call site restores anyway. The regex pass
-  * stays interpreted (CodegenFallback, like Spark's own RegExpExtractAll);
-  * the win is structural, not codegen of the regexes themselves. */
+  * behavior every explode call site restores anyway. Each detector's regex
+  * runs only inside runs of its own alphabet ([[Detector.find]]). */
 case class PiiCandidatesGenerator(child: Expression)
     extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.Generator
@@ -91,8 +90,8 @@ case class PiiCandidatesGenerator(child: Expression)
 }
 
 /** `ner_spans(text)` → array<struct<start,end,value,label,score>>: the
-  * deterministic offline NER provider — EMAIL 0.99 / PHONE_NUMBER 0.90 via
-  * the rules regexes (the tested no-model fallback, ner.py:61-81). */
+  * deterministic offline NER provider's spans ([[OfflineProvider.spans]],
+  * the tested no-model fallback, ner.py:61-81). */
 case class NerSpansExpr(child: Expression)
     extends UnaryExpression with CodegenFallback {
   private val schema = StructType(Seq(
@@ -102,17 +101,10 @@ case class NerSpansExpr(child: Expression)
     StructField("label", StringType, nullable = false),
     StructField("score", DoubleType, nullable = false)))
   override def dataType: DataType = ArrayType(schema, containsNull = false)
-  override def nullSafeEval(text: Any): Any = {
-    val t = text.toString
-    val rows =
-      Rules.findRegex(t, Rules.EMAIL_RE).map(s =>
-        InternalRow(s.start, s.end, UTF8String.fromString(s.text),
-          UTF8String.fromString(graft.core.PiiTypes.EMAIL), 0.99)) ++
-      Rules.findRegex(t, Rules.PHONE_US_RE).map(s =>
-        InternalRow(s.start, s.end, UTF8String.fromString(s.text),
-          UTF8String.fromString(graft.core.PiiTypes.PHONE_NUMBER), 0.90))
-    new GenericArrayData(rows.toArray[Any])
-  }
+  override def nullSafeEval(text: Any): Any =
+    new GenericArrayData(OfflineProvider.spans(text.toString).map(s =>
+      InternalRow(s.start, s.end, UTF8String.fromString(s.value),
+        UTF8String.fromString(s.label), s.score)).toArray[Any])
   override protected def withNewChildInternal(c: Expression): NerSpansExpr = copy(c)
   override def prettyName: String = "ner_spans"
 }

@@ -42,7 +42,13 @@ object FindingsStore {
     * row_number within the partition — the window is partitioned by the
     * sort partition, so no task ever holds more than its range slice.
     * Ties on column_ref get arbitrary ids, exactly like the global
-    * orderBy window it replaces. */
+    * orderBy window it replaces.
+    *
+    * Caveats: all rows of one dominant `column_ref` still land in one range
+    * partition (the range boundaries cannot split a key), so one task holds
+    * them all; and `localCheckpoint(true)` keeps the sorted rows only in
+    * executor block storage, so a lost block fails the export instead of
+    * being recomputed. */
   private[graft] def withSequentialId(findings: DataFrame): DataFrame = {
     val sorted = findings
       .repartitionByRange(col("column_ref"))

@@ -1,5 +1,9 @@
 package graft.detect
 
+import java.util.regex.Pattern
+
+import scala.util.Random
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.PiiTypes
@@ -80,5 +84,123 @@ class RulesSpec extends AnyFunSuite {
     // at most one candidate per (field, type)
     assert(got.size == got.map(c => (c.value, c.ruleLabel)).distinct.size ||
       got.groupBy(identity).forall(_._2.size == 1))
+  }
+
+  // ---- run-restricted scan vs. a plain whole-text find() loop ----
+
+  private val detectors: Seq[(String, Detector)] = Seq(
+    "EMAIL" -> Rules.Email, "PHONE" -> Rules.Phone, "CC" -> Rules.Cc, "SSN" -> Rules.Ssn,
+    "IPV4" -> Rules.Ipv4, "MAC" -> Rules.Mac, "DATE" -> Rules.Date,
+    "AADHAAR" -> Rules.Aadhaar, "PAN" -> Rules.Pan, "PERSON" -> Rules.Person)
+
+  private def wholeText(p: Pattern, text: String): Vector[(Int, Int, String)] = {
+    val m = p.matcher(text)
+    val out = Vector.newBuilder[(Int, Int, String)]
+    while (m.find()) out += ((m.start, m.end, m.group(0)))
+    out.result()
+  }
+
+  private def assertSame(name: String, d: Detector, text: String): Vector[(Int, Int, String)] = {
+    val want = wholeText(d.pattern, text)
+    val got = d.find(text).map(s => (s.start, s.end, s.text))
+    assert(got == want, s"$name on ${text.map(c => f"\\u${c.toInt}%04x").mkString}")
+    want
+  }
+
+  /** A shortest match of each detector: its run is exactly the minimum. */
+  private val shortest: Map[String, String] = Map(
+    "EMAIL" -> "a@b.co", "PHONE" -> "4155551212", "CC" -> "4111111111111",
+    "SSN" -> "123-45-6789", "IPV4" -> "1.2.3.4", "MAC" -> "aa:bb:cc:dd:ee:ff",
+    "DATE" -> "2024-05-17", "AADHAAR" -> "234567890123", "PAN" -> "ABCDE1234F",
+    "PERSON" -> "Ab Cd")
+
+  test("each detector's minimum length is its shortest match") {
+    for ((name, d) <- detectors) {
+      val m = shortest(name)
+      assert(m.length == d.minLen, name)
+      assert(d.pattern.matcher(m).matches(), name)
+    }
+  }
+
+  test("edge fixtures: run-restricted scan equals whole-text find()") {
+    for ((name, d) <- detectors) {
+      val m = shortest(name)
+      // offset 0, ending at the last char, both, and inside foreign chars
+      for (t <- Seq(m, s"$m#x", s"x#$m", s"#$m#", s"\u00e9#$m#\u00e9"))
+        assert(assertSame(name, d, t).map(_._3) == Vector(m), s"$name on $t")
+      // one char short of the minimum: no run qualifies, no match either way
+      for (t <- Seq(m.init, s"#${m.init}#", s"#${m.tail}#"))
+        assert(assertSame(name, d, t).isEmpty, s"$name on $t")
+      // two qualifying runs separated by one foreign char
+      assert(assertSame(name, d, s"$m#$m").map(_._3) == Vector(m, m), name)
+      assert(assertSame(name, d, s"$m\u00a0$m").map(_._3) == Vector(m, m), name)
+    }
+    // \b beside a non-ASCII letter outside the run (transparent bounds)
+    for ((name, d) <- detectors; t <- Seq("\u00e94111 1111 1111 1111", "4111 1111 1111 1111\u00e9",
+        "\u212aABCDE1234F", "\u017fJohn Doe", "\u0663123-45-6789", "(415) 555-1212\u2028x"))
+      assertSame(name, d, t)
+  }
+
+  /** Seeded fuzz text: runs of each detector's alphabet, well-formed and
+    * near-miss matches, ASCII separators, and non-ASCII chars that case
+    * folding, \b, \d or \s could treat specially. */
+  private object Fuzz {
+    private val digits = "0123456789"
+    private val upper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+    private val lower = "abcdefghijklmnopqrstuvwxyz"
+    private val space = " \t\n\u000b\f\r"
+    private val alphabets = Seq(
+      upper + lower + digits + "._%+@-", digits + "+().-" + space, digits + " -", digits + "-",
+      digits + ".", digits + "ABCDEFabcdef:-", digits + "/-", digits + " -",
+      upper + lower + digits, upper + lower + space)
+    private val foreign = Seq("\u00e9", "\u212a", "\u017f", "\u0663", "\u00a0", "\u2028",
+      " ", "#", ",", ";", "_", ":", "/", "\t", "\n", "x", "K", "s", "3")
+
+    private def pick(r: Random, s: String): String = s.charAt(r.nextInt(s.length)).toString
+    private def rep(r: Random, n: Int, s: String): String = Seq.fill(n)(pick(r, s)).mkString
+    private def sep(r: Random, s: String): String = if (r.nextBoolean()) "" else pick(r, s)
+
+    private def example(r: Random): String = r.nextInt(10) match {
+      case 0 => rep(r, 1 + r.nextInt(6), upper + lower + digits + "._%+-") + "@" +
+        rep(r, 1 + r.nextInt(6), lower + digits + ".-") + "." + rep(r, 1 + r.nextInt(4), lower + upper)
+      case 1 =>
+        val cc = if (r.nextBoolean()) "+" + rep(r, 1 + r.nextInt(3), digits) + sep(r, space + ".-") else ""
+        val area = if (r.nextBoolean()) "(" + rep(r, 3, digits) + ")" else rep(r, 3, digits)
+        cc + area + sep(r, space + ".-") + rep(r, 3, digits) + sep(r, space + ".-") + rep(r, 4, digits)
+      case 2 => (1 to 12 + r.nextInt(9)).map(_ => pick(r, digits) + sep(r, " -")).mkString
+      case 3 => rep(r, 3, digits) + "-" + rep(r, 2, digits) + "-" + rep(r, 3 + r.nextInt(2), digits)
+      case 4 => Seq.fill(if (r.nextInt(4) == 0) 3 else 4)(r.nextInt(300)).mkString(".")
+      case 5 => Seq.fill(5 + r.nextInt(2))(rep(r, 2, digits + "ABCDEFabcdefg")).mkString(pick(r, ":-"))
+      case 6 => r.nextInt(3) match {
+        case 0 => rep(r, 4, digits) + "-" + rep(r, 2, digits) + "-" + rep(r, 2, digits)
+        case 1 => rep(r, 2, digits) + "/" + rep(r, 2, digits) + "/" + rep(r, 4, digits)
+        case _ => rep(r, 2, digits) + "-" + rep(r, 2, digits) + "-" + rep(r, 3 + r.nextInt(2), digits)
+      }
+      case 7 => pick(r, "23456789") + rep(r, 3, digits) + sep(r, " -") + rep(r, 4, digits) +
+        sep(r, " -") + rep(r, 4, digits)
+      case 8 => rep(r, 5, upper + lower + "\u212a\u017f") + rep(r, 4, digits) + pick(r, upper + lower)
+      case _ => pick(r, upper) + rep(r, 1 + r.nextInt(5), lower) + pick(r, space + "\u00a0") +
+        pick(r, upper + "\u212a") + rep(r, 1 + r.nextInt(5), lower + "\u017f")
+    }
+
+    def text(r: Random): String = (1 to 1 + r.nextInt(8)).map { _ =>
+      r.nextInt(3) match {
+        case 0 => example(r)
+        case 1 => rep(r, 1 + r.nextInt(20), alphabets(r.nextInt(alphabets.size)))
+        case _ => foreign(r.nextInt(foreign.size))
+      }
+    }.mkString
+  }
+
+  test("seeded fuzz: run-restricted scan equals whole-text find() on every detector") {
+    val r = new Random(20261017L)
+    val matches = Array.fill(detectors.size)(0L)
+    for (_ <- 0 until 100000) {
+      val t = Fuzz.text(r)
+      for (((name, d), k) <- detectors.zipWithIndex) matches(k) += assertSame(name, d, t).size
+    }
+    // every detector must actually match on the fuzz corpus
+    for (((name, _), k) <- detectors.zipWithIndex)
+      assert(matches(k) >= 300, s"$name matched only ${matches(k)} times")
   }
 }
