@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at the SF dir given by
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop sink
   * (a bare count() would let Catalyst prune the expression work away).
@@ -15,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   * different physical strategies at different SFs, so the heaviest
   * expression trees (p06/p07/x16) still compiled inside the timed region
   * (~10s each cold vs ~2s warm). The warmup pass must run the SAME
-  * (query, dir) pair the timed pass runs. */
+  * (query, dir) pair the timed pass runs.
+  *
+  * The session (cores, data-size shuffle partitions, shuffle writer,
+  * codegen cache) comes from [[util.Sessions]], the same one Verify checks
+  * against the oracle. */
 object Bench {
 
   /** Single-threaded fixed-work spin probe (~0.1 s on an idle core): a
@@ -112,41 +114,7 @@ object Bench {
     val only = args.headOption.map(_.split(",").map(_.trim).toSet)
     val picked = only.fold(SparkEntry.all)(ns => SparkEntry.all.filter(q => ns(q.name)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Data-size-derived post-shuffle partitions — see util.BenchConf.
-    val shufflePartitions = util.BenchConf.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Shuffle WRITER strategy (r16 verdict #4 — the 32-core suite ran
-      // slower than the 8-core one): below this partition-count threshold
-      // Spark's bypass-merge writer opens ONE FILE PER REDUCE PARTITION
-      // per map task (numPartitions temp files + concat), so every tiny
-      // stage paid ~cores file-creates per task — thread dumps showed map
-      // tasks pinned in FileOutputStream.open0/FileChannel.map, a fixed
-      // ~0.3-0.6 s per task on this filesystem, and total executor time
-      // scaled with the core count (8x more CPU at local[32] than
-      // local[8] for identical queries). 1 = always use the sort-based
-      // writer: one data file + one index per map task at ANY partition
-      // count. Core (not SQL) conf — must be set before the context
-      // exists; child sessions (streaming replay) inherit it.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // The warmup pass only de-colds the timed pass if the compiled codegen
-      // classes SURVIVE until it: the cache defaults to 100 entries and the
-      // suite compiles several stages per query × 74 queries, so by the time
-      // the timed pass starts most warmup-era classes are evicted and the
-      // "warm" run re-pays Janino + fresh-class JIT on the clock (observed
-      // as multi-second spikes hopping between sub-second queries run to
-      // run). Static conf — must be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = util.Sessions.get(Some(sfDir))
     val spinStart = spinProbeMs()
     val spinParStart = spinAllCoresMs()
     val memStart = memBandwidthGbps()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,15 +9,8 @@ object Verify {
     // iteration on a subset; the driver always runs the full set.
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The benched layout (util.Sessions): the oracle checks what Bench times.
+    val spark = util.Sessions.get(Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // Run queries with a small concurrent pool: Spark's scheduler interleaves
     // the jobs, so small queries fill the cores a big query leaves idle.
@@ -27,12 +19,15 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
       pool.submit(new Runnable {
-        override def run(): Unit =
+        override def run(): Unit = {
+          // Bench's label: a Spark warning or slow job names its query.
+          spark.sparkContext.setJobDescription(s"query:$name")
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           } finally util.PersistScope.releaseAll() // thread-local: only this query's frames
+        }
       })
     }
     tasks.foreach(_.get())

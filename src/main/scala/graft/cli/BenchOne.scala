@@ -1,8 +1,13 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-/** Diagnostics: time (and optionally explain) a single SparkEntry query.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** Diagnostics: time (and optionally explain) a single SparkEntry query in
+  * the [[graft.util.Sessions]] layout Bench runs; streaming queries also
+  * print one `BATCH` line of phase timings per micro-batch.
   * Usage: runMain graft.cli.BenchOne <query> [sfDir] [explain] */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -15,27 +20,20 @@ object BenchOne {
     // Default (release) times query + full stage rebuild, which drowns a
     // query-level plan change for stage-heavy queries (kmeans/pq/int8).
     val keepStages = args.contains("keepstages")
-    // Same core-count contract as Bench (default 32, the box width): lets
-    // the 8-vs-32-core scaling gap be reproduced per query.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // match Bench: data-size-derived partitions (util.BenchConf)
-      .config("spark.sql.shuffle.partitions",
-        graft.util.BenchConf.shufflePartitions(dir, cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // match Bench: sort-based shuffle writer (one file per map task, not
-      // one per reduce partition) — see the Bench.scala comment
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // match Bench: codegen classes must survive across rounds (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.get(Some(dir))
+    // One line per micro-batch of any streaming query the run starts, with
+    // its durationMs phases. The s-queries replay in child sessions, which a
+    // session-level StreamingQueryListener does not see; their progress
+    // events also ride the context's listener bus, which every session shares.
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: StreamingQueryListener.QueryProgressEvent =>
+          val p = q.progress
+          val phases = p.durationMs.asScala.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
+          println(s"BATCH ${Option(p.name).getOrElse(p.id)} batch=${p.batchId} rows=${p.numInputRows} ${phases.mkString(" ")}")
+        case _ =>
+      }
+    })
     val fn = graft.SparkEntry.queries(name)
     if (doExplain) fn(spark, dir).explain("formatted")
     for (round <- 1 to 3) {

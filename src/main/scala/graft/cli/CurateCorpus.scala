@@ -60,15 +60,7 @@ object CurateCorpus {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/curated")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.get(Some(sfDir))
     val counts = run(spark, sfDir, outDir)
     graft.util.PersistScope.releaseAll()
     graft.util.SharedStages.releaseAll()

@@ -2,15 +2,13 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `explain("formatted")` output for the named queries to
   * `<outdir>/<query>_<suffix>.txt` — the before/after plan artifacts the
-  * optimization rounds commit (plans/rN/). Session config mirrors Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, AQE on) so the
-  * captured plans are the ones the bench actually runs; note AQE renders
-  * `isFinalPlan=false` at explain time — the plan shape (joins, exchanges,
-  * pushed filters) is still the planned one.
+  * optimization rounds commit (plans/rN/). The session is Bench's
+  * ([[graft.util.Sessions]]) so the captured plans are the ones the bench
+  * actually runs; note AQE renders `isFinalPlan=false` at explain time —
+  * the plan shape (joins, exchanges, pushed filters) is still the planned
+  * one.
   *
   * Usage: runMain graft.cli.DumpPlans <outdir> <suffix> <query> [query...]
   * (sfDir from SPARK_GRAFT_SF_DIR, default sf0.1.) */
@@ -20,19 +18,7 @@ object DumpPlans {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // match Bench: data-size-derived partitions (util.BenchConf)
-      .config("spark.sql.shuffle.partitions",
-        graft.util.BenchConf.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.get(Some(sfDir))
     Files.createDirectories(Paths.get(outDir))
     for (n <- names) {
       try {

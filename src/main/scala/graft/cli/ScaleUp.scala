@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-out generator: writes an N-fold id-offset union of the
@@ -18,14 +17,7 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sfbig"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.get(Some(src))
     new java.io.File(out).mkdirs()
 
     def scale(table: String, idCols: Seq[String]): Unit = {

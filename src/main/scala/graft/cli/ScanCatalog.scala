@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{Connectors, WriteBack}
@@ -22,14 +21,7 @@ object ScanCatalog {
   def main(args: Array[String]): Unit = {
     val dbGlob = args.headOption.getOrElse("demo_scan")
     val tableGlob = args.lift(1).getOrElse("*")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.get(hive = true) // the HMS connector needs Hive
     import spark.implicits._
 
     if (args.isEmpty) { // self-provision the demo target

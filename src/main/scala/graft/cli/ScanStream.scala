@@ -40,13 +40,9 @@ object ScanStream {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Sized by the input dir; the demo writes its input after the session
+    // exists, so it gets the rule's floor.
+    val spark = graft.util.Sessions.get(Some(args).collect { case Array(i, _, _*) => i })
     val (inDir, outDir) = args match {
       case Array(i, o, _*) => (i, o)
       case _ =>

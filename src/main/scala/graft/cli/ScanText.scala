@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ensemble.{Calibrator, PiiEnsemble, Weights}
@@ -14,13 +13,7 @@ object ScanText {
     val texts = if (args.nonEmpty) args.toSeq
       else Seq("Contact John Doe at john.doe@example.com or (415) 555-1212. " +
         "Card 4111 1111 1111 1111 and SSN 123-45-6789.")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.get()
     import spark.implicits._
     val out = texts.toDF("text")
       .select(col("text"), posexplode(pii_candidates(col("text"))).as(Seq("candidate_idx", "c")))

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.PiiTypes
@@ -31,13 +31,7 @@ object TrainEval {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(300)
     val seed = args.lift(1).map(_.toLong).getOrElse(1234L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.get()
     import spark.implicits._
 
     // 1. gen-synth (+ JSONL roundtrip like the CLI does)

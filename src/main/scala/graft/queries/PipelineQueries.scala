@@ -386,7 +386,7 @@ object PipelineQueries {
       // stage fresh through the identical batch chain. The previous form
       // re-ran the full corpus MinHash privately — at 10x that one pass
       // was ~6 s of x82's 10-26 s and the whole query's dominant
-      // recompute under cache pressure (DiagX82 decomposition).
+      // recompute under cache pressure (r14 stage split).
       val pb = graft.util.PersistScope.track(
         graft.ops.OpsQueries.stagedBands(planted).persist(lvl))
       val psh = graft.util.PersistScope.track(

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Opt-in LONG-RUNNING soak for the stateful streaming path (the SoakSpec
@@ -26,13 +25,7 @@ object RateSoak {
     val cohortSeconds = 120L
     val cohortUsers = 100L
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.get()
 
     val rate = spark.readStream.format("rate")
       .option("rowsPerSecond", rps).load()

@@ -3,19 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite via lazy companion. */
+/** Shared session: one per suite via lazy companion. The mains' config set
+  * over a fixed local[4] / 4-partition layout, so test layout does not
+  * follow the box. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = util.Sessions.build("local[4]", "4")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
