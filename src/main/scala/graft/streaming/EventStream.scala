@@ -859,16 +859,35 @@ object EventStream {
     * [[ExactlyOnceSink]] txn protocol: a replayed micro-batch (crash between
     * the sink write and the checkpoint commit, or a restart from an older
     * checkpoint) is skipped or overwritten in place — never appended twice.
-    * The write-back pattern for catalog tagging from a stream. */
-  def toParquetBatches(agg: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
-    agg.writeStream.outputMode("update")
+    * The write-back pattern for catalog tagging from a stream.
+    *
+    * Started without artifact isolation: each query runs on a clone of the
+    * caller's session, and with `spark.sql.artifact.isolation.enabled` on
+    * (Spark 4's default) every clone gets its own artifact UUID, so the
+    * executors build a fresh class loader per query and, since the codegen
+    * cache is keyed on (class loader, source), recompile the same write
+    * classes on every start. The clone copies the conf when the query is
+    * created, so the setting is needed on the caller's session only for
+    * `start()`; its previous value is restored afterwards. The query stays
+    * on the caller's session, visible to that session's listeners. */
+  def toParquetBatches(agg: DataFrame, outDir: String, checkpoint: String): StreamingQuery = {
+    val writer = agg.writeStream.outputMode("update")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         ExactlyOnceSink.writeBatch(batch, batchId, outDir)
         ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .start()
+    val conf = agg.sparkSession.conf
+    val key = "spark.sql.artifact.isolation.enabled"
+    // Serialized, so two starts on one session cannot restore each other's value.
+    synchronized {
+      val prev = conf.getAll.get(key)
+      conf.set(key, "false")
+      try writer.start()
+      finally prev.fold(conf.unset(key))(conf.set(key, _))
+    }
+  }
 
   /** Streaming Count-Min maintenance — the mergeable sketch as STREAMING
     * STATE: each micro-batch's token cells fold into a keyed running-count
@@ -1452,8 +1471,11 @@ object EventStream {
   *     files instead of doubling them.
   *  3. create the marker (atomic create-new): effects published.
   *
-  * Readers trust only marked batches ([[ExactlyOnceSink.readCommitted]]), so
-  * a crash in the 2→3 gap exposes nothing and the replay converges. Single
+  * Readers trust only marked batches ([[ExactlyOnceSink.readCommitted]],
+  * [[ExactlyOnceSink.committedCount]]), so a crash in the 2→3 gap exposes
+  * nothing and the replay converges. Cost per micro-batch: one Spark write
+  * job (step 2) plus two driver-side file creates; counting what has
+  * committed reads parquet footers on the driver and runs no job. Single
   * concurrent writer per checkpoint is the streaming engine's own guarantee;
   * the protocol tolerates the engine's at-least-once replays, not two
   * independent queries writing one outDir. */
@@ -1484,15 +1506,38 @@ object ExactlyOnceSink {
     true
   }
 
+  /** The directory of every committed batch, by ascending batch id: a
+    * marker whose directory is missing names nothing, and a directory
+    * without a marker is torn. Throws if no batch has committed yet. */
+  private def committedDirs(outDir: String): Seq[java.io.File] = {
+    val ids = Option(commitsDir(outDir).list()).getOrElse(Array.empty[String])
+      .flatMap(s => scala.util.Try(s.toLong).toOption).sorted
+    val dirs = ids.toIndexedSeq.map(id => new java.io.File(outDir, s"batch_id=$id")).filter(_.exists())
+    require(dirs.nonEmpty, s"no committed batches under $outDir")
+    dirs
+  }
+
   /** Every committed batch, with `batch_id` recovered as a partition column.
     * Uncommitted (torn) batch dirs are invisible. Throws if no batch has
     * committed yet — there is no schema to give an empty frame. */
-  def readCommitted(spark: SparkSession, outDir: String): DataFrame = {
-    val ids = Option(commitsDir(outDir).list()).getOrElse(Array.empty[String])
-      .flatMap(s => scala.util.Try(s.toLong).toOption).sorted
-    val dirs = ids.map(id => s"$outDir/batch_id=$id")
-      .filter(p => new java.io.File(p).exists())
-    require(dirs.nonEmpty, s"no committed batches under $outDir")
-    spark.read.option("basePath", outDir).parquet(dirs.toIndexedSeq: _*)
+  def readCommitted(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.option("basePath", outDir).parquet(committedDirs(outDir).map(_.getPath): _*)
+
+  /** `readCommitted(spark, outDir).count()` without a Spark job: the sum of
+    * the row counts in the parquet footers of the committed batches' data
+    * files, read on the driver. Data files are the ones a Spark read lists
+    * (`_SUCCESS`, `.crc` and other `_`/`.` names are not data). Throws as
+    * readCommitted does if no batch has committed. */
+  def committedCount(spark: SparkSession, outDir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    committedDirs(outDir).iterator
+      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File]))
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try reader.getRecordCount finally reader.close()
+      }.sum
   }
 }

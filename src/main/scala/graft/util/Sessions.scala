@@ -57,6 +57,14 @@ object Sessions {
       // (observed as multi-second spikes hopping between sub-second queries
       // run to run). Static conf — must be set before the session exists.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // Spark 4 gives every session clone its own artifact UUID, and every
+      // streaming query runs on a clone: with isolation on, executors build
+      // a fresh class loader per query, and the codegen cache (keyed on
+      // class loader + source) recompiles the same classes for each of the
+      // suite's streaming replays. Nothing here adds session artifacts, so
+      // one shared loader loses nothing. Child sessions and their stream
+      // clones inherit it.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     val spark = (if (hive) b.enableHiveSupport() else b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

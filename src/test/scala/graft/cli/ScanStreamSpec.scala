@@ -1,6 +1,8 @@
 package graft.cli
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.SparkSpec
 import graft.streaming.ExactlyOnceSink
@@ -33,5 +35,55 @@ class ScanStreamSpec extends SparkSpec {
       .write.mode("append").parquet(s"$tmp/in")
     val n3 = ScanStream.run(spark, s"$tmp/in", s"$tmp/out")
     assert(n3 > n1, s"new drop must add findings: $n3 vs $n1")
+  }
+
+  test("a run over a new drop compiles nothing, keeps the caller's conf and its listeners") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val child = spark.newSession()
+    child.conf.set(key, "true")
+    val tmp = java.nio.file.Files.createTempDirectory("scanstream_loader").toString
+    val inputs = child.range(40).select(col("id").as("doc_id"),
+      concat(lit("card 4111 1111 1111 1111, mail user"), col("id"), lit("@example.com")).as("text"))
+    inputs.write.parquet(s"$tmp/in")
+    val n1 = ScanStream.run(child, s"$tmp/in", s"$tmp/out")
+    assert(child.conf.get(key) == "true")
+
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress.numInputRows)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    child.streams.addListener(listener)
+    try {
+      inputs.limit(7).withColumn("doc_id", col("doc_id") + 1000000)
+        .write.mode("append").parquet(s"$tmp/in")
+      // Each streaming query runs on a session clone; with artifact
+      // isolation on, every clone brought a new executor class loader and
+      // the codegen cache missed on every class of the micro-batch.
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val n2 = ScanStream.run(child, s"$tmp/in", s"$tmp/out")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles0)
+      assert(n2 > n1, s"new drop must add findings: $n2 vs $n1")
+      assert(child.conf.get(key) == "true")
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (!progress.contains(7L) && System.nanoTime < deadline) Thread.sleep(20)
+      assert(progress.contains(7L), s"child's listener saw no 7-row batch: $progress")
+    } finally child.streams.removeListener(listener)
+
+    // The conf survives a failing run: before the query starts (no input
+    // dir) and inside start() (a file where the checkpoint dir must go).
+    intercept[Exception](ScanStream.run(child, s"$tmp/missing", s"$tmp/out2"))
+    assert(child.conf.get(key) == "true")
+    val blocked = new java.io.File(s"$tmp/out3/_checkpoint")
+    blocked.getParentFile.mkdirs()
+    assert(blocked.createNewFile())
+    intercept[Exception](ScanStream.run(child, s"$tmp/in", s"$tmp/out3"))
+    assert(child.conf.get(key) == "true")
+    // an unset key is unset again afterwards, not pinned to a value
+    child.conf.unset(key)
+    ScanStream.run(child, s"$tmp/in", s"$tmp/out")
+    assert(!child.conf.getAll.contains(key))
   }
 }

@@ -74,5 +74,8 @@ class SessionsSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    // child sessions (every streaming replay) inherit it
+    assert(graft.SparkSpec.spark.newSession().conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 }
