@@ -1,7 +1,11 @@
 package graft.cli
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.pii_candidates
 import graft.streaming.{EventStream, ExactlyOnceSink}
@@ -16,13 +20,16 @@ import graft.streaming.{EventStream, ExactlyOnceSink}
   * between runs are picked up from the checkpoint (same contract as any
   * Structured Streaming file source).
   *
-  * Fixed Spark cost of one run over one new drop: one schema-probe job
-  * (`spark.read.parquet(inDir).schema`), one write job for the micro-batch,
-  * and the returned count, which is read from the committed batches' parquet
-  * footers on the driver ([[ExactlyOnceSink.committedCount]]) with no job.
-  * The query starts without artifact isolation
-  * ([[EventStream.toParquetBatches]]), so its write classes compile once per
-  * JVM rather than once per run.
+  * Fixed cost of one run over one new drop: one write job for the
+  * micro-batch and nothing else on the cluster. The input schema is
+  * inferred once, by Spark's own inference on the first run over a
+  * checkpoint, and pinned beside it (`inputSchema`), so later runs start
+  * no probe job. The returned count is read from the committed batches'
+  * parquet footers on the driver ([[ExactlyOnceSink.committedCount]]) with
+  * no job. The query starts without artifact isolation and with
+  * [[graft.util.LocalFs]] registered ([[EventStream.toParquetBatches]]), so
+  * its write classes compile once per JVM and its checkpoint, data and
+  * marker files are written without starting a process.
   *
   *   runMain graft.cli.ScanStream <inDir> <outDir> [idCol textCol]
   *
@@ -35,16 +42,39 @@ object ScanStream {
     * Returns the total committed finding count. */
   def run(spark: SparkSession, inDir: String, outDir: String,
           idCol: String = "doc_id", textCol: String = "text"): Long = {
-    val schema = spark.read.parquet(inDir).schema
-    val findings = spark.readStream.schema(schema).parquet(inDir)
+    val checkpoint = s"$outDir/_checkpoint"
+    val findings = spark.readStream.schema(inputSchema(spark, inDir, checkpoint)).parquet(inDir)
       .select(col(idCol).cast("long").as("doc_id"),
         posexplode(pii_candidates(col(textCol).cast("string"))).as(Seq("candidate_idx", "c")))
       .select(col("doc_id"), col("candidate_idx"),
         col("c.value").as("value"), col("c.rule_label").as("rule_label"),
         col("c.rule_confidence").as("rule_confidence"))
-    val q = EventStream.toParquetBatches(findings, outDir, s"$outDir/_checkpoint")
+    val q = EventStream.toParquetBatches(findings, outDir, checkpoint)
     EventStream.awaitDone(q)
     ExactlyOnceSink.committedCount(spark, outDir)
+  }
+
+  /** The input schema, fixed per checkpoint as for any Structured Streaming
+    * file source: read from `<checkpoint>/input_schema.json` when present,
+    * else inferred by Spark (`spark.read.parquet(inDir).schema`, one job)
+    * and written there atomically (temp file, then rename). A checkpoint
+    * from before pinning has no file, so its next run infers once and pins. */
+  private def inputSchema(spark: SparkSession, inDir: String, checkpoint: String): StructType = {
+    val pinned = new Path(checkpoint, "input_schema.json")
+    val fs = pinned.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val in = fs.open(pinned)
+      try DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType]
+      finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException =>
+        val schema = spark.read.parquet(inDir).schema
+        val tmp = new Path(checkpoint, s".input_schema.json.${java.util.UUID.randomUUID}.tmp")
+        val out = fs.create(tmp, false)
+        try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+        if (!fs.rename(tmp, pinned)) throw new java.io.IOException(s"could not rename $tmp to $pinned")
+        schema
+    }
   }
 
   def main(args: Array[String]): Unit = {

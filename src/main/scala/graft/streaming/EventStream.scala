@@ -878,6 +878,10 @@ object EventStream {
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
+    // The caller's session may not come from Sessions (a benchmark or an
+    // embedding application builds its own), and the query's checkpoint
+    // logs are written through the context's Hadoop conf.
+    graft.util.LocalFs.register(agg.sparkSession.sparkContext)
     val conf = agg.sparkSession.conf
     val key = "spark.sql.artifact.isolation.enabled"
     // Serialized, so two starts on one session cannot restore each other's value.
@@ -1473,26 +1477,30 @@ object EventStream {
   *
   * Readers trust only marked batches ([[ExactlyOnceSink.readCommitted]],
   * [[ExactlyOnceSink.committedCount]]), so a crash in the 2→3 gap exposes
-  * nothing and the replay converges. Cost per micro-batch: one Spark write
-  * job (step 2) plus two driver-side file creates; counting what has
-  * committed reads parquet footers on the driver and runs no job. Single
-  * concurrent writer per checkpoint is the streaming engine's own guarantee;
-  * the protocol tolerates the engine's at-least-once replays, not two
-  * independent queries writing one outDir. */
+  * nothing and the replay converges. Markers, listings and existence checks
+  * go through the Hadoop `FileSystem` of `outDir`'s path, so the markers
+  * land beside the data on any scheme. Cost per micro-batch: one Spark
+  * write job (step 2) plus a marker create on the driver, and no process
+  * start on `file:` once [[graft.util.LocalFs]] is registered (the query
+  * start registers it); counting what has committed reads parquet footers
+  * on the driver and runs no job. Single concurrent writer per checkpoint
+  * is the streaming engine's own guarantee; the protocol tolerates the
+  * engine's at-least-once replays, not two independent queries writing one
+  * outDir. */
 object ExactlyOnceSink {
+  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-  private def commitsDir(outDir: String) = new java.io.File(outDir, "_commits")
-  private def marker(outDir: String, batchId: Long) =
-    new java.io.File(commitsDir(outDir), batchId.toString)
-
-  def isCommitted(outDir: String, batchId: Long): Boolean =
-    marker(outDir, batchId).exists()
+  private def commitsDir(outDir: String) = new Path(outDir, "_commits")
+  private def fileSystem(spark: SparkSession, outDir: String): FileSystem =
+    new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Apply one batch's effects exactly once. Returns true if this call
     * wrote the batch, false if it was already committed (replay). */
   def writeBatch(batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                  batchId: Long, outDir: String): Boolean = {
-    if (isCommitted(outDir, batchId)) {
+    val fs = fileSystem(batch.sparkSession, outDir)
+    val marker = new Path(commitsDir(outDir), batchId.toString)
+    if (fs.exists(marker)) {
       // Skip the EFFECT, not the computation: a stateful pipeline must still
       // execute the replayed batch so its state stores rebuild and commit
       // (Spark 4 validates the commit count and fails the query otherwise).
@@ -1500,19 +1508,21 @@ object ExactlyOnceSink {
       return false
     }
     batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    commitsDir(outDir).mkdirs()
-    try java.nio.file.Files.createFile(marker(outDir, batchId).toPath)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    try fs.create(marker, false).close()
+    catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
     true
   }
 
   /** The directory of every committed batch, by ascending batch id: a
     * marker whose directory is missing names nothing, and a directory
     * without a marker is torn. Throws if no batch has committed yet. */
-  private def committedDirs(outDir: String): Seq[java.io.File] = {
-    val ids = Option(commitsDir(outDir).list()).getOrElse(Array.empty[String])
-      .flatMap(s => scala.util.Try(s.toLong).toOption).sorted
-    val dirs = ids.toIndexedSeq.map(id => new java.io.File(outDir, s"batch_id=$id")).filter(_.exists())
+  private def committedDirs(fs: FileSystem, outDir: String): Seq[Path] = {
+    def names(dir: Path): Set[String] =
+      try fs.listStatus(dir).iterator.map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty }
+    val present = names(new Path(outDir))
+    val dirs = names(commitsDir(outDir)).toSeq.flatMap(_.toLongOption).sorted
+      .map(id => s"batch_id=$id").filter(present).map(new Path(outDir, _))
     require(dirs.nonEmpty, s"no committed batches under $outDir")
     dirs
   }
@@ -1521,23 +1531,26 @@ object ExactlyOnceSink {
     * Uncommitted (torn) batch dirs are invisible. Throws if no batch has
     * committed yet — there is no schema to give an empty frame. */
   def readCommitted(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", outDir).parquet(committedDirs(outDir).map(_.getPath): _*)
+    spark.read.option("basePath", outDir)
+      .parquet(committedDirs(fileSystem(spark, outDir), outDir).map(_.toString): _*)
 
   /** `readCommitted(spark, outDir).count()` without a Spark job: the sum of
     * the row counts in the parquet footers of the committed batches' data
     * files, read on the driver. Data files are the ones a Spark read lists
-    * (`_SUCCESS`, `.crc` and other `_`/`.` names are not data). Throws as
+    * (`_SUCCESS`, `.crc` and other `_`/`.` names are not data). The footers
+    * are read with the context's Hadoop conf; parquet's default options
+    * would build and parse a fresh one for every file. Throws as
     * readCommitted does if no batch has committed. */
   def committedCount(spark: SparkSession, outDir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    committedDirs(outDir).iterator
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File]))
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getRecordCount finally reader.close()
-      }.sum
+    val fs = fileSystem(spark, outDir)
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    def isData(f: FileStatus) = f.isFile && !f.getPath.getName.startsWith("_") &&
+      !f.getPath.getName.startsWith(".")
+    committedDirs(fs, outDir).iterator.flatMap(fs.listStatus(_)).filter(isData).map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), options)
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 }

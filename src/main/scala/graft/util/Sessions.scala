@@ -67,6 +67,7 @@ object Sessions {
       .config("spark.sql.artifact.isolation.enabled", "false")
     val spark = (if (hive) b.enableHiveSupport() else b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalFs.register(spark.sparkContext)
     spark
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,4 +13,30 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Job starts `body` submits; events drain in order, so once a marker
+    * job's end has been seen every earlier job start has been too. */
+  protected def jobsStartedBy[T](body: => T): (T, Int) = {
+    val starts = new java.util.concurrent.atomic.AtomicInteger()
+    val markerEnds = new java.util.concurrent.LinkedBlockingQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = markerEnds.add(e.jobId)
+    }
+    def marker(): Int = {
+      markerEnds.clear()
+      spark.sparkContext.parallelize(Seq(1), 1).count() // exactly one job
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (markerEnds.isEmpty && System.nanoTime < deadline) Thread.sleep(10)
+      assert(!markerEnds.isEmpty, "listener bus did not deliver the marker job")
+      starts.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val before = marker()
+      val out = body
+      val after = marker()
+      (out, after - before - 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

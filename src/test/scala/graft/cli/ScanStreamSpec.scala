@@ -1,11 +1,16 @@
 package graft.cli
 
+import java.io.File
+import java.nio.file.Files
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.types.{DataType, MetadataBuilder}
 
 import graft.SparkSpec
 import graft.streaming.ExactlyOnceSink
+import graft.util.ProcessStarts
 
 /** The incremental scan CLI core: exactly-once findings equal the batch
   * detection, and a second run over the same checkpoint is a no-op. */
@@ -85,5 +90,53 @@ class ScanStreamSpec extends SparkSpec {
     child.conf.unset(key)
     ScanStream.run(child, s"$tmp/in", s"$tmp/out")
     assert(!child.conf.getAll.contains(key))
+  }
+
+  /** A 40-doc input dir and an `append(k)` that drops 7 more docs. */
+  private def stream(name: String): (String, Int => Unit) = {
+    val tmp = Files.createTempDirectory(name).toString
+    val tagged = new MetadataBuilder().putString("pii", "free text").build()
+    val inputs = spark.range(40).select(col("id").as("doc_id"),
+      concat(lit("card 4111 1111 1111 1111, mail user"), col("id"), lit("@example.com"))
+        .as("text", tagged))
+    inputs.write.parquet(s"$tmp/in")
+    (tmp, k => inputs.limit(7).withColumn("doc_id", col("doc_id") + 1000L * k)
+      .write.mode("append").parquet(s"$tmp/in"))
+  }
+
+  test("the input schema is inferred once per checkpoint and pinned; later runs start one job") {
+    val (tmp, append) = stream("scanstream_pin")
+    val pinned = new File(s"$tmp/out/_checkpoint/input_schema.json")
+    val (_, firstJobs) = jobsStartedBy(ScanStream.run(spark, s"$tmp/in", s"$tmp/out"))
+    assert(firstJobs == 2, s"first run: schema probe + write, got $firstJobs jobs")
+    val probe = spark.read.parquet(s"$tmp/in").schema
+    assert(probe("text").metadata.contains("pii"), probe)
+    assert(DataType.fromJson(Files.readString(pinned.toPath)) == probe)
+
+    append(1)
+    val (n2, jobs) = jobsStartedBy(ScanStream.run(spark, s"$tmp/in", s"$tmp/out"))
+    assert(jobs == 1, s"second run started $jobs jobs")
+    assert(n2 == ExactlyOnceSink.readCommitted(spark, s"$tmp/out").count())
+
+    // A checkpoint written before pinning has no schema file: probe once, then pin.
+    assert(pinned.delete())
+    append(2)
+    assert(jobsStartedBy(ScanStream.run(spark, s"$tmp/in", s"$tmp/out"))._2 == 2)
+    assert(DataType.fromJson(Files.readString(pinned.toPath)) == probe)
+    append(3)
+    assert(jobsStartedBy(ScanStream.run(spark, s"$tmp/in", s"$tmp/out"))._2 == 1)
+    assert(new File(s"$tmp/out/_checkpoint").list().forall(n => !n.contains(".tmp")))
+  }
+
+  test("a run over a new drop starts no operating-system process") {
+    val (tmp, append) = stream("scanstream_forks")
+    val n1 = ScanStream.run(spark, s"$tmp/in", s"$tmp/out")
+    append(1)
+    val (n2, starts) = ProcessStarts.during(ScanStream.run(spark, s"$tmp/in", s"$tmp/out"))
+    assert(n2 > n1)
+    assert(starts.isEmpty, s"${starts.size} process starts:\n${ProcessStarts.describe(starts)}")
+    // the probe sees a process the JVM does start
+    val (_, control) = ProcessStarts.during(new ProcessBuilder("true").start().waitFor())
+    assert(control.size == 1, ProcessStarts.describe(control))
   }
 }

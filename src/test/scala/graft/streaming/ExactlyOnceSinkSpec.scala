@@ -1,41 +1,24 @@
 package graft.streaming
 
 import java.io.File
+import java.net.URI
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The footer count of committed batches: equal to a Spark count of
-  * `readCommitted` over the same directory, and free of Spark jobs. */
-class ExactlyOnceSinkSpec extends SparkSpec {
+/** The local filesystem served under a scheme of its own, so a sink on it
+  * must resolve every path through Hadoop to land where its data lands. */
+class SchemeFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${SchemeFs.Scheme}:///")
+}
+object SchemeFs { val Scheme = "eotest" }
 
-  /** Job starts `body` submits; events drain in order, so once a marker
-    * job's end has been seen every earlier job start has been too. */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val starts = new java.util.concurrent.atomic.AtomicInteger()
-    val markerEnds = new java.util.concurrent.LinkedBlockingQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = starts.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = markerEnds.add(e.jobId)
-    }
-    def marker(): Int = {
-      markerEnds.clear()
-      spark.sparkContext.parallelize(Seq(1), 1).count() // exactly one job
-      val deadline = System.nanoTime + 30L * 1000000000L
-      while (markerEnds.isEmpty && System.nanoTime < deadline) Thread.sleep(10)
-      assert(!markerEnds.isEmpty, "listener bus did not deliver the marker job")
-      starts.get
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val before = marker()
-      val out = body
-      val after = marker()
-      (out, after - before - 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+/** The footer count of committed batches: equal to a Spark count of
+  * `readCommitted` over the same directory, and free of Spark jobs. The
+  * sink's files go through the Hadoop FileSystem of the output path. */
+class ExactlyOnceSinkSpec extends SparkSpec {
 
   test("committedCount equals readCommitted's count, with no Spark job") {
     val out = java.nio.file.Files.createTempDirectory("eo_count").toString
@@ -64,5 +47,27 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     val read = intercept[IllegalArgumentException](ExactlyOnceSink.readCommitted(spark, out))
     val count = intercept[IllegalArgumentException](ExactlyOnceSink.committedCount(spark, out))
     assert(count.getMessage == read.getMessage)
+  }
+
+  test("markers, listings and counts follow outDir's Hadoop filesystem") {
+    spark.sparkContext.hadoopConfiguration.set(s"fs.${SchemeFs.Scheme}.impl", classOf[SchemeFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("eo_scheme").toString
+    val out = s"${SchemeFs.Scheme}://$local"
+    val rows = spark.range(0, 90).select(col("id").as("doc_id"), (col("id") % 4).as("v"))
+    assert(ExactlyOnceSink.writeBatch(rows.filter(col("v") === 1), 0L, out))
+    assert(ExactlyOnceSink.writeBatch(rows.filter(col("v") =!= 1).repartition(2), 1L, out))
+    // a replay of a committed batch writes nothing
+    assert(!ExactlyOnceSink.writeBatch(rows, 0L, out))
+    // a torn batch stays invisible
+    rows.write.parquet(s"$out/batch_id=2")
+
+    assert(new File(s"$local/_commits/0").isFile && new File(s"$local/_commits/1").isFile)
+    assert(!new File(s"$local/_commits/2").exists)
+    // java.io.File would have read the URI as a relative path in the cwd
+    assert(!new File(s"${SchemeFs.Scheme}:").exists)
+    val read = ExactlyOnceSink.readCommitted(spark, out)
+    assert(read.count() == 90)
+    assert(read.select("batch_id").distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
+    assert(ExactlyOnceSink.committedCount(spark, out) == 90)
   }
 }
