@@ -38,17 +38,32 @@ object Rules {
    * and its minimum length must not exceed the pattern's shortest match. An
    * ASCII table is enough only while no pattern uses UNICODE_CHARACTER_CLASS
    * or UNICODE_CASE (\d, \s, the bracket classes and PAN's ASCII-only
-   * CASE_INSENSITIVE then never consume a char >= 128). */
-  private[detect] val Email = new Detector(EMAIL_RE, Letters ++ Digits ++ "._%+@-", minLen = 6)
-  private[detect] val Phone = new Detector(PHONE_US_RE, Digits ++ "+().-" ++ Space, minLen = 10)
-  private[detect] val Cc = new Detector(CC_RE, Digits ++ " -", minLen = 13)
-  private[detect] val Ssn = new Detector(SSN_RE, Digits :+ '-', minLen = 11)
-  private[detect] val Ipv4 = new Detector(IPV4_RE, Digits :+ '.', minLen = 7)
-  private[detect] val Mac = new Detector(MAC_RE, Hex ++ ":-", minLen = 17)
-  private[detect] val Date = new Detector(DATE_RE, Digits ++ "/-", minLen = 10)
-  private[detect] val Aadhaar = new Detector(AADHAAR_RE, Digits ++ " -", minLen = 12)
-  private[detect] val Pan = new Detector(PAN_RE, Letters ++ Digits, minLen = 10)
-  private[detect] val Person = new Detector(PERSON_RE, Letters ++ Space, minLen = 5)
+   * CASE_INSENSITIVE then never consume a char >= 128).
+   *
+   * The required class and count are what every match must hold, read off
+   * the pattern: EMAIL's one `@`; PHONE's 3+3+4 `\d`; CC's 13 repetitions
+   * of `\d`; SSN's 3+2+4 and DATE's 4+2+2 (or 2+2+4) digits; IPV4's three
+   * octet `\.`; MAC's five `[:-]`; AADHAAR's 4+4+4 digits; PAN's `[0-9]{4}`
+   * (digits, because CASE_INSENSITIVE lets its letters be either case);
+   * PERSON's two case-sensitive `[A-Z]`. */
+  private[detect] val Email =
+    new Detector(EMAIL_RE, Letters ++ Digits ++ "._%+@-", minLen = 6, required = "@", minRequired = 1)
+  private[detect] val Phone =
+    new Detector(PHONE_US_RE, Digits ++ "+().-" ++ Space, minLen = 10, required = Digits, minRequired = 10)
+  private[detect] val Cc = new Detector(CC_RE, Digits ++ " -", minLen = 13, required = Digits, minRequired = 13)
+  private[detect] val Ssn = new Detector(SSN_RE, Digits :+ '-', minLen = 11, required = Digits, minRequired = 9)
+  private[detect] val Ipv4 = new Detector(IPV4_RE, Digits :+ '.', minLen = 7, required = ".", minRequired = 3)
+  private[detect] val Mac = new Detector(MAC_RE, Hex ++ ":-", minLen = 17, required = ":-", minRequired = 5)
+  private[detect] val Date = new Detector(DATE_RE, Digits ++ "/-", minLen = 10, required = Digits, minRequired = 8)
+  private[detect] val Aadhaar =
+    new Detector(AADHAAR_RE, Digits ++ " -", minLen = 12, required = Digits, minRequired = 12)
+  private[detect] val Pan = new Detector(PAN_RE, Letters ++ Digits, minLen = 10, required = Digits, minRequired = 4)
+  private[detect] val Person =
+    new Detector(PERSON_RE, Letters ++ Space, minLen = 5, required = 'A' to 'Z', minRequired = 2)
+
+  /** Checksum flags shared by every validated candidate. */
+  private[detect] val CcValidated: Map[String, Boolean] = Map(PiiTypes.CREDIT_CARD -> true)
+  private[detect] val AadhaarValidated: Map[String, Boolean] = Map(PiiTypes.AADHAAR -> true)
 
   /** The candidate pipeline: detectors run in fixed order, each appending its
     * matches (rules.py:106-166 — "Order matters a bit").
@@ -65,8 +80,7 @@ object Rules {
         cands += Candidate(s.start, s.end, s.text, PiiTypes.PHONE_NUMBER, 0.85)
     if (enabled(PiiTypes.CREDIT_CARD))
       for (s <- Cc.find(text); if Checksums.luhn(s.text))
-        cands += Candidate(s.start, s.end, s.text, PiiTypes.CREDIT_CARD, 0.9,
-          Map(PiiTypes.CREDIT_CARD -> true))
+        cands += Candidate(s.start, s.end, s.text, PiiTypes.CREDIT_CARD, 0.9, CcValidated)
     if (enabled(PiiTypes.SSN))
       for (s <- Ssn.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.SSN, 0.9)
@@ -78,8 +92,7 @@ object Rules {
         cands += Candidate(s.start, s.end, s.text, PiiTypes.MAC_ADDRESS, 0.9)
     if (enabled(PiiTypes.AADHAAR))
       for (s <- Aadhaar.find(text); if Checksums.verhoeff(s.text))
-        cands += Candidate(s.start, s.end, s.text, PiiTypes.AADHAAR, 0.9,
-          Map(PiiTypes.AADHAAR -> true))
+        cands += Candidate(s.start, s.end, s.text, PiiTypes.AADHAAR, 0.9, AadhaarValidated)
     if (enabled(PiiTypes.PAN))
       for (s <- Pan.find(text))
         cands += Candidate(s.start, s.end, s.text, PiiTypes.PAN, 0.9)
@@ -133,17 +146,26 @@ object Rules {
 }
 
 /** One regex detector scanned only inside maximal runs of its alphabet that
-  * are at least `minLen` chars long. Every match of `pattern` consists of
-  * alphabet chars and is at least `minLen` long, so it lies inside such a
-  * run; transparent bounds let `\b` see the chars around the run. The
-  * engine therefore makes the same attempts at every position it visits,
-  * and the matches equal a whole-text `find()` loop's in spans, order and
-  * text. */
-private[detect] final class Detector(val pattern: Pattern, alphabet: Iterable[Char], val minLen: Int) {
-  private val table = new Array[Boolean](128)
-  alphabet.foreach(c => table(c) = true)
+  * are at least `minLen` chars long and hold at least `minRequired` chars of
+  * its `required` class (a subset of the alphabet). Every match of `pattern`
+  * consists of alphabet chars, is at least `minLen` long and holds at least
+  * `minRequired` required chars, so it lies inside such a run: a match is a
+  * substring of its run, so the run holds at least as many required chars
+  * as the match, and a run with fewer cannot contain one. Transparent bounds
+  * let `\b` see the chars around the run. The engine therefore makes the
+  * same attempts at every position it visits, and the matches equal a
+  * whole-text `find()` loop's in spans, order and text. */
+private[detect] final class Detector(val pattern: Pattern, val alphabet: Iterable[Char], val minLen: Int,
+    val required: Iterable[Char], val minRequired: Int) {
+  /** Per ASCII char: 0 outside the alphabet, 1 in it, 2 also required. */
+  private val table = new Array[Byte](128)
+  alphabet.foreach(c => table(c) = 1)
+  required.foreach { c =>
+    require(table(c) != 0, s"required char '$c' is not in the alphabet")
+    table(c) = 2
+  }
 
-  private def inAlphabet(c: Char): Boolean = c < 128 && table(c)
+  private def kind(c: Char): Int = if (c < 128) table(c) else 0
 
   /** All matches of `pattern` in `text` as spans (rules.py:89-90). */
   def find(text: String): Vector[Span] = {
@@ -152,18 +174,21 @@ private[detect] final class Detector(val pattern: Pattern, alphabet: Iterable[Ch
     val n = text.length
     var i = 0
     while (i < n) {
-      if (!inAlphabet(text.charAt(i))) i += 1
-      else {
-        var j = i + 1
-        while (j < n && inAlphabet(text.charAt(j))) j += 1
-        if (j - i >= minLen) {
-          if (m == null)
-            m = pattern.matcher(text).useTransparentBounds(true).useAnchoringBounds(false)
-          m.region(i, j)
-          while (m.find()) out += Span(m.start, m.end, m.group(0))
-        }
-        i = j + 1 // text(j) ends the run
+      var j = i
+      var count = 0
+      var k = kind(text.charAt(i))
+      while (k != 0) {
+        count += k - 1
+        j += 1
+        k = if (j < n) kind(text.charAt(j)) else 0
       }
+      if (j - i >= minLen && count >= minRequired) {
+        if (m == null)
+          m = pattern.matcher(text).useTransparentBounds(true).useAnchoringBounds(false)
+        m.region(i, j)
+        while (m.find()) out += Span(m.start, m.end, m.group(0))
+      }
+      i = j + 1 // text(j) ends the run
     }
     out.result()
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,16 +22,33 @@ object CandidateSchema {
     StructField("validations", MapType(StringType, BooleanType), nullable = false)))
   val arrayType: ArrayType = ArrayType(struct, containsNull = false)
 
+  private val labels: Map[String, UTF8String] =
+    graft.core.PiiTypes.ALL.map(l => l -> UTF8String.fromString(l)).toMap
+
+  private def validationsData(m: Map[String, Boolean]): MapData = {
+    val (ks, vs) = m.toSeq.unzip
+    new ArrayBasedMapData(
+      new GenericArrayData(ks.map(UTF8String.fromString).toArray[Any]),
+      new GenericArrayData(vs.toArray[Any]))
+  }
+
+  /** The three validations maps the rules emit, built once and shared:
+    * nothing writes into a row's map data. */
+  private val noValidations = validationsData(Map.empty)
+  private val ccValidated = validationsData(Rules.CcValidated)
+  private val aadhaarValidated = validationsData(Rules.AadhaarValidated)
+
   private[detect] def toRow(c: graft.core.Candidate): InternalRow = {
-    val (ks, vs) = c.validations.toSeq.unzip
+    val v = c.validations
     InternalRow(
       c.start, c.end,
       UTF8String.fromString(c.value),
-      UTF8String.fromString(c.ruleLabel),
+      labels.getOrElse(c.ruleLabel, UTF8String.fromString(c.ruleLabel)),
       c.ruleConfidence,
-      new ArrayBasedMapData(
-        new GenericArrayData(ks.map(UTF8String.fromString).toArray[Any]),
-        new GenericArrayData(vs.toArray[Any])))
+      if (v.isEmpty) noValidations
+      else if (v eq Rules.CcValidated) ccValidated
+      else if (v eq Rules.AadhaarValidated) aadhaarValidated
+      else validationsData(v))
   }
 }
 
@@ -43,7 +60,9 @@ object CandidateSchema {
   *
   * A custom expression (not a UDF) so the array feeds `posexplode`/`transform`
   * without Row↔object serialization. Each detector's regex runs only inside
-  * runs of its own alphabet ([[Detector.find]]).
+  * runs of its own alphabet that are long enough and hold the required
+  * chars every match contains, e.g. an `@` for EMAIL or 10 digits for PHONE
+  * ([[Detector.find]]).
   */
 case class PiiCandidatesExpr(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -71,7 +90,8 @@ case class PiiCandidatesExpr(child: Expression)
   *
   * Inner-generate semantics (zero-candidate docs emit nothing) — the
   * behavior every explode call site restores anyway. Each detector's regex
-  * runs only inside runs of its own alphabet ([[Detector.find]]). */
+  * runs only inside runs of its own alphabet that are long enough and hold
+  * the required chars every match contains ([[Detector.find]]). */
 case class PiiCandidatesGenerator(child: Expression)
     extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.Generator

@@ -6,7 +6,11 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.PiiTypes
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{BooleanType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.{Candidate, PiiTypes}
 
 /** Parity with the reference rules layer: fixtures and expected outputs from
   * tests/test_rules.py:5-22 and tests/test_rules_advanced.py:13-69, verified
@@ -122,6 +126,24 @@ class RulesSpec extends AnyFunSuite {
     }
   }
 
+  test("each shortest match holds exactly its detector's required count") {
+    for ((name, d) <- detectors) {
+      val required = d.required.toSet
+      assert(shortest(name).count(required) == d.minRequired, name)
+    }
+  }
+
+  test("mutation: a gate one required char stricter loses the shortest match") {
+    for ((name, d) <- detectors) {
+      val stricter = new Detector(d.pattern, d.alphabet, d.minLen, d.required, d.minRequired + 1)
+      val m = shortest(name)
+      for (t <- Seq(m, s"#$m#")) {
+        assert(wholeText(d.pattern, t).map(_._3) == Vector(m), s"$name on $t")
+        assert(stricter.find(t).isEmpty, s"$name on $t")
+      }
+    }
+  }
+
   test("edge fixtures: run-restricted scan equals whole-text find()") {
     for ((name, d) <- detectors) {
       val m = shortest(name)
@@ -202,5 +224,58 @@ class RulesSpec extends AnyFunSuite {
     // every detector must actually match on the fuzz corpus
     for (((name, _), k) <- detectors.zipWithIndex)
       assert(matches(k) >= 300, s"$name matched only ${matches(k)} times")
+  }
+
+  /** A run of `d`'s alphabet that is at least `minLen` long but holds one
+    * required char too few: the gate, and only the gate, skips it. */
+  private def gateMiss(r: Random, d: Detector): String = {
+    val required = d.required.toIndexedSeq
+    val others = d.alphabet.filterNot(required.contains).toIndexedSeq
+    val filler = Array.fill(d.minLen + r.nextInt(16))(others(r.nextInt(others.size)))
+    for (p <- r.shuffle(filler.indices.toList).take(d.minRequired - 1))
+      filler(p) = required(r.nextInt(required.size))
+    filler.mkString
+  }
+
+  test("seeded gate near-misses: run-restricted scan equals whole-text find() on every detector") {
+    val r = new Random(20261019L)
+    for ((_, d) <- detectors; _ <- 0 until 2000) {
+      val miss = gateMiss(r, d)
+      assert(miss.length >= d.minLen && miss.count(d.required.toSet) == d.minRequired - 1)
+      assert(d.find(miss).isEmpty)
+      for (t <- Seq(miss, s"#$miss#", Fuzz.text(r) + miss + Fuzz.text(r),
+          gateMiss(r, d) + "#" + Fuzz.text(r) + "#" + gateMiss(r, detectors(r.nextInt(detectors.size))._2)))
+        for ((name, e) <- detectors) assertSame(name, e, t)
+    }
+  }
+
+  // ---- candidate rows: shared labels and validations maps ----
+
+  /** Every field of a candidate row, the validations map's keys and values
+    * in order included. */
+  private def fields(r: InternalRow): (Int, Int, String, String, Double, Seq[String], Seq[Boolean]) = {
+    val v = r.getMap(5)
+    (r.getInt(0), r.getInt(1), r.getUTF8String(2).toString, r.getUTF8String(3).toString, r.getDouble(4),
+      v.keyArray.toSeq[UTF8String](StringType).map(_.toString), v.valueArray.toSeq[Boolean](BooleanType))
+  }
+
+  test("candidate rows equal the candidates field by field, validations included") {
+    val aadhaar = (0 until 10000).iterator.map(i => f"uid 2345 6789 $i%04d ok")
+      .find(t => Rules.proposeCandidates(t).exists(_.ruleLabel == PiiTypes.AADHAAR)).get
+    val fixtures = Seq(canonical, "Device MAC aa:bb:cc:dd:ee:ff, PAN ABCDE1234F, DOB: 31/12/1990",
+      "shipped on 2024-05-17 ok", "code ABCDE12345 x", "num 1234 5678 9012 x",
+      "Card 4111 1111 1111 1112 x", "pan abcde1234f here", "ip 255.255.255.255 ok", aadhaar) ++
+      shortest.values
+    val cands = fixtures.flatMap(t => Rules.proposeCandidates(t))
+    for (label <- Seq(PiiTypes.CREDIT_CARD, PiiTypes.AADHAAR, PiiTypes.EMAIL))
+      assert(cands.exists(_.ruleLabel == label), label)
+    // and candidates built outside the rules: an equal but unshared map, a map the rules never emit
+    val own = Seq(Candidate(1, 2, "x", PiiTypes.CREDIT_CARD, 0.5, Map(PiiTypes.CREDIT_CARD -> true)),
+      Candidate(1, 2, "x", "CUSTOM", 0.5, Map(PiiTypes.AADHAAR -> false, PiiTypes.PAN -> true)))
+    for (c <- cands ++ own) {
+      val (ks, vs) = c.validations.toSeq.unzip
+      assert(fields(CandidateSchema.toRow(c)) ==
+        ((c.start, c.end, c.value, c.ruleLabel, c.ruleConfidence, ks, vs)), c)
+    }
   }
 }
