@@ -169,12 +169,9 @@ object Bench {
     }
     // Streaming machinery warmup (state store, microbatch planner, sink
     // codegen) — the streaming queries get the same JIT treatment as batch.
-    try {
-      val wq = streaming.EventStream.runOnce(spark, sfDir,
-        "bench_stream_warmup", statePartitions = Some(2))
-      wq.awaitTermination(120000)
-      if (wq.isActive) wq.stop()
-    } catch { case e: Throwable =>
+    try streaming.EventStream.awaitDone(
+      streaming.EventStream.runOnce(spark, sfDir, "bench_stream_warmup"), 120000L)
+    catch { case e: Throwable =>
       System.err.println(s"[bench] streaming warmup skipped: ${e.getMessage}")
     }
     // Drop the warmup pass's cross-query shared stages (band/shingle

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{Connectors, WriteBack}
 import graft.detect.Metadata
 import graft.ensemble.{Calibrator, PiiEnsemble, Weights}
-import graft.functions.pii_candidates
+import graft.functions.pii_candidates_rows
 import graft.sample.Sampler
 
 /** CLI twin of the reference's `cps scan --apply` (cli.py:57-124, §3.1):
@@ -49,7 +49,7 @@ object ScanCatalog {
         spark.table(s"`${c.schema}`.`${c.table}`"), c.column, 50,
         mode = Sampler.Rand(42))
       val cands = samples.toDF("value")
-        .select(posexplode(pii_candidates(col("value").cast("string"))).as(Seq("idx", "c")))
+        .select(pii_candidates_rows(col("value").cast("string")).as(Seq("idx", "c")))
       PiiEnsemble.withPredictionOffline(cands,
           col("c.rule_label"), col("c.rule_confidence"), col("c.validations"),
           Calibrator.identity, Weights.runtimeDefault)

@@ -3,11 +3,11 @@ package graft.cli
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.functions.pii_candidates
+import graft.functions.pii_candidates_rows
 import graft.streaming.{EventStream, ExactlyOnceSink}
 
 /** Incremental twin of `cps scan` (the reference is batch-only): watch a
@@ -43,16 +43,21 @@ object ScanStream {
   def run(spark: SparkSession, inDir: String, outDir: String,
           idCol: String = "doc_id", textCol: String = "text"): Long = {
     val checkpoint = s"$outDir/_checkpoint"
-    val findings = spark.readStream.schema(inputSchema(spark, inDir, checkpoint)).parquet(inDir)
-      .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(pii_candidates(col(textCol).cast("string"))).as(Seq("candidate_idx", "c")))
+    val input = spark.readStream.schema(inputSchema(spark, inDir, checkpoint)).parquet(inDir)
+    EventStream.awaitDone(
+      EventStream.toParquetBatches(findings(input, idCol, textCol), outDir, checkpoint))
+    ExactlyOnceSink.committedCount(spark, outDir)
+  }
+
+  /** The incremental scan's projection, one row per rule-layer candidate:
+    * (doc_id, candidate_idx, value, rule_label, rule_confidence). Stateless,
+    * so it serves any source, streaming or batch. */
+  def findings(input: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    input.select(col(idCol).cast("long").as("doc_id"),
+        pii_candidates_rows(col(textCol).cast("string")).as(Seq("candidate_idx", "c")))
       .select(col("doc_id"), col("candidate_idx"),
         col("c.value").as("value"), col("c.rule_label").as("rule_label"),
         col("c.rule_confidence").as("rule_confidence"))
-    val q = EventStream.toParquetBatches(findings, outDir, checkpoint)
-    EventStream.awaitDone(q)
-    ExactlyOnceSink.committedCount(spark, outDir)
-  }
 
   /** The input schema, fixed per checkpoint as for any Structured Streaming
     * file source: read from `<checkpoint>/input_schema.json` when present,

@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.functions._
 
 import graft.ensemble.{Calibrator, PiiEnsemble, Weights}
-import graft.functions.{pii_candidates, redact_spans}
+import graft.functions.{pii_candidates, pii_candidates_rows, redact_spans}
 
 /** CLI twin of the reference's `cps scan-text` (cli.py:249-272): run the
   * offline detection query on texts given as args (or a built-in fixture) and
@@ -16,7 +16,7 @@ object ScanText {
     val spark = graft.util.Sessions.get()
     import spark.implicits._
     val out = texts.toDF("text")
-      .select(col("text"), posexplode(pii_candidates(col("text"))).as(Seq("candidate_idx", "c")))
+      .select(col("text"), pii_candidates_rows(col("text")).as(Seq("candidate_idx", "c")))
       .withColumn("pred", PiiEnsemble.predictOffline(
         col("c.rule_label"), col("c.rule_confidence"), col("c.validations"),
         Calibrator.identity, Weights.runtimeDefault))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.QueryDef
 import graft.queries.QueryDef.t
+import graft.streaming.EventStream
 
 /** Round-9 corpus-curation operators: the selection/trimming decisions a
   * training-data pipeline makes AFTER dedup has mapped the redundancy —
@@ -756,9 +757,7 @@ object CurationQueries {
          FROM documents d LEFT JOIN agg ON agg.doc_id = d.doc_id
          WHERE d.doc_id >= 10""") { (s, d) =>
       val name = "s17_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runDecontamGate(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runDecontamGate(s, d, name))
         .select(col("doc_id"), col("n_bench_hits"),
           col("max_span_tokens"), col("quarantine"))
     },
@@ -798,15 +797,13 @@ object CurationQueries {
             CAST(pb.blocker AS BIGINT) AS first_blocker
           FROM documents d LEFT JOIN pb USING (doc_id)""") { (s, d) =>
       val name = "s25_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runLshAdmission(
-        s, d, name, OpsQueries.stagedBands)
-      graft.streaming.EventStream.awaitDone(q)
-      val sess = q.sparkSession
-      val pb = sess.table(name).groupBy("doc_id").agg(
+      val sink = EventStream.sinkTable(
+        EventStream.runLshAdmission(s, d, name, OpsQueries.stagedBands))
+      val pb = sink.groupBy("doc_id").agg(
         count(lit(1)).as("nb"),
         sum(when(col("blocked"), 1L).otherwise(0L)).as("nblk"),
         min(when(col("blocked"), col("blocker"))).as("blocker"))
-      sess.read.parquet(s"$d/documents.parquet").select(col("doc_id"))
+      sink.sparkSession.read.parquet(s"$d/documents.parquet").select(col("doc_id"))
         .join(pb, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("nb"), lit(0L)).cast("long").as("n_bands"),
@@ -855,15 +852,13 @@ object CurationQueries {
            CAST(pb.blocker AS BIGINT) AS first_blocker
          FROM documents d LEFT JOIN pb USING (doc_id)""") { (s, d) =>
       val name = "s26_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runLshAdmission(
-        s, d, name, graft.ops.Multimodal.phashBands)
-      graft.streaming.EventStream.awaitDone(q)
-      val sess = q.sparkSession
-      val pb = sess.table(name).groupBy("doc_id").agg(
+      val sink = EventStream.sinkTable(
+        EventStream.runLshAdmission(s, d, name, graft.ops.Multimodal.phashBands))
+      val pb = sink.groupBy("doc_id").agg(
         count(lit(1)).as("nb"),
         sum(when(col("blocked"), 1L).otherwise(0L)).as("nblk"),
         min(when(col("blocked"), col("blocker"))).as("blocker"))
-      sess.read.parquet(s"$d/documents.parquet").select(col("doc_id"))
+      sink.sparkSession.read.parquet(s"$d/documents.parquet").select(col("doc_id"))
         .join(pb, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("nb"), lit(0L)).cast("long").as("n_bands"),
@@ -1008,9 +1003,7 @@ object CurationQueries {
     QueryDef("s18_stream_event_dedup",
       "SELECT DISTINCT user_id, event_type, ts FROM events") { (s, d) =>
       val name = "s18_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runEventDedup(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runEventDedup(s, d, name))
         .select(col("user_id"), col("event_type"), col("ts"))
     },
 
@@ -1065,9 +1058,7 @@ object CurationQueries {
           SELECT c.c_custkey, c.nation, c.seg, c.band
           FROM c JOIN n USING (nation, seg, band) WHERE n.cn >= 5""") { (s, d) =>
       val name = "s19_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runKAnonGate(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runKAnonGate(s, d, name))
         .select(col("c_custkey"), col("nation"), col("seg"), col("band"))
     },
 
@@ -1096,9 +1087,7 @@ object CurationQueries {
                     ELSE 'keep' END AS disposition
              FROM documents))""") { (s, d) =>
       val name = "s16_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runIngestGate(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runIngestGate(s, d, name))
         .select(col("source"), col("doc_id"), col("n_tokens"),
           col("disposition"), col("accepted"))
     },
@@ -1124,9 +1113,7 @@ object CurationQueries {
              (1 + CAST(substr(source, 4) AS INT) % 3) * 3000 AS budget
            FROM documents)""") { (s, d) =>
       val name = "s15_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runQuotaMaintain(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runQuotaMaintain(s, d, name))
         .select(col("source"), col("doc_id"), col("n_tokens"), col("accepted"))
     })
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.QueryDef
 import graft.queries.QueryDef.t
+import graft.streaming.EventStream
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — THE memory-bound ANN scale path the IVF
@@ -676,9 +677,7 @@ object PqQueries {
             vd2 * 10 > (SELECT base FROM b) * 12 AS drifted
           FROM vd""") { (s, d) =>
       val name = "s22_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runDriftGate(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runDriftGate(s, d, name))
         .select(col("vec_id"), col("q_err_micro"), col("drifted"))
     },
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.QueryDef
 import graft.queries.QueryDef.t
+import graft.streaming.EventStream
 
 /** Sketch-backed corpus analytics: the queries where a fixed-size mergeable
   * summary replaces a cardinality-sized exact structure. Both are verified
@@ -123,9 +124,8 @@ object SketchQueries {
     // must yield EXACTLY x41's estimates — same oracle, verbatim.
     QueryDef("s09_stream_cms", CmsHeavyHittersSql) { (s, d) =>
       val name = "s09_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runCmsMaintain(s, d, name, CmsDepth, CmsWidth)
-      graft.streaming.EventStream.awaitDone(q)
-      val cs = q.sparkSession // the memory sink registers in the stream's session
+      val sink = EventStream.sinkTable(
+        EventStream.runCmsMaintain(s, d, name, CmsDepth, CmsWidth))
       // The grid is ≤ depth×width cells BY CONSTRUCTION (the sketch
       // property) — small enough to lift onto the parent session as a
       // local relation, so the verify tail runs where the pass-wide
@@ -133,7 +133,7 @@ object SketchQueries {
       // session (which cannot see the parent's cache). Same class of
       // bounded driver materialization as a broadcast benchmark set.
       import s.implicits._
-      val grid = cs.table(name).groupBy("j", "bucket").agg(max("bc").as("bc"))
+      val grid = sink.groupBy("j", "bucket").agg(max("bc").as("bc"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
         .toSeq.toDF("j", "bucket", "bc")
       cmsVerifyOutput(s, d, grid)
@@ -276,15 +276,13 @@ object SketchQueries {
     // can tell the streamed sketch from the batch one.
     QueryDef("s12_stream_histogram", HistQuantilesSql) { (s, d) =>
       val name = "s12_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runHistMaintain(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      val cs = q.sparkSession
+      val sink = EventStream.sinkTable(EventStream.runHistMaintain(s, d, name))
       // ONE aggregation reshapes the cell state into (n, hb, vc) — three
       // filtered branches would self-join the memory-sink view, which the
       // analyzer cannot deduplicate (MemoryPlan attrs are fixed).
       // collect_list drops the nulls the `when` produces, so each array
       // gathers exactly its kind's cells.
-      val joined = cs.table(name).groupBy("source", "kind", "key").agg(max("cnt").as("c"))
+      val joined = sink.groupBy("source", "kind", "key").agg(max("cnt").as("c"))
         .groupBy("source").agg(
           sum(when(col("kind") === "v", col("c"))).as("n"),
           array_sort(collect_list(when(col("kind") === "h",
@@ -312,9 +310,7 @@ object SketchQueries {
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_doc
            FROM documents)""") { (s, d) =>
       val name = "s13_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runPackingMaintain(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runPackingMaintain(s, d, name))
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("bin_id"))
     },
 
@@ -336,9 +332,7 @@ object SketchQueries {
           WHERE rn <= 25""") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val name = "s14_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runWeightedSampleMaintain(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runWeightedSampleMaintain(s, d, name))
         .select(col("source"), explode(col("top")).as("p"))
         .select(col("source"), col("p.np").as("np"), col("p.doc_id").as("doc_id"),
           col("p.w").as("w"), col("p.priority").as("priority"))

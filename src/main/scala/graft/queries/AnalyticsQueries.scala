@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.QueryDef.t
+import graft.streaming.EventStream
 
 /** Behavioral / privacy analytics the reference's findings-store consumers
   * run downstream of the scan (reference `store/db.py` exposes the raw
@@ -698,9 +699,7 @@ object AnalyticsQueries {
           SELECT user_id, 'purchase_after_click', t3 FROM z WHERE t3 IS NOT NULL""") {
       (s, d) =>
       val name = "s20_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runFunnel(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runFunnel(s, d, name))
         .select(col("user_id"), col("stage"), col("ts"))
     },
 
@@ -721,9 +720,7 @@ object AnalyticsQueries {
           SELECT f AS from_type, t AS to_type, CAST(count(*) AS BIGINT) AS n
           FROM seq WHERE t IS NOT NULL GROUP BY 1, 2""") { (s, d) =>
       val name = "s21_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runTransitions(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runTransitions(s, d, name))
         .groupBy("from_type", "to_type")
         .agg(count(lit(1)).cast("long").as("n"))
         .select(col("from_type"), col("to_type"), col("n"))
@@ -948,10 +945,8 @@ object AnalyticsQueries {
            valid_to_us IS NULL AS is_current
          FROM fin""") { (s, d) =>
       val name = "s27_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runScd2(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      val raw = q.sparkSession.table(name)
-      raw.groupBy("user_id", "version")
+      EventStream.sinkTable(EventStream.runScd2(s, d, name))
+        .groupBy("user_id", "version")
         .agg(max(struct(
           when(col("is_current"), 0).otherwise(1).as("cl"),
           col("n_events").as("ne"), col("valid_to_us").as("vt"),

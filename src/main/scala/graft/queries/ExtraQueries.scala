@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import QueryDef.t
+import graft.streaming.EventStream
 
 /** Additional operator coverage: correlated/scalar subqueries and the
   * Structured Streaming pipeline surfaced through the correctness gate. */
@@ -170,10 +171,7 @@ object ExtraQueries {
          CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS sum_value
          FROM events GROUP BY 1, 2""") { (s, d) =>
       val name = "s01_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runOnce(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
-      // the memory sink registers in the stream's (child) session catalog
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runOnce(s, d, name))
     },
 
     // Stateful streaming with CUSTOM state (flatMapGroupsWithState): per-user
@@ -188,9 +186,7 @@ object ExtraQueries {
          FROM events e JOIN customer c ON c.c_custkey = e.user_id
          GROUP BY 1""") { (s, d) =>
       val name = "s03_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runEnriched(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runEnriched(s, d, name))
     },
 
     // Streaming dedup chained into a stateful aggregate: watermarked
@@ -200,9 +196,7 @@ object ExtraQueries {
       """SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
          FROM events GROUP BY 1""") { (s, d) =>
       val name = "s04_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runDistinctUsers(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runDistinctUsers(s, d, name))
     },
 
     QueryDef("s02_stream_sessionize",
@@ -212,14 +206,9 @@ object ExtraQueries {
                   THEN 1 ELSE 0 END AS is_new
            FROM events) GROUP BY user_id""") { (s, d) =>
       val name = "s02_sink_" + math.abs(d.hashCode).toString
-      // statePartitions=4, not 8: the fold's cost is per-user state rows
-      // (1500 at sf0.1), so halving the store count halves the per-batch
-      // store init/commit fixed cost with no parallelism loss (measured
-      // 0.87 s at 4 vs 1.5 s at 8 — commitTimeMs scales with store count).
-      val q = graft.streaming.EventStream.runSessionize(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
       // update-mode memory sink appends per batch; take the latest emission
-      graft.streaming.EventStream.sessionTotals(q.sparkSession, name)
+      EventStream.sessionTotals(
+        EventStream.sinkTable(EventStream.runSessionize(s, d, name)))
     },
 
     // NATIVE session_window streaming aggregation (s23) — the built-in
@@ -236,9 +225,8 @@ object ExtraQueries {
                   THEN 1 ELSE 0 END AS is_new
            FROM events) GROUP BY user_id""") { (s, d) =>
       val name = "s23_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runSessionWindow(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
-      graft.streaming.EventStream.sessionWindowTotals(q.sparkSession, name)
+      EventStream.sessionWindowTotals(
+        EventStream.sinkTable(EventStream.runSessionWindow(s, d, name)))
         .select(col("user_id"), col("n_sessions").cast("long").as("n_sessions"),
           col("n_events").cast("long").as("n_events"))
     },
@@ -265,9 +253,8 @@ object ExtraQueries {
               AS n_users_late
           FROM l""") { (s, d) =>
       val name = "s24_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runLatenessAudit(s, d, name)
-      graft.streaming.EventStream.awaitDone(q)
-      graft.streaming.EventStream.latenessTotals(q.sparkSession, name)
+      EventStream.latenessTotals(
+        EventStream.sinkTable(EventStream.runLatenessAudit(s, d, name)))
     },
 
     // The exactly-once foreachBatch sink through the correctness gate: the
@@ -281,23 +268,16 @@ object ExtraQueries {
          count(*) AS n,
          CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS sum_value
          FROM events GROUP BY 1, 2""") { (s, d) =>
-      import graft.streaming.{Ckpt, EventStream, ExactlyOnceSink}
+      import graft.streaming.{Ckpt, ExactlyOnceSink}
       val tmp = java.nio.file.Files.createTempDirectory("s05_eo").toString
-      // State partitions sized to the STATE cardinality (~windows × types),
-      // not the session's data-shuffle width — same rationale as the other
-      // streaming queries' statePartitions: 32 HDFSBackedStateStore inits
-      // per micro-batch for a few-thousand-row state is pure fixed cost.
-      // The trailing no-data batch is dropped (update-mode agg: it emits
-      // nothing, only evicts state the replay discards) and the checkpoint
-      // rides tmpfs; the parquet OUTPUT stays on disk — that's the sink's
-      // durable product, the checkpoint is replay scaffolding.
-      val sess = s.newSession()
-      sess.conf.set("spark.sql.shuffle.partitions", "4")
-      sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val q = EventStream.toParquetBatches(
-        EventStream.tumblingAgg(EventStream.readEvents(sess, d)),
-        s"$tmp/out", Ckpt.fresh("s05"))
-      graft.streaming.EventStream.awaitDone(q)
+      // Runs on the replay's child session: the trailing no-data batch of
+      // an update-mode agg emits nothing, it only evicts state the replay
+      // discards. The checkpoint rides tmpfs, while the parquet OUTPUT
+      // stays on disk — that's the sink's durable product, the checkpoint
+      // is replay scaffolding.
+      EventStream.awaitDone(EventStream.toParquetBatches(
+        EventStream.tumblingAgg(EventStream.readEvents(EventStream.replayChild(s), d)),
+        s"$tmp/out", Ckpt.fresh("s05")))
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("window_start", "event_type")
         .orderBy(col("batch_id").desc)
@@ -323,13 +303,11 @@ object ExtraQueries {
           AND date_trunc('second', p.ts) >= date_trunc('second', c.ts)
           AND date_trunc('second', p.ts) <= date_trunc('second', c.ts) + INTERVAL 1 HOUR""") { (s, d) =>
       val name = "s07_sink_" + math.abs(d.hashCode).toString
-      // statePartitions=4: stream-stream join keeps TWO keyed state stores
-      // per partition (one per side); state cardinality is the user count,
-      // so 8 partitions paid 16 store inits per micro-batch for no
-      // parallelism the 150-key state can use.
-      val q = graft.streaming.EventStream.runAttribution(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      // The replay's 4 state partitions: a stream-stream join keeps TWO
+      // keyed state stores per partition (one per side); state cardinality
+      // is the user count, so 8 partitions paid 16 store inits per
+      // micro-batch for no parallelism the 150-key state can use.
+      EventStream.sinkTable(EventStream.runAttribution(s, d, name))
     },
 
     // Stream-stream LEFT OUTER interval join — the null-emitting semantics
@@ -360,9 +338,7 @@ object ExtraQueries {
              AND p.p_ts >= c.c_ts AND p.p_ts <= c.c_ts + INTERVAL 1 HOUR)
            AND c.c_ts + INTERVAL 1 HOUR < wm.wm""") { (s, d) =>
       val name = "s11_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runAttributionOuter(s, d, name, statePartitions = Some(4))
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runAttributionOuter(s, d, name))
     },
 
     // INCREMENTAL PII scan — the reference's core batch use case run as a
@@ -374,12 +350,11 @@ object ExtraQueries {
     // tell it apart from the batch one.
     QueryDef("s06_stream_pii_scan",
       PiiQueries.defs.find(_.name == "p01_pii_candidates").get.oracle.get) { (s, d) =>
-      import graft.streaming.{Ckpt, EventStream, ExactlyOnceSink}
+      import graft.streaming.{Ckpt, ExactlyOnceSink}
       // FileStreamSource takes a directory; select the customer file by glob.
-      // Stateless append pipeline: no state stores, but the no-data batch
-      // would still write (and commit) an empty parquet batch — drop it.
-      val sess = s.newSession()
-      sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      // Stateless append pipeline on the replay's child session: no state
+      // stores, and no trailing no-data batch to write (and commit) an
+      // empty parquet batch.
       // The file source splits by FILE, and the sample is one single-row-
       // group parquet file — without a repartition the whole detect
       // expression runs in ONE task per micro-batch (measured 1.9 s of the
@@ -387,17 +362,11 @@ object ExtraQueries {
       // at scale, arriving batches are many files wide and this repartition
       // is what keeps a skewed batch (one fat file) from serializing the
       // scan anyway.
-      val detected = PiiInputs.fromCustomer(
-          EventStream.streamReader(sess, d, "customer.parquet"))
-        .repartition(16)
-        .select(col("doc_id"),
-          graft.functions.pii_candidates_rows(col("text")).as(Seq("candidate_idx", "c")))
-        .select(col("doc_id"), col("candidate_idx"),
-          col("c.value").as("value"), col("c.rule_label").as("rule_label"),
-          col("c.rule_confidence").as("rule_confidence"))
+      val detected = graft.cli.ScanStream.findings(PiiInputs.fromCustomer(
+          EventStream.streamReader(EventStream.replayChild(s), d, "customer.parquet"))
+        .repartition(16))
       val tmp = java.nio.file.Files.createTempDirectory("s06_eo").toString
-      val q = EventStream.toParquetBatches(detected, s"$tmp/out", Ckpt.fresh("s06"))
-      graft.streaming.EventStream.awaitDone(q)
+      EventStream.awaitDone(EventStream.toParquetBatches(detected, s"$tmp/out", Ckpt.fresh("s06")))
       ExactlyOnceSink.readCommitted(s, s"$tmp/out")
         .select("doc_id", "candidate_idx", "value", "rule_label", "rule_confidence")
     },
@@ -417,21 +386,20 @@ object ExtraQueries {
     QueryDef("s08_stream_ingest_dedup",
       graft.ops.OpsQueries.defs.find(_.name == "x43_incremental_dedup").get.oracle.get) { (s, d) =>
       import graft.ops.OpsQueries
-      import graft.streaming.Ckpt
-      // Runs on the PARENT session: the pipeline is fully stateless (no
-      // state stores to size, no watermark so no trailing no-data batch),
-      // and the corpus-side artifacts are the pass-wide shared band/shingle
-      // frames — the streaming query's marginal static cost is a semi-join
+      // The pipeline is fully stateless (no state stores, no watermark),
+      // and the corpus-side artifacts are the parent session's pass-wide
+      // shared band/shingle frames, served from the cache every session
+      // shares — the streaming query's marginal static cost is a semi-join
       // against the corpus id set, not a corpus MinHash pass. (Production
       // stores the band table partitioned by source; the semi-join stands
       // in for that partition filter.)
       // corpIds is CORPUS-sized (every stored doc), so the semi-joins are
       // deliberately unhinted — r14's streaming plan guard flagged the
       // broadcast hints that sat here (the r10/r12 deferred-OOM class:
-      // fine at sf0.1, dead at a billion stored ids). AQE broadcasts the
-      // id set per batch while it measures small; at scale the semi-join
-      // shuffles on corp_id like the production partition filter it
-      // stands in for.
+      // fine at sf0.1, dead at a billion stored ids). The planner
+      // broadcasts the id set while it measures small; at scale the
+      // semi-join shuffles on corp_id like the production partition filter
+      // it stands in for.
       val corpIds = s.read.parquet(s"$d/documents.parquet")
         .filter(col("source") =!= "src0").select(col("doc_id").as("corp_id"))
       val corpBands = OpsQueries.sharedBandsFor(s, d)
@@ -440,22 +408,17 @@ object ExtraQueries {
       val corpSh = OpsQueries.sharedShinglesFor(s, d)
         .select(col("doc_id").as("corp_id"), col("s").as("corp_s"))
         .join(corpIds, Seq("corp_id"), "left_semi")
-      val incoming = graft.streaming.EventStream.streamReader(s, d, "documents.parquet")
-        .filter(col("source") === "src0")
-      val pairs = OpsQueries.stagedBandsWithShingles(incoming)
-        .join(corpBands, Seq("band", "band_hash"))
-        .join(corpSh, "corp_id")
-        .filter(size(array_intersect(col("s"), col("corp_s"))).cast("double")
-          / greatest(size(array_union(col("s"), col("corp_s"))), lit(1)) >= 0.8)
-        .select(col("doc_id"), col("corp_id"))
       val name = "s08_sink_" + math.abs(d.hashCode).toString
-      val q = pairs.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", Ckpt.fresh("s08"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      graft.streaming.EventStream.awaitDone(q)
-      val fd = q.sparkSession.table(name)
+      val fd = EventStream.sinkTable(EventStream.replay(s, name, "append") { child =>
+          OpsQueries.stagedBandsWithShingles(
+              EventStream.streamReader(child, d, "documents.parquet")
+                .filter(col("source") === "src0"))
+            .join(corpBands, Seq("band", "band_hash"))
+            .join(corpSh, "corp_id")
+            .filter(size(array_intersect(col("s"), col("corp_s"))).cast("double")
+              / greatest(size(array_union(col("s"), col("corp_s"))), lit(1)) >= 0.8)
+            .select(col("doc_id"), col("corp_id"))
+        })
         .groupBy("doc_id").agg(min("corp_id").as("dup_of"))
       s.read.parquet(s"$d/documents.parquet").filter(col("source") === "src0")
         .select(col("doc_id"))
@@ -472,8 +435,9 @@ object ExtraQueries {
     // stateless per-row (integer compares only: ns·25 < nt, no float
     // thresholds); the ONLY state is the counter aggregate, bounded at
     // sources × 3 rows by construction — no watermark needed, any batching
-    // converges to the batch counts. Child session sizes the 4 state
-    // partitions and drops the trailing no-data batch (nothing to evict).
+    // converges to the batch counts. The replay's child session sizes the
+    // 4 state partitions and drops the trailing no-data batch (nothing to
+    // evict).
     QueryDef("s10_stream_quality",
       """WITH q AS (SELECT source, len(string_split(text, ' ')) AS nt,
              len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS ns
@@ -484,26 +448,18 @@ object ExtraQueries {
                 ELSE 'keep' END AS disposition,
            count(*) AS n_docs
          FROM q GROUP BY 1, 2""") { (s, d) =>
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "4")
-      child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       val toks = split(col("text"), " ")
-      val scored = graft.streaming.EventStream.streamReader(child, d, "documents.parquet")
-        .select(col("source"), size(toks).as("nt"),
-          size(filter(toks, t => t.isin("the", "a"))).as("ns"))
-        .withColumn("disposition",
-          when(col("nt") < 15, "short")
-            .when(col("ns") * 25 < col("nt"), "low_stopword")
-            .otherwise("keep"))
       val name = "s10_sink_" + math.abs(d.hashCode).toString
-      val q = scored.groupBy("source", "disposition").agg(count(lit(1)).as("n_docs"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", graft.streaming.Ckpt.fresh("s10"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.replay(s, name, "complete") { child =>
+        EventStream.streamReader(child, d, "documents.parquet")
+          .select(col("source"), size(toks).as("nt"),
+            size(filter(toks, t => t.isin("the", "a"))).as("ns"))
+          .withColumn("disposition",
+            when(col("nt") < 15, "short")
+              .when(col("ns") * 25 < col("nt"), "low_stopword")
+              .otherwise("keep"))
+          .groupBy("source", "disposition").agg(count(lit(1)).as("n_docs"))
+      })
     },
 
     // Bag-semantics set operations (q29) — EXCEPT ALL / INTERSECT ALL, the
@@ -968,30 +924,29 @@ object ExtraQueries {
          rk AS (SELECT source, hv,
              row_number() OVER (PARTITION BY source ORDER BY hv) AS rn FROM h),
          a AS (SELECT source, count(*) AS n_distinct FROM h GROUP BY 1),
-         hks AS (SELECT source, hv AS hk FROM rk WHERE rn = ${graft.streaming.EventStream.KmvK})
+         hks AS (SELECT source, hv AS hk FROM rk WHERE rn = ${EventStream.KmvK})
          SELECT a.source,
-           CAST(least(a.n_distinct, ${graft.streaming.EventStream.KmvK}) AS BIGINT) AS sketch_size,
+           CAST(least(a.n_distinct, ${EventStream.KmvK}) AS BIGINT) AS sketch_size,
            CAST(CASE WHEN hks.hk IS NULL THEN a.n_distinct
-             ELSE (${graft.streaming.EventStream.KmvK - 1}::HUGEINT * 1152921504606846976) // hks.hk END AS BIGINT) AS kmv_est,
+             ELSE (${EventStream.KmvK - 1}::HUGEINT * 1152921504606846976) // hks.hk END AS BIGINT) AS kmv_est,
            CAST(a.n_distinct AS BIGINT) AS exact_tokens,
            CASE WHEN hks.hk IS NULL THEN true
-             ELSE abs((${graft.streaming.EventStream.KmvK - 1}::HUGEINT * 1152921504606846976) // hks.hk - a.n_distinct) * 5
+             ELSE abs((${EventStream.KmvK - 1}::HUGEINT * 1152921504606846976) // hks.hk - a.n_distinct) * 5
                   <= 2 * a.n_distinct END AS within_3sigma
          FROM a LEFT JOIN hks USING (source)""") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val dec = "decimal(38,0)"
-      val kmvK = graft.streaming.EventStream.KmvK
+      val kmvK = EventStream.KmvK
       val name = "s28_sink_" + math.abs(d.hashCode).toString
-      val q = graft.streaming.EventStream.runKmvDistinct(s, d, name, k = kmvK)
-      graft.streaming.EventStream.awaitDone(q)
-      val sess = q.sparkSession
-      val last = sess.table(name)
+      val sink = EventStream.sinkTable(
+        EventStream.runKmvDistinct(s, d, name, k = kmvK))
+      val last = sink
         .withColumn("__rn", row_number().over(
           Window.partitionBy("source").orderBy(col("rows_seen").desc)))
         .filter(col("__rn") === 1)
         .select(col("source"), col("sketch_size").cast("long").as("sketch_size"),
           when(col("hk") < 0, lit(null)).otherwise(col("hk")).as("hk"))
-      val exact = sess.read.parquet(new java.io.File(d, "documents.parquet").getPath)
+      val exact = sink.sparkSession.read.parquet(new java.io.File(d, "documents.parquet").getPath)
         .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("tok"))
         .filter(length(col("tok")) > 0)
         .select(col("source"),
@@ -1155,10 +1110,8 @@ object ExtraQueries {
          WHERE d.source = 'src0'""") { (s, d) =>
       val name = "s29_sink_" + math.abs(d.hashCode).toString
       val art = graft.ops.Dedup.substringLabelArtifact(s, d)
-      val q = graft.streaming.EventStream.runSubstringGate(s, d, name,
-        storedLabelsPath = Some(art))
-      graft.streaming.EventStream.awaitDone(q)
-      q.sparkSession.table(name)
+      EventStream.sinkTable(EventStream.runSubstringGate(s, d, name,
+        storedLabelsPath = Some(art)))
         .groupBy("doc_id")
         .agg(max(col("n_windows")).as("n_windows"),
           sum(when(col("hit"), 1L).otherwise(0L)).as("n_hit_classes"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.PiiTypes
 import graft.ensemble.{Calibrator, PiiEnsemble, Weights}
-import graft.functions.{ner_spans, pii_candidates}
+import graft.functions.{ner_spans, pii_candidates, pii_candidates_rows}
 import graft.queries.PiiInputs.Sql
 import QueryDef.t
 
@@ -108,7 +108,7 @@ object PipelineQueries {
       val goldRow = struct(lit(1).as("role"), lit(0L).as("ord"),
         col("c.start").as("start"), col("c.end").as("end"), goldType.as("label"))
       val tagged = PiiInputs.df(s, d)
-        .select(col("doc_id"), posexplode(pii_candidates(col("text"))).as(Seq("idx", "c")))
+        .select(col("doc_id"), pii_candidates_rows(col("text")).as(Seq("idx", "c")))
         .select(col("doc_id"),
           explode(concat(array(pred), filter(array(goldRow), _ => goldType.isNotNull))).as("r"))
         .select(col("doc_id"), col("r.role").as("role"), col("r.ord").as("ord"),
@@ -179,7 +179,7 @@ object PipelineQueries {
       PiiEnsemble.withPredictionOffline(
           PiiInputs.df(s, d)
             .select(col("doc_id"),
-              graft.functions.pii_candidates_rows(col("text")).as(Seq("idx", "c"))),
+              pii_candidates_rows(col("text")).as(Seq("idx", "c"))),
           col("c.rule_label"), col("c.rule_confidence"), col("c.validations"),
           Calibrator.identity, Weights.runtimeDefault)
         .groupBy("doc_id")

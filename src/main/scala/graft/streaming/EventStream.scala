@@ -92,12 +92,14 @@ object EventStream {
     }
   }
 
-  // Streaming-source schemas per (dir, glob): the schema probe is a batch
+  // Streaming-source schemas per (dir, glob), stamped with the probed
+  // path's modification time and length: the schema probe is a batch
   // file-listing + footer read, a fixed ~50-100 ms repaid on every runner
-  // call for a schema that cannot change mid-suite. Keyed on the path only
-  // (schemas are session-independent).
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
+  // call, while the stat is one system call and no Spark job. A table
+  // rewritten in place with a different schema changes the stamp and is
+  // probed again, replacing the entry. Schemas are session-independent.
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[(String, String),
+    (Option[(java.nio.file.attribute.FileTime, Long)], org.apache.spark.sql.types.StructType)]()
 
   /** Default per-source token budget for the quota gates (s15/s16): the
     * test corpus's srcN tier formula, TOTAL over arbitrary source names —
@@ -138,49 +140,69 @@ object EventStream {
   def streamReader(session: SparkSession, dir: String, glob: String,
                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val sub = new java.io.File(dir, glob)
-    val schema = schemaCache.computeIfAbsent((dir, glob),
-      _ => session.read.parquet(sub.getPath).schema)
+    // A missing path has no stamp; its probe throws and caches nothing.
+    val attrs = scala.util.Try(java.nio.file.Files.readAttributes(sub.toPath,
+      classOf[java.nio.file.attribute.BasicFileAttributes])).toOption
+    val stamp = attrs.map(a => (a.lastModifiedTime, a.size))
+    val (_, schema) = schemaCache.compute((dir, glob), (_, cached) =>
+      if (cached != null && cached._1 == stamp) cached
+      else (stamp, session.read.parquet(sub.getPath).schema))
     val reader = session.readStream.schema(schema)
-    val path = if (sub.isDirectory) sub.getPath
+    val path = if (attrs.exists(_.isDirectory)) sub.getPath
       else { reader.option("pathGlobFilter", glob); dir }
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
     reader.parquet(path)
   }
 
-  /** Child session for a finite AvailableNow replay.
+  /** Child session for a finite AvailableNow replay, so the replay's
+    * settings never reach concurrent batch queries on the caller's session.
     *
-    * `statePartitions` sizes the stateful shuffle to the STATE cardinality
-    * (thousands of rows), not the session's batch-shuffle width — 32
-    * HDFSBackedStateStore inits/commits per micro-batch for a few-thousand-
-    * row state is pure fixed cost. The override lives in a child session so
-    * concurrent batch queries on the parent are untouched.
-    *
-    * `keepNoDataBatches`: Spark appends a trailing NO-DATA micro-batch to
-    * advance the watermark and run state eviction/timeouts. A bounded
-    * replay that stops right after and discards its checkpoint gets nothing
-    * from that batch — it re-loads and re-commits every state store for
-    * zero output rows (~0.7 s/query measured at sf0.1) — so the runners
-    * drop it, EXCEPT when eviction IS the observable behavior
-    * (evictAfterGap sessionization: the timeout fires in a no-data batch
-    * and emits the generation's final totals). Unbounded production
-    * streams never hit this switch: they run on the caller's own session,
-    * where the default (no-data batches ON) governs. */
-  private def replaySession(spark: SparkSession, statePartitions: Option[Int],
-                            keepNoDataBatches: Boolean = false): SparkSession = {
-    if (statePartitions.isEmpty && keepNoDataBatches) spark
-    else {
-      val s = spark.newSession()
-      statePartitions.foreach(n => s.conf.set("spark.sql.shuffle.partitions", n.toString))
-      if (!keepNoDataBatches)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // The stream disables AQE itself (stateful workloads don't support
-      // it); turning it off for the whole child session also spares the
-      // sink READ-BACK aggregations — state-cardinality-sized frames where
-      // AQE's per-shuffle materialize/re-plan rounds cost more than the
-      // shuffles themselves (~0.25 s/query measured on the s02 totals).
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s
-    }
+    *  - 4 shuffle partitions: a stateful shuffle is sized to the STATE
+    *    cardinality (thousands of rows), not the batch-shuffle width, and
+    *    each partition is one HDFSBackedStateStore init/commit per
+    *    micro-batch — 32 of them for a few-thousand-row state is pure fixed
+    *    cost (s02 measured 0.87 s at 4 vs 1.5 s at 8 partitions).
+    *  - AQE off: the stream disables it itself (stateful workloads don't
+    *    support it); off for the whole child session it also spares the
+    *    sink READ-BACK aggregations — state-cardinality-sized frames where
+    *    AQE's per-shuffle materialize/re-plan rounds cost more than the
+    *    shuffles themselves (~0.25 s/query measured on the s02 totals).
+    *  - No-data micro-batches off unless `keepNoDataBatches`: Spark appends
+    *    a trailing NO-DATA micro-batch to advance the watermark and run
+    *    state eviction/timeouts. A bounded replay that stops right after and
+    *    discards its checkpoint gets nothing from that batch — it re-loads
+    *    and re-commits every state store for zero output rows (~0.7 s/query
+    *    measured at sf0.1) — EXCEPT when eviction IS the observable
+    *    behavior (evictAfterGap sessionization, the left-outer join's null
+    *    rows). Unbounded production streams run on the caller's own
+    *    session, where the default (no-data batches ON) governs. */
+  private[graft] def replayChild(spark: SparkSession,
+                                 keepNoDataBatches: Boolean = false): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", keepNoDataBatches.toString)
+    s
+  }
+
+  /** The replay primitive: `plan`, built on a [[replayChild]] session of
+    * `spark`, runs as a finite AvailableNow query into a memory sink named
+    * `queryName`, on a fresh checkpoint ([[Ckpt.fresh]]). Returns the
+    * running query; [[sinkTable]] awaits it and reads the sink. */
+  def replay(spark: SparkSession, queryName: String, outputMode: String,
+             keepNoDataBatches: Boolean = false)(plan: SparkSession => DataFrame): StreamingQuery =
+    plan(replayChild(spark, keepNoDataBatches))
+      .writeStream.outputMode(outputMode)
+      .format("memory").queryName(queryName)
+      .option("checkpointLocation", Ckpt.fresh(queryName))
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** [[awaitDone]] on a [[replay]], then its memory-sink table, which is
+    * registered in the query's (child) session. */
+  def sinkTable(q: StreamingQuery): DataFrame = {
+    awaitDone(q)
+    q.sparkSession.table(q.name)
   }
 
   /** Streaming exact-event dedup (s18): at-least-once delivery made
@@ -199,19 +221,13 @@ object EventStream {
   def runEventDedup(spark: SparkSession, dir: String, queryName: String,
                     glob: String = "events.parquet",
                     watermarkDelay: String = "10 minutes",
-                    maxFilesPerTrigger: Option[Int] = None,
-                    statePartitions: Option[Int] = Some(4)): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    val out = readEvents(session, dir, glob, maxFilesPerTrigger)
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "ts")
-    out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                    maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "append") { session =>
+      readEvents(session, dir, glob, maxFilesPerTrigger)
+        .select(col("user_id"), col("event_type"), col("ts"))
+        .withWatermark("ts", watermarkDelay)
+        .dropDuplicatesWithinWatermark("user_id", "event_type", "ts")
+    }
 
   /** Streaming k-anonymity release gate (s19): x96's equivalence classes
     * as an ingest-time HOLD-AND-RELEASE — a record is published only once
@@ -230,42 +246,36 @@ object EventStream {
     * class only ever gains members). */
   def runKAnonGate(spark: SparkSession, dir: String, queryName: String,
                    glob: String = "customer.parquet", k: Int = 5,
-                   statePartitions: Option[Int] = Some(4),
-                   maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val out = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .select(col("c_custkey").cast("long").as("ck"),
-        col("c_nationkey").cast("long").as("nation"),
-        col("c_mktsegment").as("seg"),
-        floor(col("c_acctbal") / 1000).cast("long").as("band"))
-      .as[(Long, Long, String, Long)]
-      .groupByKey(r => (r._2, r._3, r._4))
-      .flatMapGroupsWithState[(Long, Seq[Long]), (Long, Long, String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: (Long, String, Long), rows: Iterator[(Long, Long, String, Long)],
-         state: GroupState[(Long, Seq[Long])]) =>
-          val st = state.getOption.getOrElse((0L, Seq.empty[Long]))
-          var n = st._1
-          var pending = st._2
-          val released = scala.collection.mutable.ArrayBuffer[Long]()
-          rows.toSeq.sortBy(_._1).foreach { case (ck, _, _, _) =>
-            n += 1
-            if (n >= k) {
-              if (pending.nonEmpty) { released ++= pending; pending = Seq.empty }
-              released += ck
-            } else pending = pending :+ ck
-          }
-          state.update((n, pending))
-          released.iterator.map(ck => (ck, key._1, key._2, key._3))
-      }
-      .toDF("c_custkey", "nation", "seg", "band")
-    out.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                   maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .select(col("c_custkey").cast("long").as("ck"),
+          col("c_nationkey").cast("long").as("nation"),
+          col("c_mktsegment").as("seg"),
+          floor(col("c_acctbal") / 1000).cast("long").as("band"))
+        .as[(Long, Long, String, Long)]
+        .groupByKey(r => (r._2, r._3, r._4))
+        .flatMapGroupsWithState[(Long, Seq[Long]), (Long, Long, String, Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (key: (Long, String, Long), rows: Iterator[(Long, Long, String, Long)],
+           state: GroupState[(Long, Seq[Long])]) =>
+            val st = state.getOption.getOrElse((0L, Seq.empty[Long]))
+            var n = st._1
+            var pending = st._2
+            val released = scala.collection.mutable.ArrayBuffer[Long]()
+            rows.toSeq.sortBy(_._1).foreach { case (ck, _, _, _) =>
+              n += 1
+              if (n >= k) {
+                if (pending.nonEmpty) { released ++= pending; pending = Seq.empty }
+                released += ck
+              } else pending = pending :+ ck
+            }
+            state.update((n, pending))
+            released.iterator.map(ck => (ck, key._1, key._2, key._3))
+        }
+        .toDF("c_custkey", "nation", "seg", "band")
+    }
 
   /** Streaming first-order transition tracker (s21): the (from → to)
     * event-pair emitter behind a live Markov view of user behavior —
@@ -282,35 +292,29 @@ object EventStream {
     * carries across batch boundaries. */
   def runTransitions(spark: SparkSession, dir: String, queryName: String,
                      glob: String = "events.parquet",
-                     statePartitions: Option[Int] = Some(4),
-                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val out = readEvents(session, dir, glob, maxFilesPerTrigger)
-      .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
-      .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, String), (Long, String, String)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, Long, Long)],
-         state: GroupState[(Long, Long, String)]) =>
-          var (lastTsm, lastId, lastTyp) = state.getOption.getOrElse((0L, 0L, ""))
-          val fired = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
-          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, typ, tsm, eid) =>
-            if (lastTyp.nonEmpty) fired += ((uid, lastTyp, typ))
-            lastTsm = tsm; lastId = eid; lastTyp = typ
-          }
-          state.update((lastTsm, lastId, lastTyp))
-          fired.iterator
-      }
-      .toDF("user_id", "from_type", "to_type")
-    out.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      readEvents(session, dir, glob, maxFilesPerTrigger)
+        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
+          expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
+        .as[(Long, String, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[(Long, Long, String), (Long, String, String)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (uid: Long, rows: Iterator[(Long, String, Long, Long)],
+           state: GroupState[(Long, Long, String)]) =>
+            var (lastTsm, lastId, lastTyp) = state.getOption.getOrElse((0L, 0L, ""))
+            val fired = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
+            rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, typ, tsm, eid) =>
+              if (lastTyp.nonEmpty) fired += ((uid, lastTyp, typ))
+              lastTsm = tsm; lastId = eid; lastTyp = typ
+            }
+            state.update((lastTsm, lastId, lastTyp))
+            fired.iterator
+        }
+        .toDF("user_id", "from_type", "to_type")
+    }
 
   /** Streaming SCD Type-2 materialization (s27): x143's versioned
     * history maintained AT ARRIVAL — the CDC shape: each user's
@@ -327,47 +331,41 @@ object EventStream {
     * batch windows bitwise. */
   def runScd2(spark: SparkSession, dir: String, queryName: String,
               glob: String = "events.parquet",
-              statePartitions: Option[Int] = Some(4),
-              maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val out = readEvents(session, dir, glob, maxFilesPerTrigger)
-      .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
-      .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, String, Long, Long),
-        (Long, Long, String, Long, Long, Long, Boolean)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, Long, Long)],
-         state: GroupState[(Long, String, Long, Long)]) =>
-          var (version, curType, validFrom, nEvents) =
-            state.getOption.getOrElse((0L, "", 0L, 0L))
-          val fired = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, String, Long, Long, Long, Boolean)]
-          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, typ, tsm, _) =>
-            if (version == 0L) {
-              version = 1L; curType = typ; validFrom = tsm; nEvents = 1L
-            } else if (typ == curType) {
-              nEvents += 1L
-            } else {
-              fired += ((uid, version, curType, validFrom, tsm, nEvents, false))
-              version += 1L; curType = typ; validFrom = tsm; nEvents = 1L
+              maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      readEvents(session, dir, glob, maxFilesPerTrigger)
+        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
+          expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
+        .as[(Long, String, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[(Long, String, Long, Long),
+          (Long, Long, String, Long, Long, Long, Boolean)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (uid: Long, rows: Iterator[(Long, String, Long, Long)],
+           state: GroupState[(Long, String, Long, Long)]) =>
+            var (version, curType, validFrom, nEvents) =
+              state.getOption.getOrElse((0L, "", 0L, 0L))
+            val fired = scala.collection.mutable.ArrayBuffer
+              .empty[(Long, Long, String, Long, Long, Long, Boolean)]
+            rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, typ, tsm, _) =>
+              if (version == 0L) {
+                version = 1L; curType = typ; validFrom = tsm; nEvents = 1L
+              } else if (typ == curType) {
+                nEvents += 1L
+              } else {
+                fired += ((uid, version, curType, validFrom, tsm, nEvents, false))
+                version += 1L; curType = typ; validFrom = tsm; nEvents = 1L
+              }
             }
-          }
-          if (version > 0L) // re-emit the open run's running row
-            fired += ((uid, version, curType, validFrom, -1L, nEvents, true))
-          state.update((version, curType, validFrom, nEvents))
-          fired.iterator
-      }
-      .toDF("user_id", "version", "event_type", "valid_from_us",
-        "valid_to_us", "n_events", "is_current")
-    out.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            if (version > 0L) // re-emit the open run's running row
+              fired += ((uid, version, curType, validFrom, -1L, nEvents, true))
+            state.update((version, curType, validFrom, nEvents))
+            fired.iterator
+        }
+        .toDF("user_id", "version", "event_type", "valid_from_us",
+          "valid_to_us", "n_events", "is_current")
+    }
 
   /** Streaming LATENESS audit (s24): x123's out-of-order arrival
     * measurement maintained AT ARRIVAL — the live read that sizes
@@ -387,46 +385,39 @@ object EventStream {
     * user into x123's one-row summary. */
   def runLatenessAudit(spark: SparkSession, dir: String, queryName: String,
                        glob: String = "events.parquet",
-                       statePartitions: Option[Int] = Some(4),
-                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val out = readEvents(session, dir, glob, maxFilesPerTrigger)
-      .select(col("user_id").cast("long").as("user_id"),
-        expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long, Long), (Long, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (maxTsm, nEv, nLate, worst) =
-            state.getOption.getOrElse((Long.MinValue, 0L, 0L, 0L))
-          rows.toSeq.sortBy(_._3).foreach { case (_, tsm, _) =>
-            nEv += 1
-            if (maxTsm != Long.MinValue && tsm < maxTsm) {
-              nLate += 1
-              worst = math.max(worst, Math.floorDiv(maxTsm - tsm, 1000000L))
+                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      readEvents(session, dir, glob, maxFilesPerTrigger)
+        .select(col("user_id").cast("long").as("user_id"),
+          expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
+        .as[(Long, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[(Long, Long, Long, Long), (Long, Long, Long, Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (uid: Long, rows: Iterator[(Long, Long, Long)],
+           state: GroupState[(Long, Long, Long, Long)]) =>
+            var (maxTsm, nEv, nLate, worst) =
+              state.getOption.getOrElse((Long.MinValue, 0L, 0L, 0L))
+            rows.toSeq.sortBy(_._3).foreach { case (_, tsm, _) =>
+              nEv += 1
+              if (maxTsm != Long.MinValue && tsm < maxTsm) {
+                nLate += 1
+                worst = math.max(worst, Math.floorDiv(maxTsm - tsm, 1000000L))
+              }
+              maxTsm = math.max(maxTsm, tsm)
             }
-            maxTsm = math.max(maxTsm, tsm)
-          }
-          state.update((maxTsm, nEv, nLate, worst))
-          Iterator((uid, nEv, nLate, worst))
-      }
-      .toDF("user_id", "n_events", "n_late", "worst_delay_s")
-    out.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            state.update((maxTsm, nEv, nLate, worst))
+            Iterator((uid, nEv, nLate, worst))
+        }
+        .toDF("user_id", "n_events", "n_late", "worst_delay_s")
+    }
 
   /** x123's one-row summary from the s24 sink: the latest emission per
     * user (the one with max n_events — totals are monotone) aggregated
     * once. */
-  def latenessTotals(session: SparkSession, sinkTable: String): DataFrame =
-    session.table(sinkTable)
-      .groupBy("user_id")
+  def latenessTotals(sink: DataFrame): DataFrame =
+    sink.groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_late"), col("worst_delay_s"))).as("m"))
       .agg(sum(col("m.n_events")).cast("long").as("n_events"),
         sum(col("m.n_late")).cast("long").as("n_late"),
@@ -457,43 +448,37 @@ object EventStream {
     * to carry slots across batches by the multi-batch spec. */
   def runFunnel(spark: SparkSession, dir: String, queryName: String,
                 glob: String = "events.parquet",
-                statePartitions: Option[Int] = Some(4),
-                maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val out = readEvents(session, dir, glob, maxFilesPerTrigger)
-      .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
-      .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), (Long, String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, String, Long, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (t1, t2, t3) = state.getOption.getOrElse((0L, 0L, 0L))
-          val fired = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, typ, tsm, _) =>
-            typ match {
-              case "view" if t1 == 0L =>
-                t1 = tsm; fired += ((uid, "view", tsm))
-              case "click" if t1 != 0L && tsm > t1 && t2 == 0L =>
-                t2 = tsm; fired += ((uid, "click_after_view", tsm))
-              case "purchase" if t2 != 0L && tsm > t2 && t3 == 0L =>
-                t3 = tsm; fired += ((uid, "purchase_after_click", tsm))
-              case _ =>
+                maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      readEvents(session, dir, glob, maxFilesPerTrigger)
+        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
+          expr("unix_micros(ts)").as("tsm"), col("event_id").cast("long").as("event_id"))
+        .as[(Long, String, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[(Long, Long, Long), (Long, String, Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (uid: Long, rows: Iterator[(Long, String, Long, Long)],
+           state: GroupState[(Long, Long, Long)]) =>
+            var (t1, t2, t3) = state.getOption.getOrElse((0L, 0L, 0L))
+            val fired = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
+            rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, typ, tsm, _) =>
+              typ match {
+                case "view" if t1 == 0L =>
+                  t1 = tsm; fired += ((uid, "view", tsm))
+                case "click" if t1 != 0L && tsm > t1 && t2 == 0L =>
+                  t2 = tsm; fired += ((uid, "click_after_view", tsm))
+                case "purchase" if t2 != 0L && tsm > t2 && t3 == 0L =>
+                  t3 = tsm; fired += ((uid, "purchase_after_click", tsm))
+                case _ =>
+              }
             }
-          }
-          state.update((t1, t2, t3))
-          fired.iterator
-      }
-      .toDF("user_id", "stage", "tsm")
-      .select(col("user_id"), col("stage"), expr("timestamp_micros(tsm)").as("ts"))
-    out.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            state.update((t1, t2, t3))
+            fired.iterator
+        }
+        .toDF("user_id", "stage", "tsm")
+        .select(col("user_id"), col("stage"), expr("timestamp_micros(tsm)").as("ts"))
+    }
 
   /** Watermarked tumbling aggregation: count + sum(value cents) per
     * (1-hour window, event_type) — the streaming twin of q10_events_tumbling. */
@@ -506,24 +491,12 @@ object EventStream {
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
 
   /** Run the streaming pipeline to completion over the (finite) events dir —
-    * the local-smoke form: memory sink + AvailableNow. Returns the running
-    * query; read results from `session.table(queryName)`.
-    *
-    * `statePartitions` sizes the stateful-agg shuffle: state cardinality is
-    * windows × event types (thousands), so the session default (one state
-    * store per shuffle partition, each with its own checkpoint files) is
-    * waste — the override runs in a child session so concurrent batch
-    * queries on the parent session are untouched. */
-  def runOnce(spark: SparkSession, dir: String, queryName: String = "events_agg",
-              statePartitions: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    tumblingAgg(readEvents(session, dir))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    * the local-smoke form: memory sink + AvailableNow ([[replay]]). State
+    * cardinality is windows × event types (thousands). */
+  def runOnce(spark: SparkSession, dir: String, queryName: String = "events_agg"): StreamingQuery =
+    replay(spark, queryName, "complete") { session =>
+      tumblingAgg(readEvents(session, dir))
+    }
 
   /** Streaming sessionization with CUSTOM state (flatMapGroupsWithState):
     * per-user session/event counting with a `gapSeconds` inactivity split —
@@ -628,35 +601,27 @@ object EventStream {
     * emission must be selected (`n_events` strictly increases per emission,
     * so max n_events is the latest), and the per-generation finals SUM to
     * the user total (each generation counts disjoint sessions/events). */
-  def sessionTotals(session: SparkSession, sinkTable: String): DataFrame =
-    session.table(sinkTable)
-      .groupBy("user_id", "gen")
+  def sessionTotals(sink: DataFrame): DataFrame =
+    sink.groupBy("user_id", "gen")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("m"))
       .groupBy("user_id")
       .agg(sum(col("m.n_sessions")).as("n_sessions"),
         sum(col("m.n_events")).as("n_events"))
 
   /** Run the sessionization stream to completion over the (finite) events
-    * dir: memory sink (update mode), AvailableNow. See [[runOnce]] for the
-    * statePartitions rationale. */
+    * dir: memory sink (update mode), AvailableNow. */
   def runSessionize(spark: SparkSession, dir: String, queryName: String = "events_sessions",
-                    statePartitions: Option[Int] = None,
                     glob: String = "events.parquet",
                     maxFilesPerTrigger: Option[Int] = None,
                     evictAfterGap: Boolean = false,
-                    watermarkDelay: String = "10 minutes"): StreamingQuery = {
+                    watermarkDelay: String = "10 minutes"): StreamingQuery =
     // Eviction is observable behavior here: the EventTimeTimeout fires in a
     // no-data batch (emitting each generation's final totals), so those
     // batches must survive when evictAfterGap is on.
-    val session = replaySession(spark, statePartitions, keepNoDataBatches = evictAfterGap)
-    sessionize(readEvents(session, dir, glob, maxFilesPerTrigger),
-      evictAfterGap = evictAfterGap, watermarkDelay = watermarkDelay)
-      .writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    replay(spark, queryName, "update", keepNoDataBatches = evictAfterGap) { session =>
+      sessionize(readEvents(session, dir, glob, maxFilesPerTrigger),
+        evictAfterGap = evictAfterGap, watermarkDelay = watermarkDelay)
+    }
 
   /** NATIVE session-window aggregation (s23) — Spark's built-in
     * `session_window(ts, gap)` operator, the declarative twin of
@@ -673,27 +638,20 @@ object EventStream {
     * volume. */
   def runSessionWindow(spark: SparkSession, dir: String,
                        queryName: String = "events_session_window",
-                       statePartitions: Option[Int] = None,
                        glob: String = "events.parquet",
-                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    readEvents(session, dir, glob, maxFilesPerTrigger)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("w_start"),
-        col("n_events"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "complete") { session =>
+      readEvents(session, dir, glob, maxFilesPerTrigger)
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("session_window.start").as("w_start"),
+          col("n_events"))
+    }
 
   /** Per-user totals from the s23 sink: one row per merged window in the
     * single-batch replay, so sessions = window count, events = their sum. */
-  def sessionWindowTotals(session: SparkSession, sinkTable: String): DataFrame =
-    session.table(sinkTable)
-      .groupBy("user_id")
+  def sessionWindowTotals(sink: DataFrame): DataFrame =
+    sink.groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
 
   /** Stream-STREAM interval join (click→purchase attribution): purchases
@@ -764,38 +722,25 @@ object EventStream {
     * watermark and evicts left state (see [[attributionJoinOuter]]). */
   def runAttributionOuter(spark: SparkSession, dir: String,
                           queryName: String = "events_attribution_outer",
-                          statePartitions: Option[Int] = None,
                           glob: String = "events.parquet",
-                          maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions, keepNoDataBatches = true)
-    attributionJoinOuter(readEvents(session, dir, glob, maxFilesPerTrigger))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                          maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "append", keepNoDataBatches = true) { session =>
+      attributionJoinOuter(readEvents(session, dir, glob, maxFilesPerTrigger))
+    }
 
   /** Run the attribution join to completion over the (finite) events dir:
-    * append-mode memory sink, AvailableNow. See [[runOnce]] for the
-    * statePartitions rationale (state here is per-user click/purchase
-    * buffers within the watermark horizon). */
+    * append-mode memory sink, AvailableNow. State is per-user click/purchase
+    * buffers within the watermark horizon. */
   def runAttribution(spark: SparkSession, dir: String,
                      queryName: String = "events_attribution",
-                     statePartitions: Option[Int] = None,
                      glob: String = "events.parquet",
-                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     // Inner join: matches emit in the data batch where both sides are
     // present; the trailing no-data batch only evicts state, so it's safe
     // to drop for a bounded replay.
-    val session = replaySession(spark, statePartitions)
-    attributionJoin(readEvents(session, dir, glob, maxFilesPerTrigger))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    replay(spark, queryName, "append") { session =>
+      attributionJoin(readEvents(session, dir, glob, maxFilesPerTrigger))
+    }
 
   /** Stream-static enrichment join + aggregate: the events stream joined to
     * a static dimension (plain equi-join per micro-batch — the static side
@@ -803,8 +748,8 @@ object EventStream {
     * UNHINTED on purpose: customer is a corpus-scaling table (ScaleUp
     * clones it; TPC-H grows it with SF), so a broadcast hint here is the
     * deferred-OOM class the plan guard exists for — r14's new streaming
-    * guard caught exactly that hint on this join. AQE still broadcasts the
-    * dim per batch while it measures small; at 100 TB the join shuffles on
+    * guard caught exactly that hint on this join. The planner still
+    * broadcasts the dim while its size estimate is small; at 100 TB the join shuffles on
     * user_id like any fact-dim join too big to ship. */
   def enrichedAgg(events: DataFrame, customer: DataFrame): DataFrame =
     events.join(
@@ -816,17 +761,12 @@ object EventStream {
 
   /** Run the enrichment stream to completion (complete mode, memory sink —
     * the aggregate is segment-count sized). */
-  def runEnriched(spark: SparkSession, dir: String, queryName: String = "events_enriched",
-                  statePartitions: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    val customer = session.read.parquet(s"$dir/customer.parquet")
-    enrichedAgg(readEvents(session, dir), customer)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  def runEnriched(spark: SparkSession, dir: String,
+                  queryName: String = "events_enriched"): StreamingQuery =
+    replay(spark, queryName, "complete") { session =>
+      val customer = session.read.parquet(s"$dir/customer.parquet")
+      enrichedAgg(readEvents(session, dir), customer)
+    }
 
   /** Streaming deduplication chained into a stateful aggregate: watermarked
     * `dropDuplicates` keeps one row per (user_id, event_type) — dedup state
@@ -840,20 +780,14 @@ object EventStream {
 
   /** Run the streaming-dedup pipeline to completion (complete mode). */
   def runDistinctUsers(spark: SparkSession, dir: String, queryName: String = "events_dedup",
-                       statePartitions: Option[Int] = None,
                        glob: String = "events.parquet",
-                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     // Complete-mode output: dedup-state eviction in the trailing no-data
     // batch never changes the emitted aggregate, only trims state the
     // replay is about to discard.
-    val session = replaySession(spark, statePartitions)
-    distinctUsersPerType(readEvents(session, dir, glob, maxFilesPerTrigger))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    replay(spark, queryName, "complete") { session =>
+      distinctUsersPerType(readEvents(session, dir, glob, maxFilesPerTrigger))
+    }
 
   /** foreachBatch sink with EXACTLY-ONCE batch effects via the
     * [[ExactlyOnceSink]] txn protocol: a replayed micro-batch (crash between
@@ -908,26 +842,20 @@ object EventStream {
   def runCmsMaintain(spark: SparkSession, dir: String, queryName: String,
                      depth: Int, width: Int,
                      glob: String = "documents.parquet",
-                     statePartitions: Option[Int] = Some(4),
-                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    // The file source splits by FILE and documents.parquet is one
-    // single-row-group file — without a repartition the tokenize +
-    // depth-way cell explode runs in ONE task per micro-batch (the s06
-    // lesson). The shuffle moves only raw doc text; the per-task partial
-    // aggregation then caps each task's output at depth*width cells.
-    val cells = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16)
-      .select(explode(split(col("text"), " ")).as("token"))
-      .select(posexplode(transform(sequence(lit(0), lit(depth - 1)),
-        j => graft.ops.Sketches.bucket(col("token"), j, width))).as(Seq("j", "bucket")))
-      .groupBy("j", "bucket").agg(count(lit(1)).as("bc"))
-    cells.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      // The file source splits by FILE and documents.parquet is one
+      // single-row-group file — without a repartition the tokenize +
+      // depth-way cell explode runs in ONE task per micro-batch (the s06
+      // lesson). The shuffle moves only raw doc text; the per-task partial
+      // aggregation then caps each task's output at depth*width cells.
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16)
+        .select(explode(split(col("text"), " ")).as("token"))
+        .select(posexplode(transform(sequence(lit(0), lit(depth - 1)),
+          j => graft.ops.Sketches.bucket(col("token"), j, width))).as(Seq("j", "bucket")))
+        .groupBy("j", "bucket").agg(count(lit(1)).as("bc"))
+    }
 
   /** Streaming maintenance of the x76 histogram-quantile sketch: each doc
     * contributes one histogram cell (source, bucket) AND one value cell
@@ -939,23 +867,17 @@ object EventStream {
     * exactly as the batch query does (oracle: x76's SQL verbatim). */
   def runHistMaintain(spark: SparkSession, dir: String, queryName: String,
                       glob: String = "documents.parquet",
-                      statePartitions: Option[Int] = Some(4),
-                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    val cells = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
-      .select(col("source"), size(split(col("text"), " ")).as("nt"))
-      .select(col("source"), explode(array(
-        struct(lit("h").as("kind"), least(col("nt") / 8, lit(63)).cast("long").as("key")),
-        struct(lit("v").as("kind"), col("nt").cast("long").as("key")))).as("c"))
-      .groupBy(col("source"), col("c.kind").as("kind"), col("c.key").as("key"))
-      .agg(count(lit(1)).as("cnt"))
-    cells.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
+        .select(col("source"), size(split(col("text"), " ")).as("nt"))
+        .select(col("source"), explode(array(
+          struct(lit("h").as("kind"), least(col("nt") / 8, lit(63)).cast("long").as("key")),
+          struct(lit("v").as("kind"), col("nt").cast("long").as("key")))).as("c"))
+        .groupBy(col("source"), col("c.kind").as("kind"), col("c.key").as("key"))
+        .agg(count(lit(1)).as("cnt"))
+    }
 
   /** Streaming greedy sequence packing (s13): the x25 batch operator run as
     * a STATEFUL stream — documents arrive through a file stream and each
@@ -977,36 +899,30 @@ object EventStream {
   def runPackingMaintain(spark: SparkSession, dir: String, queryName: String,
                          binTokens: Long = 2048,
                          glob: String = "documents.parquet",
-                         statePartitions: Option[Int] = Some(4),
-                         maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val assigned = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
-      .select(col("lang"), col("doc_id").cast("long").as("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("nt"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, Long, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (lang: String, rows: Iterator[(String, Long, Long)], state: GroupState[Long]) =>
-          var before = state.getOption.getOrElse(0L)
-          // sort inside the group: micro-batch-local, bounded by batch size
-          val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nt) =>
-            val bin = before / binTokens
-            before += nt
-            (lang, docId, nt, bin)
-          }
-          state.update(before)
-          out.iterator
-      }
-      .toDF("lang", "doc_id", "n_tokens", "bin_id")
-    assigned.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                         maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
+        .select(col("lang"), col("doc_id").cast("long").as("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("nt"))
+        .as[(String, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[Long, (String, Long, Long, Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (lang: String, rows: Iterator[(String, Long, Long)], state: GroupState[Long]) =>
+            var before = state.getOption.getOrElse(0L)
+            // sort inside the group: micro-batch-local, bounded by batch size
+            val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nt) =>
+              val bin = before / binTokens
+              before += nt
+              (lang, docId, nt, bin)
+            }
+            state.update(before)
+            out.iterator
+        }
+        .toDF("lang", "doc_id", "n_tokens", "bin_id")
+    }
 
   /** Streaming per-source token-quota admission (s15): x31's budget gate
     * run as the unbounded ingest control it is in production — every doc
@@ -1029,37 +945,31 @@ object EventStream {
     * streaming query, so the budget function must be total). */
   def runQuotaMaintain(spark: SparkSession, dir: String, queryName: String,
                        glob: String = "documents.parquet",
-                       statePartitions: Option[Int] = Some(4),
                        maxFilesPerTrigger: Option[Int] = None,
-                       budgetOf: String => Long = defaultSourceBudget): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val gated = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
-      .select(col("source"), col("doc_id").cast("long").as("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("nt"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, Long, Long, Boolean)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, Long, Long)], state: GroupState[Long]) =>
-          val budget = budgetOf(source)
-          var before = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nt) =>
-            val accepted = before < budget
-            before += nt
-            (source, docId, nt, accepted)
-          }
-          state.update(before)
-          out.iterator
-      }
-      .toDF("source", "doc_id", "n_tokens", "accepted")
-    gated.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       budgetOf: String => Long = defaultSourceBudget): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
+        .select(col("source"), col("doc_id").cast("long").as("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("nt"))
+        .as[(String, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[Long, (String, Long, Long, Boolean)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (source: String, rows: Iterator[(String, Long, Long)], state: GroupState[Long]) =>
+            val budget = budgetOf(source)
+            var before = state.getOption.getOrElse(0L)
+            val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nt) =>
+              val accepted = before < budget
+              before += nt
+              (source, docId, nt, accepted)
+            }
+            state.update(before)
+            out.iterator
+        }
+        .toDF("source", "doc_id", "n_tokens", "accepted")
+    }
 
   /** Composed streaming INGEST GATE (s16): the front door a training-data
     * ingest actually runs — s10's quality routing and s15's token quota in
@@ -1073,43 +983,37 @@ object EventStream {
     * honest arrival-order gating). */
   def runIngestGate(spark: SparkSession, dir: String, queryName: String,
                     glob: String = "documents.parquet",
-                    statePartitions: Option[Int] = Some(4),
                     maxFilesPerTrigger: Option[Int] = None,
-                    budgetOf: String => Long = defaultSourceBudget): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val toks = split(col("text"), " ")
-    val gated = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
-      .select(col("source"), col("doc_id").cast("long").as("doc_id"),
-        size(toks).cast("long").as("nt"),
-        size(filter(toks, t => t.isin("the", "a"))).cast("long").as("ns"))
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, Long, Long, String, Boolean)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, Long, Long, Long)], state: GroupState[Long]) =>
-          val budget = budgetOf(source)
-          var before = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nt, ns) =>
-            val disposition =
-              if (nt < 15) "short"
-              else if (ns * 25 < nt) "low_stopword"
-              else "keep"
-            val accepted = disposition == "keep" && before < budget
-            if (disposition == "keep") before += nt
-            (source, docId, nt, disposition, accepted)
-          }
-          state.update(before)
-          out.iterator
-      }
-      .toDF("source", "doc_id", "n_tokens", "disposition", "accepted")
-    gated.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                    budgetOf: String => Long = defaultSourceBudget): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      val toks = split(col("text"), " ")
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
+        .select(col("source"), col("doc_id").cast("long").as("doc_id"),
+          size(toks).cast("long").as("nt"),
+          size(filter(toks, t => t.isin("the", "a"))).cast("long").as("ns"))
+        .as[(String, Long, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[Long, (String, Long, Long, String, Boolean)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (source: String, rows: Iterator[(String, Long, Long, Long)], state: GroupState[Long]) =>
+            val budget = budgetOf(source)
+            var before = state.getOption.getOrElse(0L)
+            val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nt, ns) =>
+              val disposition =
+                if (nt < 15) "short"
+                else if (ns * 25 < nt) "low_stopword"
+                else "keep"
+              val accepted = disposition == "keep" && before < budget
+              if (disposition == "keep") before += nt
+              (source, docId, nt, disposition, accepted)
+            }
+            state.update(before)
+            out.iterator
+        }
+        .toDF("source", "doc_id", "n_tokens", "disposition", "accepted")
+    }
 
   /** Streaming weighted-sample maintenance (s14): x81's priority sample
     * kept current as docs arrive, with the CUSTOM bounded-heap aggregate
@@ -1124,40 +1028,20 @@ object EventStream {
   def runWeightedSampleMaintain(spark: SparkSession, dir: String, queryName: String,
                                 k: Int = 25,
                                 glob: String = "documents.parquet",
-                                statePartitions: Option[Int] = Some(4),
-                                maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    val top = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
-      .select(col("source"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("w"),
-        graft.ops.Sketches.bucket(col("doc_id").cast("string"), lit("wsmp"), 65536).as("h"))
-      .withColumn("priority", col("w") * 65536.0 / (col("h") + 1))
-      .groupBy("source")
-      .agg(graft.ops.TopK.topk_min(
-        struct((-col("priority")).as("np"), col("doc_id"), col("w"), col("priority")),
-        k).as("top"))
-    top.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                                maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16) // single-file source: restore tokenize parallelism (s06 lesson)
+        .select(col("source"), col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("w"),
+          graft.ops.Sketches.bucket(col("doc_id").cast("string"), lit("wsmp"), 65536).as("h"))
+        .withColumn("priority", col("w") * 65536.0 / (col("h") + 1))
+        .groupBy("source")
+        .agg(graft.ops.TopK.topk_min(
+          struct((-col("priority")).as("np"), col("doc_id"), col("w"), col("priority")),
+          k).as("top"))
+    }
 
-  /** Streaming span-decontamination gate (s17): x95's longest-verbatim-run
-    * semantics as the admission check a training-data ingest runs AT
-    * ARRIVAL — every incoming doc is scored against the benchmark suite
-    * and quarantined when any shared verbatim span reaches 13 tokens.
-    *
-    * The whole check is ONE stateless map over the stream: the benchmark's
-    * per-item distinct 5-gram sets ride a single broadcast row
-    * (eval-sized, the x23 posture), and per (doc, benchmark item) the hit
-    * bitmap AND its longest consecutive run fold IN-ROW over the doc's
-    * positional grams (`aggregate` with a (current, best) struct
-    * accumulator) — no explode, no shuffle, no state store, no watermark.
-    * Batch x95 keeps the per-pair audit detail; this gate emits the
-    * per-doc DECISION: how many benchmark items it touches, its worst
-    * span, quarantine yes/no — one row per arriving doc, append mode. */
   /** Streaming MinHash-LSH near-dup ADMISSION gate (s25): the composed
     * operator the batch incremental dedup (x43/s08) and the exact
     * streaming dedup (s18) bracket but neither provides — a SELF-feeding
@@ -1189,94 +1073,95 @@ object EventStream {
   def runLshAdmission(spark: SparkSession, dir: String, queryName: String,
                       bandsOf: DataFrame => DataFrame,
                       glob: String = "documents.parquet",
-                      statePartitions: Option[Int] = Some(4),
-                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val banded = bandsOf(
-      streamReader(session, dir, glob, maxFilesPerTrigger)
-        .repartition(16)) // single-file source: restore minhash parallelism
-      .select(col("band").cast("int").as("band"), col("band_hash"),
-        col("doc_id").cast("long").as("doc_id"))
-      .as[(Int, String, Long)]
-    val verdicts = banded
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[Long, (Long, Int, Boolean, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_: (Int, String), rows: Iterator[(Int, String, Long)], state: GroupState[Long]) =>
-          val ids = rows.map(_._3).toSeq.sorted
-          val prior = state.getOption            // owner from earlier batches
-          val owner = prior.getOrElse(ids.head)  // else batch min claims it
-          if (prior.isEmpty) state.update(owner) // write-once
-          ids.iterator.map { d =>
-            val blocked = d != owner
-            (d, 0, blocked, if (blocked) owner else -1L)
-          }
-      }
-      .map { case (d, _, blocked, blocker) => (d, blocked, blocker) }
-      .toDF("doc_id", "blocked", "blocker")
-    verdicts.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      val banded = bandsOf(
+        streamReader(session, dir, glob, maxFilesPerTrigger)
+          .repartition(16)) // single-file source: restore minhash parallelism
+        .select(col("band").cast("int").as("band"), col("band_hash"),
+          col("doc_id").cast("long").as("doc_id"))
+        .as[(Int, String, Long)]
+      banded
+        .groupByKey(r => (r._1, r._2))
+        .flatMapGroupsWithState[Long, (Long, Int, Boolean, Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (_: (Int, String), rows: Iterator[(Int, String, Long)], state: GroupState[Long]) =>
+            val ids = rows.map(_._3).toSeq.sorted
+            val prior = state.getOption            // owner from earlier batches
+            val owner = prior.getOrElse(ids.head)  // else batch min claims it
+            if (prior.isEmpty) state.update(owner) // write-once
+            ids.iterator.map { d =>
+              val blocked = d != owner
+              (d, 0, blocked, if (blocked) owner else -1L)
+            }
+        }
+        .map { case (d, _, blocked, blocker) => (d, blocked, blocker) }
+        .toDF("doc_id", "blocked", "blocker")
+    }
 
+  /** Streaming span-decontamination gate (s17): x95's longest-verbatim-run
+    * semantics as the admission check a training-data ingest runs AT
+    * ARRIVAL — every incoming doc is scored against the benchmark suite
+    * and quarantined when any shared verbatim span reaches 13 tokens.
+    *
+    * The whole check is ONE stateless map over the stream: the benchmark's
+    * per-item distinct 5-gram sets ride a single broadcast row
+    * (eval-sized, the x23 posture), and per (doc, benchmark item) the hit
+    * bitmap AND its longest consecutive run fold IN-ROW over the doc's
+    * positional grams (`aggregate` with a (current, best) struct
+    * accumulator) — no explode, no shuffle, no state store, no watermark.
+    * Batch x95 keeps the per-pair audit detail; this gate emits the
+    * per-doc DECISION: how many benchmark items it touches, its worst
+    * span, quarantine yes/no — one row per arriving doc, append mode. */
   def runDecontamGate(spark: SparkSession, dir: String, queryName: String,
                       glob: String = "documents.parquet",
                       benchBelow: Long = 10L,
-                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    // Grams hash to 64-bit xxhash64, not md5 strings: only gram EQUALITY
-    // matters here (the decision columns are counts/runs, so the oracle
-    // pins them regardless of the internal hash), and the per-doc
-    // membership fold compares each doc gram against every benchmark gram
-    // — long compares make that scan ~2x cheaper than 32-char strings.
-    def gramsOf(tk: Column): Column =
-      when(size(tk) >= 5, transform(sequence(lit(1), size(tk) - 4),
-        i => xxhash64(concat_ws(" ", (0 until 5).map(o => element_at(tk, i + o)): _*))))
-        .otherwise(array().cast("array<bigint>"))
-    // Static side: the benchmark's (id, distinct gram set) structs as ONE
-    // broadcast row — at real scale this is the eval suite, not the corpus.
-    val benchDocs = session.read.parquet(new java.io.File(dir, glob).getPath)
-      .filter(col("doc_id") < benchBelow)
-      .select(col("doc_id").cast("long").as("bid"),
-        array_distinct(gramsOf(split(col("text"), " "))).as("bset"))
-    val bench = benchDocs
-      .agg(collect_list(struct(col("bid"), col("bset"))).as("bs"))
-    // Fused verdict kernel (r16): the former union-prefilter +
-    // per-item array_intersect + longestRun `aggregate` HOF stack
-    // evaluated interpreted per (gram × item) with a linear array_contains
-    // scan per probe; [[graft.ops.DecontamVerdictExpr]] computes the
-    // identical (hits, longest-run) pair — same xxhash64 grams, same
-    // union short-circuit, same per-item gating and degenerate (0, 0)
-    // results — with each item's gram set loaded ONCE per broadcast value
-    // into an open-addressing long set. The 10× stress had s17 at 4.8×
-    // corpus-linear, dominated by exactly this fold.
-    val v = graft.ops.DecontamVerdictExpr.decontam_verdict(
-      split(col("text"), " "), col("bs"))
-    val out = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .filter(col("doc_id") >= benchBelow)
-      .repartition(16) // single-file source: restore scan parallelism (s06 lesson)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .crossJoin(broadcast(bench))
-      // the kernel is aliased in its OWN projection: CollapseProject does
-      // not inline a non-cheap expression referenced twice, so it runs
-      // once per row (guide §4.4's duplication hazard)
-      .select(col("doc_id"), v.as("__v"))
-      .select(col("doc_id"), col("__v.hits").as("__h"), col("__v.mr").as("__mr"))
-      .select(col("doc_id"), col("__h").cast("long").as("n_bench_hits"),
-        when(col("__mr") > 0, col("__mr") + 4).otherwise(lit(0))
-          .cast("long").as("max_span_tokens"),
-        (col("__mr") >= 9).as("quarantine"))
-    out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "append") { session =>
+      // Grams hash to 64-bit xxhash64, not md5 strings: only gram EQUALITY
+      // matters here (the decision columns are counts/runs, so the oracle
+      // pins them regardless of the internal hash), and the per-doc
+      // membership fold compares each doc gram against every benchmark gram
+      // — long compares make that scan ~2x cheaper than 32-char strings.
+      def gramsOf(tk: Column): Column =
+        when(size(tk) >= 5, transform(sequence(lit(1), size(tk) - 4),
+          i => xxhash64(concat_ws(" ", (0 until 5).map(o => element_at(tk, i + o)): _*))))
+          .otherwise(array().cast("array<bigint>"))
+      // Static side: the benchmark's (id, distinct gram set) structs as ONE
+      // broadcast row — at real scale this is the eval suite, not the corpus.
+      val benchDocs = session.read.parquet(new java.io.File(dir, glob).getPath)
+        .filter(col("doc_id") < benchBelow)
+        .select(col("doc_id").cast("long").as("bid"),
+          array_distinct(gramsOf(split(col("text"), " "))).as("bset"))
+      val bench = benchDocs
+        .agg(collect_list(struct(col("bid"), col("bset"))).as("bs"))
+      // Fused verdict kernel (r16): the former union-prefilter +
+      // per-item array_intersect + longestRun `aggregate` HOF stack
+      // evaluated interpreted per (gram × item) with a linear array_contains
+      // scan per probe; [[graft.ops.DecontamVerdictExpr]] computes the
+      // identical (hits, longest-run) pair — same xxhash64 grams, same
+      // union short-circuit, same per-item gating and degenerate (0, 0)
+      // results — with each item's gram set loaded ONCE per broadcast value
+      // into an open-addressing long set. The 10× stress had s17 at 4.8×
+      // corpus-linear, dominated by exactly this fold.
+      val v = graft.ops.DecontamVerdictExpr.decontam_verdict(
+        split(col("text"), " "), col("bs"))
+      streamReader(session, dir, glob, maxFilesPerTrigger)
+        .filter(col("doc_id") >= benchBelow)
+        .repartition(16) // single-file source: restore scan parallelism (s06 lesson)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+        .crossJoin(broadcast(bench))
+        // the kernel is aliased in its OWN projection: CollapseProject does
+        // not inline a non-cheap expression referenced twice, so it runs
+        // once per row (guide §4.4's duplication hazard)
+        .select(col("doc_id"), v.as("__v"))
+        .select(col("doc_id"), col("__v.hits").as("__h"), col("__v.mr").as("__mr"))
+        .select(col("doc_id"), col("__h").cast("long").as("n_bench_hits"),
+          when(col("__mr") > 0, col("__mr") + 4).otherwise(lit(0))
+            .cast("long").as("max_span_tokens"),
+          (col("__mr") >= 9).as("quarantine"))
+    }
 
   /** KMV sketch size shared by [[runKmvDistinct]], its s28 read-back, and
     * the s28 oracle SQL (r14 ADVICE: the three sites hard-coded 64/63
@@ -1305,43 +1190,37 @@ object EventStream {
   def runKmvDistinct(spark: SparkSession, dir: String, queryName: String,
                      k: Int = KmvK,
                      glob: String = "documents.parquet",
-                     statePartitions: Option[Int] = Some(4),
-                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = replaySession(spark, statePartitions)
-    import session.implicits._
-    val hashed = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .repartition(16) // single-file source: restore scan parallelism (s06 lesson)
-      .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .select(col("source"),
-        conv(substring(md5(concat(lit("kmv|"), col("tok"))), 1, 15), 16, 10)
-          .cast("long").as("hv"))
-      .as[(String, Long)]
-    val out = hashed.groupByKey(_._1)
-      .flatMapGroupsWithState[(Array[Long], Long), (String, Long, Int, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(String, Long)], state: GroupState[(Array[Long], Long)]) =>
-          val (prior, seen) = state.getOption.getOrElse((Array.empty[Long], 0L))
-          val set = scala.collection.mutable.TreeSet.empty[Long] ++ prior
-          var n = seen
-          rows.foreach { r =>
-            n += 1
-            if (set.size < k || r._2 < set.last) {
-              set += r._2
-              if (set.size > k) set -= set.last
+                     maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "update") { session =>
+      import session.implicits._
+      val hashed = streamReader(session, dir, glob, maxFilesPerTrigger)
+        .repartition(16) // single-file source: restore scan parallelism (s06 lesson)
+        .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("tok"))
+        .filter(length(col("tok")) > 0)
+        .select(col("source"),
+          conv(substring(md5(concat(lit("kmv|"), col("tok"))), 1, 15), 16, 10)
+            .cast("long").as("hv"))
+        .as[(String, Long)]
+      hashed.groupByKey(_._1)
+        .flatMapGroupsWithState[(Array[Long], Long), (String, Long, Int, Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (src: String, rows: Iterator[(String, Long)], state: GroupState[(Array[Long], Long)]) =>
+            val (prior, seen) = state.getOption.getOrElse((Array.empty[Long], 0L))
+            val set = scala.collection.mutable.TreeSet.empty[Long] ++ prior
+            var n = seen
+            rows.foreach { r =>
+              n += 1
+              if (set.size < k || r._2 < set.last) {
+                set += r._2
+                if (set.size > k) set -= set.last
+              }
             }
-          }
-          state.update((set.toArray, n))
-          Iterator.single((src, n, set.size,
-            if (set.size >= k) set.last else -1L))
-      }
-      .toDF("source", "rows_seen", "sketch_size", "hk")
-    out.writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+            state.update((set.toArray, n))
+            Iterator.single((src, n, set.size,
+              if (set.size >= k) set.last else -1L))
+        }
+        .toDF("source", "rows_seen", "sketch_size", "hk")
+    }
 
   /** Streaming exact-substring ADMISSION gate (s29): x147's criterion AT
     * ARRIVAL against the STORED corpus — Lee et al. 2022's exact-substring
@@ -1365,8 +1244,9 @@ object EventStream {
     * Scale posture: the stored label table is corpus-sized and therefore
     * UNHINTED (the r14 guard class: billions of distinct windows at
     * 100 TB) — the join shuffles on the label key like the stored-artifact
-    * lookup it stands in for; AQE may broadcast per batch while it
-    * measures small. Stream-side shuffle ships one constant-width label
+    * lookup it stands in for. The replay session runs without AQE: paired
+    * BenchOne warm rounds at sf0.1 read s29 at 1.58 s with AQE and 1.19 s
+    * without. Stream-side shuffle ships one constant-width label
     * per distinct window class, never window text.
     *
     * `storedLabelsPath` (the production shape, r15 verdict #1): a
@@ -1382,36 +1262,31 @@ object EventStream {
                        runTokens: Int = 16, capTokens: Int = 128,
                        glob: String = "documents.parquet",
                        maxFilesPerTrigger: Option[Int] = None,
-                       storedLabelsPath: Option[String] = None): StreamingQuery = {
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val storedRaw = storedLabelsPath match {
-      case Some(p) => session.read.parquet(p).select(col("r"))
-      case None =>
-        session.read.parquet(new java.io.File(dir, "documents.parquet").getPath)
-          .filter(col("source") =!= "src0")
-          .select(explode(graft.ops.Dedup.windowLabels(col("text"), runTokens, capTokens)).as("r"))
-          .distinct()
+                       storedLabelsPath: Option[String] = None): StreamingQuery =
+    replay(spark, queryName, "append") { session =>
+      val storedRaw = storedLabelsPath match {
+        case Some(p) => session.read.parquet(p).select(col("r"))
+        case None =>
+          session.read.parquet(new java.io.File(dir, "documents.parquet").getPath)
+            .filter(col("source") =!= "src0")
+            .select(explode(
+              graft.ops.Dedup.windowLabels(col("text"), runTokens, capTokens)).as("r"))
+            .distinct()
+      }
+      val stored = graft.util.PersistScope.track(
+        storedRaw.withColumn("hit", lit(true))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val incoming = streamReader(session, dir, glob, maxFilesPerTrigger)
+        .filter(col("source") === "src0")
+        .repartition(16) // single-file source: restore label-hash parallelism
+        .select(col("doc_id"),
+          graft.ops.Dedup.windowLabels(col("text"), runTokens, capTokens).as("ws"))
+        .select(col("doc_id"), size(col("ws")).cast("long").as("n_windows"),
+          explode_outer(array_distinct(col("ws"))).as("r"))
+      incoming.join(stored, Seq("r"), "left")
+        .select(col("doc_id"), col("n_windows"),
+          coalesce(col("hit"), lit(false)).as("hit"))
     }
-    val stored = graft.util.PersistScope.track(
-      storedRaw.withColumn("hit", lit(true))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val incoming = streamReader(session, dir, glob, maxFilesPerTrigger)
-      .filter(col("source") === "src0")
-      .repartition(16) // single-file source: restore label-hash parallelism
-      .select(col("doc_id"),
-        graft.ops.Dedup.windowLabels(col("text"), runTokens, capTokens).as("ws"))
-      .select(col("doc_id"), size(col("ws")).cast("long").as("n_windows"),
-        explode_outer(array_distinct(col("ws"))).as("r"))
-    val verdicts = incoming.join(stored, Seq("r"), "left")
-      .select(col("doc_id"), col("n_windows"),
-        coalesce(col("hit"), lit(false)).as("hit"))
-    verdicts.writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Streaming embedding-drift gate (s22): x117's codebook-drift check AT
     * ARRIVAL — every incoming embedding is scored against the codebooks
@@ -1425,36 +1300,29 @@ object EventStream {
     * No shuffle, no state, no watermark; append-mode, one row per vector. */
   def runDriftGate(spark: SparkSession, dir: String, queryName: String,
                    glob: String = "embeddings.parquet",
-                   maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val session = spark.newSession()
-    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    // Stored-model pairing (r16, the s29/x82 pattern): the model trains
-    // once per JVM as a parquet artifact on the CALLER's batch session
-    // (production: once per pipeline run) and every gate invocation reads
-    // the file — the previous form re-trained codebooks + baseline per
-    // stream start, a full corpus pass inside the gate's timer. An empty
-    // artifact (no label-0 slice) still crossJoins to zero rows — the
-    // batch-oracle-matching silence is preserved.
-    val model = session.read.parquet(
-      graft.ops.PqQueries.driftModelArtifact(spark, dir))
-    val src = graft.ops.KMeans.withInt8Codes(
-      streamReader(session, dir, glob, maxFilesPerTrigger)
-        .repartition(16), // single-file source: restore scan parallelism (s06 lesson)
-      "embedding", "qv")
-    val out = src
-      .crossJoin(broadcast(model))
-      .select(col("vec_id").cast("long").as("vec_id"),
-        graft.ops.PqQueries.streamQuantError(col("qv"), col("cs")).as("q_err_micro"),
-        col("base"))
-      .select(col("vec_id"), col("q_err_micro"),
-        (col("q_err_micro") * 10 > col("base") * 12).as("drifted"))
-    out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                   maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    replay(spark, queryName, "append") { session =>
+      // Stored-model pairing (r16, the s29/x82 pattern): the model trains
+      // once per JVM as a parquet artifact on the CALLER's batch session
+      // (production: once per pipeline run) and every gate invocation reads
+      // the file — the previous form re-trained codebooks + baseline per
+      // stream start, a full corpus pass inside the gate's timer. An empty
+      // artifact (no label-0 slice) still crossJoins to zero rows — the
+      // batch-oracle-matching silence is preserved.
+      val model = session.read.parquet(
+        graft.ops.PqQueries.driftModelArtifact(spark, dir))
+      val src = graft.ops.KMeans.withInt8Codes(
+        streamReader(session, dir, glob, maxFilesPerTrigger)
+          .repartition(16), // single-file source: restore scan parallelism (s06 lesson)
+        "embedding", "qv")
+      src
+        .crossJoin(broadcast(model))
+        .select(col("vec_id").cast("long").as("vec_id"),
+          graft.ops.PqQueries.streamQuantError(col("qv"), col("cs")).as("q_err_micro"),
+          col("base"))
+        .select(col("vec_id"), col("q_err_micro"),
+          (col("q_err_micro") * 10 > col("base") * 12).as("drifted"))
+    }
 }
 
 /** Transactional parquet batch sink: the missing piece between Structured

@@ -21,10 +21,52 @@ class EventStreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("replay keeps its settings off the caller's session and starts each run fresh") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    caller.conf.set("spark.sql.adaptive.enabled", "true")
+    caller.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    def run() = {
+      val q = EventStream.replay(caller, "replay_spec", "append")(
+        child => EventStream.readEvents(child, sf).select("event_id"))
+      (q, EventStream.sinkTable(q).count())
+    }
+    val (q1, n1) = run()
+    val (q2, n2) = run()
+    assert(caller.conf.get("spark.sql.shuffle.partitions") == "7")
+    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(caller.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "true")
+    assert(q1.sparkSession.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(q1.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false")
+    // same query name, fresh checkpoint: the second run reads all the input again
+    val events = QueryDef.events(spark, sf).count()
+    assert(n1 == events && n2 == events)
+    assert(q2.recentProgress.map(_.numInputRows).sum == events)
+  }
+
+  test("streamReader probes the schema again after the table is rewritten in place") {
+    import org.apache.spark.sql.functions.lit
+    val tmp = java.nio.file.Files.createTempDirectory("schema_rewrite").toString
+    val target = new java.io.File(tmp, "events.parquet").toPath
+    def writeSingleFile(df: org.apache.spark.sql.DataFrame): Unit = {
+      val part = java.nio.file.Files.createTempDirectory("schema_part").toString
+      df.coalesce(1).write.mode("overwrite").parquet(part)
+      val f = new java.io.File(part).listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(f.toPath, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val base = spark.range(10).toDF("event_id")
+    writeSingleFile(base)
+    assert(EventStream.streamReader(spark, tmp, "events.parquet").schema.fieldNames
+      .sameElements(Array("event_id")))
+    writeSingleFile(base.withColumn("extra", lit("x")))
+    assert(EventStream.streamReader(spark, tmp, "events.parquet").schema.fieldNames
+      .sameElements(Array("event_id", "extra")))
+  }
+
   test("stateful sessionization stream matches the batch lag-window form") {
-    val q = EventStream.runSessionize(spark, sf, "sessions_test", statePartitions = Some(4))
+    val q = EventStream.runSessionize(spark, sf, "sessions_test")
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
-    val streamed = EventStream.sessionTotals(q.sparkSession, "sessions_test").collect()
+    val streamed = EventStream.sessionTotals(q.sparkSession.table("sessions_test")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val batch = graft.SparkEntry.queries("q11_sessionize")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -34,9 +76,9 @@ class EventStreamSpec extends SparkSpec {
 
   test("native session_window stream matches the >=-boundary batch form") {
     import org.apache.spark.sql.functions._
-    val q = EventStream.runSessionWindow(spark, sf, "sw_test", statePartitions = Some(4))
+    val q = EventStream.runSessionWindow(spark, sf, "sw_test")
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
-    val streamed = EventStream.sessionWindowTotals(q.sparkSession, "sw_test").collect()
+    val streamed = EventStream.sessionWindowTotals(q.sparkSession.table("sw_test")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // session_window merges iff gap-diff < gap (strict) — the >= lag test,
     // NOT q11's > split; the boundary is the operator's contract.
@@ -82,7 +124,7 @@ class EventStreamSpec extends SparkSpec {
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
       "expected multiple data micro-batches")
-    val streamed = EventStream.latenessTotals(q.sparkSession, "lateness_multibatch")
+    val streamed = EventStream.latenessTotals(q.sparkSession.table("lateness_multibatch"))
       .collect().head
     val batch = graft.SparkEntry.queries("x123_event_order_audit")(spark, sf)
       .collect().head
@@ -164,11 +206,11 @@ class EventStreamSpec extends SparkSpec {
         StandardCopyOption.REPLACE_EXISTING)
     }
     val q = EventStream.runSessionize(spark, tmp, "sessions_multibatch",
-      statePartitions = Some(4), glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
+      glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
       "expected multiple data micro-batches")
-    val streamed = EventStream.sessionTotals(q.sparkSession, "sessions_multibatch").collect()
+    val streamed = EventStream.sessionTotals(q.sparkSession.table("sessions_multibatch")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val batch = graft.SparkEntry.queries("q11_sessionize")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -177,7 +219,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("stream-stream interval join matches the batch self-join") {
-    val q = EventStream.runAttribution(spark, sf, "attr_test", statePartitions = Some(4))
+    val q = EventStream.runAttribution(spark, sf, "attr_test")
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     val streamed = q.sparkSession.table("attr_test").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -211,7 +253,7 @@ class EventStreamSpec extends SparkSpec {
         StandardCopyOption.REPLACE_EXISTING)
     }
     val q = EventStream.runAttribution(spark, tmp, "attr_multibatch",
-      statePartitions = Some(4), glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
+      glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
       "expected multiple data micro-batches")
@@ -224,8 +266,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("left-outer stream-stream join emits unmatched clicks on eviction, horizon-bounded") {
-    val q = EventStream.runAttributionOuter(spark, sf, "attr_outer_test",
-      statePartitions = Some(4))
+    val q = EventStream.runAttributionOuter(spark, sf, "attr_outer_test")
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     val rows = q.sparkSession.table("attr_outer_test").collect()
     val matched = rows.filter(!_.isNullAt(2))
@@ -282,11 +323,11 @@ class EventStreamSpec extends SparkSpec {
       dst.setLastModified(1000000L * (i + 1)) // deterministic batch order
     }
     val q = EventStream.runSessionize(spark, tmp, "sessions_evict",
-      statePartitions = Some(2), glob = "events_*.parquet",
+      glob = "events_*.parquet",
       maxFilesPerTrigger = Some(1), evictAfterGap = true)
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     // Totals are still correct: the eviction emission equals the final state.
-    val streamed = EventStream.sessionTotals(q.sparkSession, "sessions_evict").collect()
+    val streamed = EventStream.sessionTotals(q.sparkSession.table("sessions_evict")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed == Set((1L, 2L, 3L), (2L, 1L, 2L)))
     // User 2's state was removed: only user 1 remains in the state store.
@@ -295,7 +336,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("stream-static enrichment join matches the batch rollup") {
-    val q = EventStream.runEnriched(spark, sf, "enrich_test", statePartitions = Some(4))
+    val q = EventStream.runEnriched(spark, sf, "enrich_test")
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     val streamed = q.sparkSession.table("enrich_test").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
@@ -310,7 +351,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("streaming dedup chained into aggregation matches batch count distinct") {
-    val q = EventStream.runDistinctUsers(spark, sf, "dedup_test", statePartitions = Some(4))
+    val q = EventStream.runDistinctUsers(spark, sf, "dedup_test")
     try q.awaitTermination(120000) finally if (q.isActive) q.stop()
     val streamed = q.sparkSession.table("dedup_test").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet

@@ -44,12 +44,12 @@ class SoakSpec extends SparkSpec {
   test("sessionization with eviction converges over 16 time-ordered micro-batches") {
     val tmp = sliceEvents(byTime = true)
     val q = EventStream.runSessionize(spark, tmp, "soak_sessions",
-      statePartitions = Some(4), glob = "events_*.parquet",
+      glob = "events_*.parquet",
       maxFilesPerTrigger = Some(1), evictAfterGap = true)
     try q.awaitTermination(300000) finally if (q.isActive) q.stop()
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
     assert(dataBatches >= Slices - 1, s"expected ~$Slices data micro-batches, got $dataBatches")
-    val streamed = EventStream.sessionTotals(q.sparkSession, "soak_sessions").collect()
+    val streamed = EventStream.sessionTotals(q.sparkSession.table("soak_sessions")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val batch = graft.SparkEntry.queries("q11_sessionize")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -67,7 +67,7 @@ class SoakSpec extends SparkSpec {
   test("streaming dedup chain converges over 16 out-of-order micro-batches") {
     val tmp = sliceEvents(byTime = false)
     val q = EventStream.runDistinctUsers(spark, tmp, "soak_dedup",
-      statePartitions = Some(4), glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
+      glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
     try q.awaitTermination(300000) finally if (q.isActive) q.stop()
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
     assert(dataBatches >= Slices - 1, s"expected ~$Slices data micro-batches, got $dataBatches")
