@@ -175,13 +175,11 @@ object Bench {
       System.err.println(s"[bench] streaming warmup skipped: ${e.getMessage}")
     }
     // Drop the warmup pass's cross-query shared stages (band/shingle
-    // frames) AND the on-disk substring-label artifact: the timed pass
-    // must pay each shared computation exactly once — timing reads of
+    // frames and the on-disk label/drift artifacts): the timed pass must
+    // pay each shared computation exactly once — timing reads of
     // warmup-era cache blocks (or a warmup-era artifact) would understate
     // the suite.
     util.SharedStages.releaseAll()
-    ops.Dedup.releaseSubstringArtifacts()
-    ops.PqQueries.releaseDriftArtifacts()
     // Settle the heap BEFORE the warm stage pass, not after it: the warm
     // pass's first timers otherwise absorb the whole cold pass's + the
     // streaming warmup's accumulated debt plus the async unpersist churn

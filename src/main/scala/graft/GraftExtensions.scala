@@ -2,74 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.detect._
-import graft.ops.{MinHashFromTokensExpr, MinHashSigExpr, SimHash32Expr}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: enables the engine's SQL surface for any
   * session without code changes, via
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
   * The same registrations are available programmatically through
-  * [[graft.functions.register]]. */
+  * [[graft.functions.register]]; both install [[graft.functions.sqlFunctions]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
-      e.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-
-    inject("pii_candidates", "_FUNC_(text) - rule-layer PII candidates with offsets") {
-      es => PiiCandidatesExpr(es.head)
+  override def apply(e: SparkSessionExtensions): Unit =
+    functions.sqlFunctions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), build))
     }
-    inject("ner_spans", "_FUNC_(text) - offline NER provider spans") {
-      es => NerSpansExpr(es.head)
-    }
-    inject("mask_token", "_FUNC_(s) - shape-preserving mask") {
-      es => MaskTokenExpr(es.head)
-    }
-    inject("redact_spans", "_FUNC_(text, spans) - splice masks over spans") {
-      es => RedactSpansExpr(es.head, es(1))
-    }
-    inject("luhn", "_FUNC_(s) - Luhn checksum gate") { es => LuhnExpr(es.head) }
-    inject("verhoeff", "_FUNC_(s) - Verhoeff checksum gate") { es => VerhoeffExpr(es.head) }
-    inject("minhash_sig", "_FUNC_(shingles, k) - MinHash signature") {
-      es => MinHashSigExpr(es.head, es(1).eval().asInstanceOf[Number].intValue())
-    }
-    inject("minhash_from_tokens", "_FUNC_(tokens, k[, n]) - fused shingle MinHash") {
-      es => MinHashFromTokensExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        if (es.size > 2) es(2).eval().asInstanceOf[Number].intValue() else 3)
-    }
-    inject("simhash32", "_FUNC_(tokens) - 32-bit SimHash fingerprint") {
-      es => SimHash32Expr(es.head)
-    }
-    inject("hamming_bits", "_FUNC_(a, b) - Hamming distance of bit strings") {
-      es => graft.ops.HammingBitsExpr(es.head, es(1))
-    }
-    inject("lsh_bucket", "_FUNC_(vec[, planes[, dims]]) - hyperplane LSH bucket") {
-      es => graft.ops.LshBucketExpr(es.head,
-        if (es.size > 1) es(1).eval().asInstanceOf[Number].intValue() else 8,
-        if (es.size > 2) es(2).eval().asInstanceOf[Number].intValue() else 64)
-    }
-    inject("cosine_sim", "_FUNC_(a, b) - one-pass cosine similarity") {
-      es => graft.ops.CosineSimExpr(es.head, es(1))
-    }
-    inject("int8_dist2", "_FUNC_(a, b) - exact int64 squared distance of int-code arrays") {
-      es => graft.ops.Int8Dist2Expr(es.head, es(1))
-    }
-    inject("int8_dot", "_FUNC_(a, b) - exact int64 dot product of int-code arrays") {
-      es => graft.ops.Int8DotExpr(es.head, es(1))
-    }
-    inject("nfc_normalize", "_FUNC_(s) - Unicode NFC normalization") {
-      es => graft.ops.NfcNormalizeExpr(es.head)
-    }
-    inject("rolling_fps", "_FUNC_(s, window, k) - k smallest rolling-hash window fingerprints") {
-      es => graft.ops.RollingFpExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue())
-    }
-  }
 }

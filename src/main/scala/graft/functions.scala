@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.{shims => ExpressionUtils}
 
 import graft.detect._
@@ -94,46 +95,53 @@ object functions {
   def int8_dot(a: Column, b: Column): Column =
     graft.ops.Int8DotExpr.int8_dot(a, b)
 
+  /** The SQL surface: (name, usage, builder) of every custom function.
+    * [[register]] and [[graft.GraftExtensions]] both install exactly this
+    * list. */
+  private[graft] val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = {
+    def int(es: Seq[Expression], i: Int): Int = es(i).eval().asInstanceOf[Number].intValue()
+    def intOr(es: Seq[Expression], i: Int, default: Int): Int =
+      if (es.size > i) int(es, i) else default
+    import graft.ops._
+    Seq(
+      ("pii_candidates", "_FUNC_(text) - rule-layer PII candidates with offsets",
+        es => PiiCandidatesExpr(es.head)),
+      // generator: SELECT pii_candidates_rows(text) or LATERAL VIEW
+      ("pii_candidates_rows", "_FUNC_(text) - one (candidate_idx, c) row per PII candidate",
+        es => PiiCandidatesGenerator(es.head)),
+      ("ner_spans", "_FUNC_(text) - offline NER provider spans", es => NerSpansExpr(es.head)),
+      ("mask_token", "_FUNC_(s) - shape-preserving mask", es => MaskTokenExpr(es.head)),
+      ("redact_spans", "_FUNC_(text, spans) - splice masks over spans",
+        es => RedactSpansExpr(es.head, es(1))),
+      ("luhn", "_FUNC_(s) - Luhn checksum gate", es => LuhnExpr(es.head)),
+      ("verhoeff", "_FUNC_(s) - Verhoeff checksum gate", es => VerhoeffExpr(es.head)),
+      ("minhash_sig", "_FUNC_(shingles, k) - MinHash signature",
+        es => MinHashSigExpr(es.head, int(es, 1))),
+      ("minhash_from_tokens", "_FUNC_(tokens, k[, n]) - fused shingle MinHash",
+        es => MinHashFromTokensExpr(es.head, int(es, 1), intOr(es, 2, 3))),
+      ("simhash32", "_FUNC_(tokens) - 32-bit SimHash fingerprint", es => SimHash32Expr(es.head)),
+      ("hamming_bits", "_FUNC_(a, b) - Hamming distance of bit strings",
+        es => HammingBitsExpr(es.head, es(1))),
+      ("lsh_bucket", "_FUNC_(vec[, planes[, dims]]) - hyperplane LSH bucket",
+        es => LshBucketExpr(es.head, intOr(es, 1, 8), intOr(es, 2, 64))),
+      ("cosine_sim", "_FUNC_(a, b) - one-pass cosine similarity", es => CosineSimExpr(es.head, es(1))),
+      ("int8_dist2", "_FUNC_(a, b) - exact int64 squared distance of int-code arrays",
+        es => Int8Dist2Expr(es.head, es(1))),
+      ("int8_dot", "_FUNC_(a, b) - exact int64 dot product of int-code arrays",
+        es => Int8DotExpr(es.head, es(1))),
+      ("nfc_normalize", "_FUNC_(s) - Unicode NFC normalization", es => NfcNormalizeExpr(es.head)),
+      // aggregate: the analyzer wraps the bare AggregateFunction
+      ("topk_min", "_FUNC_(struct, k) - the k smallest values, ascending",
+        es => TopKMinExpr(es.head, int(es, 1))),
+      ("rolling_fps", "_FUNC_(s, window, k) - k smallest rolling-hash window fingerprints",
+        es => RollingFpExpr(es.head, int(es, 1), int(es, 2))))
+  }
+
   /** Register all custom functions for SQL use. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("pii_candidates", es => PiiCandidatesExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ner_spans", es => NerSpansExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("mask_token", es => MaskTokenExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("redact_spans", es => RedactSpansExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("luhn", es => LuhnExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("verhoeff", es => VerhoeffExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig", es =>
-      graft.ops.MinHashSigExpr(es.head, es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_from_tokens", es =>
-      graft.ops.MinHashFromTokensExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        if (es.size > 2) es(2).eval().asInstanceOf[Number].intValue() else 3), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash32", es => graft.ops.SimHash32Expr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming_bits", es =>
-      graft.ops.HammingBitsExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bucket", es =>
-      graft.ops.LshBucketExpr(es.head,
-        if (es.size > 1) es(1).eval().asInstanceOf[Number].intValue() else 8,
-        if (es.size > 2) es(2).eval().asInstanceOf[Number].intValue() else 64), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es =>
-      graft.ops.CosineSimExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("int8_dist2", es =>
-      graft.ops.Int8Dist2Expr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("int8_dot", es =>
-      graft.ops.Int8DotExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize", es =>
-      graft.ops.NfcNormalizeExpr(es.head), "scala_udf")
-    // generator: SELECT pii_candidates_rows(text) or LATERAL VIEW
-    reg.createOrReplaceTempFunction("pii_candidates_rows", es =>
-      PiiCandidatesGenerator(es.head), "scala_udf")
-    // aggregate: the analyzer wraps the bare AggregateFunction
-    reg.createOrReplaceTempFunction("topk_min", es =>
-      graft.ops.TopKMinExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_fps", es =>
-      graft.ops.RollingFpExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue()), "scala_udf")
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

@@ -94,15 +94,14 @@ object ClusterQueries {
   // thread-local scope would have released them with the first consuming
   // query. x45's seeding reads the same frame.
   private[ops] def sharedInt8(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(
-      s"embeddings-int8|$d|${System.identityHashCode(s)}")(
+    graft.util.SharedStages.cached("embeddings-int8", s, d)(
       KMeans.withInt8Codes(
         t(s, d, "embeddings").select(col("vec_id"), col("embedding")), "embedding", "qv")
         .select("vec_id", "qv")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private[ops] def sharedKmeans(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"embeddings-kmeans|$d|${System.identityHashCode(s)}") {
+    graft.util.SharedStages.cached("embeddings-kmeans", s, d) {
       KMeans.assignments(sharedInt8(s, d), "vec_id", "qv", K, Iters)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -123,7 +122,7 @@ object ClusterQueries {
     * production pipeline materializes its IVF lists once. Vector-count
     * rows: memory-first. */
   private def sharedBucketedAssign(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"embeddings-bucketed|$d|${System.identityHashCode(s)}") {
+    graft.util.SharedStages.cached("embeddings-bucketed", s, d) {
       val qb = sharedInt8(s, d)
       KMeans.bucketedAssignments(shiftedCents(qb), qb, "vec_id", "qv",
           cellStep = 44, nprobe = 5)

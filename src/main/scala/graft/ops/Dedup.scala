@@ -169,90 +169,6 @@ object Dedup {
     lab
   }
 
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — same contract as [[connectedComponents]]: (id, cluster_id =
-    * component min) for every id appearing in a pair.
-    *
-    * Why a second form: min-label propagation with pointer jumping moves
-    * labels along EDGES and jumps label chains, converging in O(log
-    * diameter) rounds with the edge set as the working set every round.
-    * The star algorithm instead REWRITES the edge set itself toward stars
-    * centered at component minima; its working set shrinks as components
-    * contract, and its convergence bound (O(log n) rounds, edge count
-    * non-increasing) holds regardless of diameter — the insurance form for
-    * adversarially deep components beyond 2^maxIters diameter. Same
-    * primitive per round as the propagation loop: a keyed min-agg + an
-    * equi-join over the edge set, nothing node-quadratic.
-    *
-    * Round shape: large-star hangs every neighbor v > u under m = min of
-    * u's closed neighborhood (kills long chains by hanging deep nodes
-    * directly under the local min); small-star then re-hangs every smaller
-    * neighbor and u itself under the minimum of u's smaller neighborhood
-    * (flattening two-level trees into stars). Both emit (parent, child)
-    * with parent < child, so the edge frame stays oriented. Fixpoint = the
-    * edge set is round-invariant; tested cheaply per round with a
-    * (count, hash-sum) signature and CONFIRMED with an exact anti-join
-    * before returning (a hash-collision fixpoint must not return silently
-    * truncated labels — same contract as the propagation form's throw). */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    val nodes = pairs.select(col("id1").as("id"))
-      .union(pairs.select(col("id2").as("id"))).distinct()
-    def largeStar(edges: DataFrame): DataFrame = {
-      val sym = edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      val mn = sym.groupBy(col("src").as("u"))
-        .agg(min(col("dst")).as("mnd"))
-        .select(col("u"), least(col("u"), col("mnd")).as("m"))
-      sym.join(mn, sym("src") === mn("u"))
-        .filter(col("dst") > col("src"))
-        .select(col("m").as("src"), col("dst")).distinct()
-    }
-    def smallStar(edges: DataFrame): DataFrame = {
-      // edges oriented (src < dst); per child u the smaller neighborhood is
-      // exactly its parent set {src : (src, u)}.
-      val mn = edges.groupBy(col("dst").as("u")).agg(min(col("src")).as("m"))
-      val reattachParents = edges.join(mn, edges("dst") === mn("u"))
-        .filter(col("src") =!= col("m"))
-        .select(col("m").as("src"), col("src").as("dst"))
-      val attachChild = mn.select(col("m").as("src"), col("u").as("dst"))
-      reattachParents.union(attachChild).distinct()
-    }
-    def signature(edges: DataFrame): (Long, Long) = {
-      // bit_xor, not sum: order-independent like sum but cannot overflow
-      // under ANSI mode. Self-cancellation needs DUPLICATE rows, which the
-      // per-round distinct rules out.
-      val r = edges.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
-    }
-    var cur = smallStar(largeStar(
-      pairs.select(col("id1").as("src"), col("id2").as("dst")))).localCheckpoint()
-    var prevSig = signature(cur)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val next = smallStar(largeStar(cur)).localCheckpoint()
-      val sig = signature(next)
-      if (sig == prevSig) {
-        // exact confirmation: hash-sum equality alone must never terminate
-        converged = next.exceptAll(cur).isEmpty && cur.exceptAll(next).isEmpty
-      }
-      prevSig = sig
-      cur = next
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge within $maxIters rounds")
-    // Stars: every child hangs off its component min; centers label themselves.
-    // Nodes that lost all edges to self-loop-only input keep their own id.
-    val labels = cur.select(col("dst").as("id"), col("src").as("cluster_id"))
-      .union(cur.select(col("src").as("id"), col("src").as("cluster_id")).distinct())
-    nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-  }
-
   /** Transitive near-dup drop: ONE representative (the component minimum) per
     * connected near-duplicate cluster. Strictly stronger than the greedy
     * [[dropNearDuplicates]]: greedy keeps any doc whose verified neighbors
@@ -1098,43 +1014,6 @@ object Dedup {
           .over(pw.partitionBy("doc_id"))).cast("long").as("kept_tokens"))
   }
 
-  // Built substring-label artifacts, keyed on (dir, filter, runTokens,
-  // capTokens). Strictly PER-JVM, like every SharedStages frame: the
-  // parquet lives in a process-unique dir deleted on JVM exit, so no
-  // bench/verify invocation can ever read an artifact a PREVIOUS run
-  // built — every invocation computes it from the parquet inputs, on the
-  // clock (Bench times the build under its own "sublabels" stage name and
-  // releases it between the warmup and timed passes, the exact
-  // SharedStages discipline). Running the one Spark action inside
-  // computeIfAbsent is safe because the builder never re-enters this map.
-  private val labelArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Process-unique artifact base, removed by a shutdown hook: artifacts
-    * must not outlive the JVM (a later run reusing one would be
-    * cross-run precomputation, not pipeline work). */
-  private lazy val artifactBase: java.io.File = {
-    val d = new java.io.File(s"target/stage_artifacts/jvm-${ProcessHandle.current().pid()}")
-    d.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(d)
-      catch { case _: Throwable => () }))
-    d
-  }
-
-  /** Forget and delete every built label artifact (Bench calls this
-    * between its warmup and timed passes so the timed pass pays the build
-    * exactly once, under the "sublabels" stage timer). */
-  def releaseSubstringArtifacts(): Unit = {
-    labelArtifacts.clear()
-    if (artifactBase.exists()) {
-      artifactBase.listFiles().foreach { f =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(f)
-        catch { case _: Throwable => () }
-      }
-    }
-  }
-
   /** The STORED-CORPUS distinct window-label table as a persisted parquet
     * artifact — the batch x147 pass's natural output and the production
     * shape of [[graft.streaming.EventStream.runSubstringGate]]'s static
@@ -1142,38 +1021,23 @@ object Dedup {
     * corpus's label set ONCE per pipeline run, let every gate invocation
     * read it instead of re-tokenizing/re-hashing/re-distincting the
     * corpus per stream start. Returns the artifact path; idempotent per
-    * (dir, runTokens, capTokens) WITHIN one JVM only — the artifact dir is
-    * process-unique and deleted on exit, so every harness invocation
-    * builds it fresh from the parquet inputs (in production the pipeline
-    * run owns the artifact's lifetime; in this harness the JVM is the
-    * run). At 100 TB this table is corpus-sized; production
+    * (dir, documents.parquet stamp, excludeSource, runTokens, capTokens)
+    * until the pass ends ([[graft.util.SharedStages.artifact]]), so every
+    * harness invocation builds it fresh from the parquet inputs (in
+    * production the pipeline run owns the artifact's lifetime; in this
+    * harness the pass is the run). At 100 TB this table is corpus-sized; production
     * writes it bucketed on the label key so the gate's stream-static join
     * co-locates without a shuffle of the stored side — locally plain
     * parquet (bucketed tables need a metastore-managed path). */
   def substringLabelArtifact(spark: org.apache.spark.sql.SparkSession, dir: String,
                              runTokens: Int = 16, capTokens: Int = 128,
-                             excludeSource: String = "src0"): String = {
-    // Source fingerprint (total length + max mtime over the parquet
-    // file/dir): a REgenerated corpus at the same path — the 10x stress
-    // dir — must not serve a stale artifact from a previous generation.
-    val src = new java.io.File(dir, "documents.parquet")
-    val parts: Seq[java.io.File] =
-      if (src.isDirectory) src.listFiles().toSeq.filter(_.isFile) else Seq(src)
-    // Empty-dir guard (r16 ADVICE, same idiom as driftModelArtifact): .max
-    // on an empty Seq throws a useless UnsupportedOperationException.
-    if (parts.isEmpty)
-      throw new IllegalStateException(s"documents.parquet missing or empty under $dir")
-    val fp = s"${parts.map(_.length).sum}-${parts.map(_.lastModified).max}"
-    val key = s"$dir|$fp|$excludeSource|$runTokens|$capTokens"
-    labelArtifacts.computeIfAbsent(key, _ => {
-      val dst = new java.io.File(artifactBase,
-        "substring_labels_" + java.lang.Integer.toHexString(key.hashCode))
+                             excludeSource: String = "src0"): String =
+    graft.util.SharedStages.artifact(
+      s"substring-labels-$excludeSource-$runTokens-$capTokens", dir, "documents.parquet") { dst =>
       spark.read.parquet(new java.io.File(dir, "documents.parquet").getPath)
         .filter(col("source") =!= excludeSource)
         .select(explode(windowLabels(col("text"), runTokens, capTokens)).as("r"))
         .distinct()
-        .write.mode("overwrite").parquet(dst.getPath)
-      dst.getPath
-    })
-  }
+        .write.mode("overwrite").parquet(dst)
+    }
 }

@@ -47,8 +47,7 @@ object GraphQueries {
     * timer, exactly like components/bands; production materializes the
     * score table once per pipeline run the same way. */
   private[ops] def pagerankScores(s: SparkSession, d: String): DataFrame =
-    graft.util.SharedStages.cached(
-      s"documents-pagerank|$d|${System.identityHashCode(s)}")(
+    graft.util.SharedStages.cached("documents-pagerank", s, d)(
       pagerankScoresUncached(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -60,11 +59,11 @@ object GraphQueries {
     "pagerank" -> (pagerankScores(_, _)))
 
   private def pagerankScoresUncached(s: SparkSession, d: String): DataFrame = {
-    val rm = OpsQueries.sharedRepMapFor(s, d) // (doc_id, rep)
+    val rm = OpsQueries.sharedRepMap(s, d) // (doc_id, rep)
     val mult = rm.groupBy("rep").agg(count(lit(1)).as("m"))
     // Shared rep-level band-collision pairs (one band self-join per pass,
     // shared with x03/x64 and the edge consumers).
-    val rcand = OpsQueries.sharedRepCandsFor(s, d)
+    val rcand = OpsQueries.sharedRepCands(s, d)
     // Rep-level symmetric edges, read once per iteration (3×) + degrees.
     // NOT pre-partitioned on src: measured at sf0.1, AQE broadcasts the
     // small node-side of every src-keyed join, so the edge frame is never
@@ -75,7 +74,7 @@ object GraphQueries {
       rcand.select(col("d1").as("src"), col("d2").as("dst"))
         .unionByName(rcand.select(col("d2").as("src"), col("d1").as("dst")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val hasBands = OpsQueries.sharedBandsFor(s, d).select("doc_id").distinct()
+    val hasBands = OpsQueries.sharedBands(s, d).select("doc_id").distinct()
       .join(rm.filter(col("doc_id") === col("rep")).select("doc_id"),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("rep"), lit(1).as("hb"))
@@ -323,10 +322,10 @@ object GraphQueries {
               AS mean_jaccard,
             CAST(ce.mj AS BIGINT) / 1000000.0 AS min_jaccard
           FROM sz LEFT JOIN ce USING (cluster_id)""") { (s, d) =>
-      val sh = OpsQueries.sharedShinglesFor(s, d)
+      val sh = OpsQueries.sharedShingles(s, d)
       val inter = size(array_intersect(col("s1.s"), col("s2.s"))).cast("long")
       val uni = greatest(size(array_union(col("s1.s"), col("s2.s"))), lit(1)).cast("long")
-      val rj = OpsQueries.sharedRepCandsFor(s, d)
+      val rj = OpsQueries.sharedRepCands(s, d)
         .join(sh.as("s1"), col("d1") === col("s1.doc_id"))
         .join(sh.as("s2"), col("d2") === col("s2.doc_id"))
         .filter(inter.cast("double") / uni >= 0.8)

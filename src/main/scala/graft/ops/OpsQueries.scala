@@ -95,27 +95,11 @@ object OpsQueries {
     * the documents table. One corpus tokenization per pass instead of
     * seven. */
   private[graft] def sharedWordCounts(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-wordcounts|$d|${System.identityHashCode(s)}")(
+    graft.util.SharedStages.cached("documents-wordcounts", s, d)(
       t(s, d, "documents")
         .select(col("doc_id"), col("source"), explode(tokens(col("text"))).as("token"))
         .groupBy("doc_id", "source", "token").agg(count(lit(1)).as("c"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** The corpus-side staging tables an ingest-dedup stream joins against
-    * (s08): the PASS-WIDE shared band/shingle frames (same artifacts
-    * x02/x03/x05/x21 consume — the stored-band day-2 posture), so the
-    * streaming query's marginal static cost is a filter, not a corpus
-    * MinHash pass. */
-  private[graft] def sharedBandsFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    sharedBands(s, d)
-  private[graft] def sharedRepMapFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    sharedRepMap(s, d)
-  private[graft] def sharedRepCandsFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    sharedRepCands(s, d)
-  private[graft] def sharedShinglesFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    sharedShingles(s, d)
-  private[graft] def sharedRepEdgesFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    sharedRepEdges(s, d)
 
   /** Staged doc → (doc_id, s, band, band_hash): the band explode CARRYING
     * the doc's shingle set — the one-frame form a STATELESS stream-side
@@ -140,14 +124,15 @@ object OpsQueries {
   // two corpus-sized frames, and the loop-heavy consumers (x21's component
   // rounds) should not compete with them for executor memory. The session
   // identity is part of the key so a frame never outlives or crosses its
-  // owning session.
-  private def sharedBands(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-bands|$d|${System.identityHashCode(s)}")(
+  // owning session. The ingest-dedup stream (s08) and the retrieval
+  // queries join against these same frames.
+  private[graft] def sharedBands(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.util.SharedStages.cached("documents-bands", s, d)(
       bandsDf(t(s, d, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
 
-  private[ops] def sharedShingles(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-shingles|$d|${System.identityHashCode(s)}")(
+  private[graft] def sharedShingles(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.util.SharedStages.cached("documents-shingles", s, d)(
       shingleSets(t(s, d, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
 
@@ -173,13 +158,8 @@ object OpsQueries {
     "bpe3" -> (sharedBpeSegs(_, _)),
     // The stored-corpus substring-label artifact (s29's static side): the
     // build runs eagerly inside the call (a parquet write action); the
-    // returned scan of the artifact is the noop-timed remainder. Per-JVM
-    // like every other stage — Bench releases it between passes so the
-    // timed pass pays the build exactly once, under this name.
-    "sublabels" -> ((s, d) => {
-      val p = Dedup.substringLabelArtifact(s, d)
-      s.read.parquet(p)
-    }))
+    // returned scan of the artifact is the noop-timed remainder.
+    "sublabels" -> ((s, d) => s.read.parquet(Dedup.substringLabelArtifact(s, d))))
 
   /** Exact-duplicate representative map (doc_id → rep = min doc_id of its
     * exact-text group). The standard collapse a boilerplate-heavy crawl
@@ -187,8 +167,8 @@ object OpsQueries {
     * every band hash, so an id-level band self-join is quadratic in copy
     * count, while the rep-level join is immune to it. One md5 window
     * shuffle, corpus-sized narrow frame. */
-  private def sharedRepMap(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-repmap|$d|${System.identityHashCode(s)}")(
+  private[graft] def sharedRepMap(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.util.SharedStages.cached("documents-repmap", s, d)(
       t(s, d, "documents")
         .select(col("doc_id"), min(col("doc_id")).over(
           Window.partitionBy(md5(col("text")))).as("rep"))
@@ -206,8 +186,8 @@ object OpsQueries {
     * reps only so it is immune to exact-duplicate group size. Verification
     * kernels layer on top (sharedRepEdges filters ≥ 0.8; x03/x64 carry the
     * kernel values into their outputs). */
-  private def sharedRepCands(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-repcands|$d|${System.identityHashCode(s)}") {
+  private[graft] def sharedRepCands(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.util.SharedStages.cached("documents-repcands", s, d) {
       val m = sharedRepMap(s, d)
       val bands = sharedBands(s, d)
       // bands of representatives only (reps are rows where doc_id == rep).
@@ -225,8 +205,8 @@ object OpsQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private[ops] def sharedRepEdges(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-repedges|$d|${System.identityHashCode(s)}") {
+  private[graft] def sharedRepEdges(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.util.SharedStages.cached("documents-repedges", s, d) {
       val sh = sharedShingles(s, d)
       sharedRepCands(s, d).join(sh.as("s1"), col("d1") === col("s1.doc_id"))
         .join(sh.as("s2"), col("d2") === col("s2.doc_id"))
@@ -253,7 +233,7 @@ object OpsQueries {
     * semantics, not avoidable work; connectivity consumers ride
     * [[sharedComponents]]' sparse edge set instead and never pay it. */
   private def sharedEdges(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-edges08|$d|${System.identityHashCode(s)}") {
+    graft.util.SharedStages.cached("documents-edges08", s, d) {
       val m = sharedRepMap(s, d)
       val intra = m.as("ma").join(m.as("mb"),
         col("ma.rep") === col("mb.rep") && col("ma.doc_id") < col("mb.doc_id"))
@@ -280,7 +260,7 @@ object OpsQueries {
     * expanded pair set at O(n) instead of O(n²) edges per duplicate
     * group — at the 30× stress that is 155k edges in place of 2.3M. */
   private[ops] def sharedComponents(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-components|$d|${System.identityHashCode(s)}") {
+    graft.util.SharedStages.cached("documents-components", s, d) {
       val m = sharedRepMap(s, d)
       val stars = m.filter(col("doc_id") =!= col("rep"))
         .join(bandedDocs(s, d), Seq("doc_id"), "left_semi")
@@ -2714,7 +2694,7 @@ object OpsQueries {
     * scoped (they only matter while the first consumer materializes this
     * frame); the final frame is the shared stage. */
   private def sharedBpeSegs(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.util.SharedStages.cached(s"documents-bpe3|$d|${System.identityHashCode(s)}") {
+    graft.util.SharedStages.cached("documents-bpe3", s, d) {
       val vocab = sharedWordCounts(s, d)
         .groupBy("token").agg(sum("c").as("c"))
         .select(col("token").as("word"), col("c"),

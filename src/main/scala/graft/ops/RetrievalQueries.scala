@@ -142,7 +142,7 @@ object RetrievalQueries {
             CAST(coalesce(h.n_docs, 0) AS BIGINT) AS n_docs,
             CAST(coalesce(h.max_degree, 0) AS BIGINT) AS max_degree
           FROM buckets b LEFT JOIN hist h USING (ord)""") { (s, d) =>
-      val bands = OpsQueries.sharedBandsFor(s, d)
+      val bands = OpsQueries.sharedBands(s, d)
       val cand = bands.as("a").join(bands.as("b"),
           col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash")
             && col("a.doc_id") < col("b.doc_id"))
@@ -265,7 +265,7 @@ object RetrievalQueries {
               THEN CAST((2 * pd.u * 1000000 + pd.n) // (2 * pd.n) AS BIGINT) / 1000000.0
             END AS novelty
           FROM documents d LEFT JOIN pd USING (doc_id)""") { (s, d) =>
-      val ex = OpsQueries.sharedShinglesFor(s, d)
+      val ex = OpsQueries.sharedShingles(s, d)
         .select(col("doc_id"), explode(col("s")).as("g"))
       val df = ex.groupBy("g").agg(count(lit(1)).as("df"))
       val pd = ex.join(df, "g")
@@ -373,9 +373,9 @@ object RetrievalQueries {
             CAST(min(jfp) AS BIGINT)::DOUBLE / 1000000 AS min_jaccard,
             CAST(max(jfp) AS BIGINT)::DOUBLE / 1000000 AS max_jaccard
           FROM pr GROUP BY 1, 2""") { (s, d) =>
-      val rcand = OpsQueries.sharedRepCandsFor(s, d)
-      val sh = OpsQueries.sharedShinglesFor(s, d)
-      val rm = OpsQueries.sharedRepMapFor(s, d)
+      val rcand = OpsQueries.sharedRepCands(s, d)
+      val sh = OpsQueries.sharedShingles(s, d)
+      val rm = OpsQueries.sharedRepMap(s, d)
       val sig = t(s, d, "documents")
         .join(rm.filter(col("doc_id") === col("rep")).select("doc_id"),
           Seq("doc_id"), "left_semi")

@@ -51,8 +51,7 @@ object SketchQueries {
                               d: String, grid: org.apache.spark.sql.DataFrame) = {
     // Pass-wide: x41 and s09 both read this identical vocab-sized frame
     // (PersistScope would persist it twice under Verify's concurrent pool).
-    val uni = graft.util.SharedStages.cached(
-      s"cms-unigram|$d|${System.identityHashCode(session)}")(
+    val uni = graft.util.SharedStages.cached("cms-unigram", session, d)(
       OpsQueries.sharedWordCounts(session, d)
         .groupBy("token").agg(sum("c").as("n"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

@@ -269,12 +269,13 @@ object ExtraQueries {
          CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS sum_value
          FROM events GROUP BY 1, 2""") { (s, d) =>
       import graft.streaming.{Ckpt, ExactlyOnceSink}
-      val tmp = java.nio.file.Files.createTempDirectory("s05_eo").toString
       // Runs on the replay's child session: the trailing no-data batch of
       // an update-mode agg emits nothing, it only evicts state the replay
       // discards. The checkpoint rides tmpfs, while the parquet OUTPUT
       // stays on disk — that's the sink's durable product, the checkpoint
-      // is replay scaffolding.
+      // is replay scaffolding. The returned frame reads the output lazily,
+      // so it lives in a pass-scoped scratch dir.
+      val tmp = graft.util.SharedStages.scratch("s05_eo")
       EventStream.awaitDone(EventStream.toParquetBatches(
         EventStream.tumblingAgg(EventStream.readEvents(EventStream.replayChild(s), d)),
         s"$tmp/out", Ckpt.fresh("s05")))
@@ -365,7 +366,7 @@ object ExtraQueries {
       val detected = graft.cli.ScanStream.findings(PiiInputs.fromCustomer(
           EventStream.streamReader(EventStream.replayChild(s), d, "customer.parquet"))
         .repartition(16))
-      val tmp = java.nio.file.Files.createTempDirectory("s06_eo").toString
+      val tmp = graft.util.SharedStages.scratch("s06_eo")
       EventStream.awaitDone(EventStream.toParquetBatches(detected, s"$tmp/out", Ckpt.fresh("s06")))
       ExactlyOnceSink.readCommitted(s, s"$tmp/out")
         .select("doc_id", "candidate_idx", "value", "rule_label", "rule_confidence")
@@ -402,10 +403,10 @@ object ExtraQueries {
       // it stands in for.
       val corpIds = s.read.parquet(s"$d/documents.parquet")
         .filter(col("source") =!= "src0").select(col("doc_id").as("corp_id"))
-      val corpBands = OpsQueries.sharedBandsFor(s, d)
+      val corpBands = OpsQueries.sharedBands(s, d)
         .select(col("doc_id").as("corp_id"), col("band"), col("band_hash"))
         .join(corpIds, Seq("corp_id"), "left_semi")
-      val corpSh = OpsQueries.sharedShinglesFor(s, d)
+      val corpSh = OpsQueries.sharedShingles(s, d)
         .select(col("doc_id").as("corp_id"), col("s").as("corp_s"))
         .join(corpIds, Seq("corp_id"), "left_semi")
       val name = "s08_sink_" + math.abs(d.hashCode).toString

@@ -391,9 +391,9 @@ object PipelineQueries {
         graft.ops.OpsQueries.stagedBands(planted).persist(lvl))
       val psh = graft.util.PersistScope.track(
         graft.ops.OpsQueries.stagedShingles(planted).persist(lvl))
-      val bandsAll = graft.ops.OpsQueries.sharedBandsFor(s, d).unionByName(pb)
+      val bandsAll = graft.ops.OpsQueries.sharedBands(s, d).unionByName(pb)
         .select(col("doc_id").as("id"), col("band"), col("band_hash"))
-      val shAll = graft.ops.OpsQueries.sharedShinglesFor(s, d).unionByName(psh)
+      val shAll = graft.ops.OpsQueries.sharedShingles(s, d).unionByName(psh)
         .select(col("doc_id").as("id"), col("s"))
       val edges = graft.ops.Dedup.nearDuplicatePairsFromFrames(bandsAll, shAll, 0.8)
       val lab = graft.ops.Dedup.connectedComponents(edges.select(col("id1"), col("id2")))
@@ -471,7 +471,7 @@ object PipelineQueries {
            CAST(coalesce(nc.n_near, 0) AS BIGINT) AS n_near_dups
          FROM pw LEFT JOIN nc ON nc.dd = pw.doc_id""") { (s, d) =>
       import graft.ops.Multimodal
-      val rm = graft.ops.OpsQueries.sharedRepMapFor(s, d)
+      val rm = graft.ops.OpsQueries.sharedRepMap(s, d)
       val reps = t(s, d, "documents")
         .join(rm.filter(col("doc_id") === col("rep")).select("doc_id"),
           Seq("doc_id"), "left_semi")

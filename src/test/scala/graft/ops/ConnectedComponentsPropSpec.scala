@@ -26,21 +26,24 @@ class ConnectedComponentsPropSpec extends SparkSpec {
   test("min-label propagation == union-find on 25 seeded random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260812L)
-    for (trial <- 1 to 25) {
+    val random = (1 to 25).map { _ =>
       val n = 2 + rnd.nextInt(23)  // node universe
       val m = 1 + rnd.nextInt(30)  // edge attempts
-      val edges = (1 to m).flatMap { _ =>
+      (1 to m).flatMap { _ =>
         val a = rnd.nextInt(n).toLong
         val b = rnd.nextInt(n).toLong
         if (a == b) None else Some((math.min(a, b), math.max(a, b)))
       }.distinct
-      if (edges.nonEmpty) {
-        val expected = unionFind(edges)
-        val got = Dedup.connectedComponents(edges.toDF("id1", "id2"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        graft.util.PersistScope.releaseAll()
-        assert(got == expected, s"trial $trial (n=$n, edges=$edges)")
-      }
+    }
+    // A star through a LARGER hub plus a reversed duplicate edge: labels
+    // must flow down through 9 to 2, and (9, 1) must not double-count.
+    val messy = Seq((1L, 9L), (2L, 9L), (9L, 1L), (20L, 21L))
+    for ((edges, trial) <- (random :+ messy).zipWithIndex if edges.nonEmpty) {
+      val expected = unionFind(edges)
+      val got = Dedup.connectedComponents(edges.toDF("id1", "id2"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      graft.util.PersistScope.releaseAll()
+      assert(got == expected, s"trial $trial (edges=$edges)")
     }
   }
 
@@ -54,46 +57,5 @@ class ConnectedComponentsPropSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     graft.util.PersistScope.releaseAll()
     assert(got == (0L to 39L).map(_ -> 0L).toMap)
-  }
-
-  test("large-star/small-star == union-find on 12 seeded random graphs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(420260812L)
-    for (trial <- 1 to 12) {
-      val n = 2 + rnd.nextInt(23)
-      val m = 1 + rnd.nextInt(30)
-      val edges = (1 to m).flatMap { _ =>
-        val a = rnd.nextInt(n).toLong
-        val b = rnd.nextInt(n).toLong
-        if (a == b) None else Some((math.min(a, b), math.max(a, b)))
-      }.distinct
-      if (edges.nonEmpty) {
-        val expected = unionFind(edges)
-        val got = Dedup.connectedComponentsStar(edges.toDF("id1", "id2"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        graft.util.PersistScope.releaseAll()
-        assert(got == expected, s"trial $trial (n=$n, edges=$edges)")
-      }
-    }
-  }
-
-  test("star variant handles deep chains, reversed duplicates, and high hubs") {
-    import spark.implicits._
-    // 50-node path, diameter 49 — the shape the star form exists for.
-    val chain = (0L until 49L).map(i => (i, i + 1))
-    val gotChain = Dedup.connectedComponentsStar(chain.toDF("id1", "id2"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.util.PersistScope.releaseAll()
-    assert(gotChain == (0L to 49L).map(_ -> 0L).toMap)
-    // star through a LARGER hub + a reversed duplicate edge: both variants
-    // must agree on the same labels.
-    val messy = Seq((1L, 9L), (2L, 9L), (9L, 1L), (20L, 21L))
-    val gotStar = Dedup.connectedComponentsStar(messy.toDF("id1", "id2"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gotProp = Dedup.connectedComponents(messy.toDF("id1", "id2"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.util.PersistScope.releaseAll()
-    assert(gotStar == Map(1L -> 1L, 2L -> 1L, 9L -> 1L, 20L -> 20L, 21L -> 20L))
-    assert(gotStar == gotProp)
   }
 }

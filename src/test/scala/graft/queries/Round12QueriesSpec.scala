@@ -30,7 +30,7 @@ class Round12QueriesSpec extends SparkSpec {
         s"jaccard order violated: $mn / $mean / $mx")
       mass += r.getAs[Long]("n_pairs")
     }
-    val nCand = graft.ops.OpsQueries.sharedRepCandsFor(spark, sf).count()
+    val nCand = graft.ops.OpsQueries.sharedRepCands(spark, sf).count()
     assert(mass == nCand, s"sum(n_pairs)=$mass != rep candidates=$nCand")
     graft.util.SharedStages.releaseAll()
   }

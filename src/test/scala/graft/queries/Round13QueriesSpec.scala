@@ -75,7 +75,7 @@ class Round13QueriesSpec extends SparkSpec {
 
   test("x134 organic: degree-ordered wedge enumeration == direct id-ordered join") {
     import spark.implicits._
-    val e = graft.ops.OpsQueries.sharedRepEdgesFor(spark, sf)
+    val e = graft.ops.OpsQueries.sharedRepEdges(spark, sf)
       .select(col("d1").as[Long], col("d2").as[Long]).collect()
     // driver-side naive recount (edge set is sparse at sf0.001)
     val es = e.map(p => (p._1, p._2)).toSet
