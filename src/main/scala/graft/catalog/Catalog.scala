@@ -1,18 +1,18 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.graftshim.shims
 
 import graft.core.CatalogColumn
 
 /** Catalog enumeration + tag write-back (SURVEY §2.1 S1-S6, S14-S17).
   *
-  * Enumeration goes through `spark.catalog` — the session's metastore client
-  * (Hive/Glue-backed in production, in-memory locally) — so no custom Thrift
-  * or AWS pagination code is needed; the reference's NextToken loops
-  * (glue.py:100-140) live inside Spark's client. Glob filters are applied to
-  * db/table names like the reference's fnmatch (and, unlike the reference,
-  * can be pushed into `listTables(db, pattern)`).
+  * Both go through the session catalog as a v2 `TableCatalog` (backed by
+  * Hive or Glue in production, in-memory locally), so the reference's
+  * NextToken loops (glue.py:100-140) live inside Spark's client, and names
+  * travel as parts: a `.` or a backtick in a column name needs no escaping.
+  * Glob filters are applied to db/table names like the reference's fnmatch.
   */
 object Connectors {
 
@@ -27,44 +27,42 @@ object Connectors {
 
   def globMatch(glob: String, s: String): Boolean = s.matches(globToRegex(glob))
 
-  private def anyMatch(patterns: Seq[String], s: String): Boolean =
+  private[catalog] def anyMatch(patterns: Seq[String], s: String): Boolean =
     patterns.isEmpty || patterns.exists(globMatch(_, s))
 
-  /** Enumerate columns of every table matching the patterns into a
-    * Dataset[CatalogColumn] (S3/S6 equivalent over the session catalog). */
-  def iterColumns(spark: SparkSession,
-                  dbPatterns: Seq[String] = Seq("*"),
-                  tablePatterns: Seq[String] = Seq("*"),
-                  source: String = "hms"): Dataset[CatalogColumn] = {
-    import spark.implicits._
-    val cols = for {
-      db <- spark.catalog.listDatabases().collect().toSeq.map(_.name)
-      if anyMatch(dbPatterns, db)
-      tb <- spark.catalog.listTables(db).collect().toSeq
-      if anyMatch(tablePatterns, tb.name) && !tb.isTemporary
-      c <- spark.catalog.listColumns(db, tb.name).collect().toSeq
-    } yield CatalogColumn(source, "", db, tb.name, c.name,
-      Option(c.dataType).getOrElse(""), Option(c.description).getOrElse(""), Map.empty)
-    spark.createDataset(cols)
+  /** Columns of matching tables and persistent views in database, table and
+    * schema order, one `loadTable` per table (temp views, listed with an
+    * empty namespace, are left out). */
+  def columns(spark: SparkSession, dbPatterns: Seq[String], tablePatterns: Seq[String],
+              source: String = "hms"): Seq[CatalogColumn] = {
+    val catalog = shims.sessionCatalog(spark)
+    for {
+      ns <- catalog.listNamespaces().toSeq.sortBy(_.mkString("."))
+      if anyMatch(dbPatterns, ns.mkString("."))
+      id <- catalog.listTables(ns).toSeq.sortBy(_.name)
+      if id.namespace.nonEmpty && anyMatch(tablePatterns, id.name)
+      c <- catalog.loadTable(id).columns.toSeq
+    } yield CatalogColumn(source, "", ns.mkString("."), id.name, c.name,
+      c.dataType.catalogString, Option(c.comment).getOrElse(""), Map.empty)
   }
+
+  /** [[columns]] as a Dataset (S3/S6 equivalent over the session catalog). */
+  def iterColumns(spark: SparkSession, dbPatterns: Seq[String] = Seq("*"),
+                  tablePatterns: Seq[String] = Seq("*"), source: String = "hms"): Dataset[CatalogColumn] =
+    spark.createDataset(columns(spark, dbPatterns, tablePatterns, source))(Encoders.product[CatalogColumn])
 }
 
 /** Idempotent tag computation + application (glue.py:184-235, hms.py:110-162,
   * unity.py:246-345). The decision logic is pure (unit-testable, identical
-  * across connectors); application goes through native Spark SQL
-  * `ALTER TABLE … SET TBLPROPERTIES` from a deduplicated driver-side
-  * collection — never from tasks, so distributed retries can't double-apply
-  * (SURVEY §7.4 #6). */
+  * across connectors); application goes through the session catalog's
+  * `TableCatalog` from a deduplicated driver-side collection — never from
+  * tasks, so distributed retries can't double-apply (SURVEY §7.4 #6): per
+  * table one `loadTable`, at most one `alterTable`. Finding rows carry the
+  * fields `schema`, `table`, `column` and `types` (an array of names). */
 object WriteBack {
 
   val PiiFlagKey = "pii"
   def typesKey(column: String) = s"cps.pii_types.col.$column"
-
-  /** Escape a string for interpolation inside a single-quoted SQL literal. */
-  private def sqlStr(s: String): String = s.replace("'", "''")
-
-  /** Escape an identifier for interpolation inside backtick quoting. */
-  private def ident(s: String): String = s.replace("`", "``")
 
   /** Sorted-CSV normalizer (C25). */
   def sortedCsv(types: Seq[String]): String = types.distinct.sorted.mkString(",")
@@ -89,66 +87,53 @@ object WriteBack {
     merged.take(maxLen)
   }
 
-  /** Apply PII notes to column comments via native
-    * `ALTER TABLE … ALTER COLUMN … COMMENT` (S15/S17 application path) with
-    * append-if-absent change detection: re-running is a no-op. `findings`
-    * columns: (schema, table, column, types array). Returns comments changed.
-    *
-    * Findings are grouped by table first so the metastore pays ONE
-    * listColumns round trip per table, not one per finding row — a wide
-    * table with 200 flagged columns is 1 call, not 200. `listDescriptions`
-    * is injectable so specs can count those round trips. */
-  def applyColumnComments(spark: SparkSession, findings: DataFrame,
-                          maxLen: Int = 255,
-                          listDescriptions: (String, String) => Map[String, String] = null): Int = {
-    val list: (String, String) => Map[String, String] =
-      if (listDescriptions != null) listDescriptions
-      else (db, tb) => spark.catalog.listColumns(db, tb).collect()
-        .map(c => c.name -> Option(c.description).getOrElse("")).toMap
-    val rows = findings.select("schema", "table", "column", "types").distinct().collect()
-    var changed = 0
-    for (((db, tb), perTable) <- rows.groupBy(r => (r.getString(0), r.getString(1)))
-                                     .toSeq.sortBy(_._1)) {
-      val existingByCol = list(db, tb)
-      for (r <- perTable.sortBy(_.getString(2))) {
-        val c = r.getString(2)
-        val note = s"PII: ${sortedCsv(r.getSeq[String](3))}"
-        val existing = existingByCol.getOrElse(c, "")
-        val merged = appendComment(existing, note, maxLen)
-        if (merged != existing) {
-          spark.sql(s"ALTER TABLE `${ident(db)}`.`${ident(tb)}` ALTER COLUMN `${ident(c)}` COMMENT '${sqlStr(merged)}'")
-          changed += 1
-        }
+  /** Per table, in order, one `loadTable` and one `alterTable` with the changes
+    * `diff` derives from it and the table's distinct (column, types) findings,
+    * if any. Returns the number of changes per table. */
+  private def alterPerTable(spark: SparkSession, findings: Seq[Row])(
+      diff: (Identifier, Table, Seq[(String, Seq[String])]) => Seq[TableChange]): Seq[Int] = {
+    val catalog = shims.sessionCatalog(spark)
+    findings.map(r => ((r.getAs[String]("schema"), r.getAs[String]("table")),
+        (r.getAs[String]("column"), r.getSeq[String](r.fieldIndex("types")).toSeq)))
+      .distinct.groupBy(_._1).toSeq.sortBy(_._1).map { case ((db, tb), fs) =>
+        val id = Identifier.of(Array(db), tb)
+        val table = catalog.loadTable(id)
+        val changes = diff(id, table, fs.map(_._2).sortBy(_._1))
+        // re-set, or the session catalog drops it: it reads the comment from properties
+        val comment = Option(table.properties.get(TableCatalog.PROP_COMMENT))
+          .map(TableChange.setProperty(TableCatalog.PROP_COMMENT, _))
+        if (changes.nonEmpty) catalog.alterTable(id, (changes ++ comment): _*)
+        changes.size
       }
-    }
-    changed
   }
 
-  /** Apply findings as table properties via Spark SQL. `findings` columns:
-    * (schema, table, column, types array). Collects the (tiny, deduplicated)
-    * finding set on the driver and issues one ALTER per table. */
-  def applyTags(spark: SparkSession, findings: DataFrame): Int = {
-    val perTable = findings
-      .groupBy("schema", "table")
-      .agg(map_from_entries(collect_list(struct(
-        col("column"), array_join(array_sort(col("types")), ",")))).as("colTypes"))
-      .collect()
-    var applied = 0
-    for (row <- perTable) {
-      val db = row.getString(0); val tb = row.getString(1)
-      val colTypes = row.getMap[String, String](2)
-      val existing = spark.sql(s"SHOW TBLPROPERTIES `${ident(db)}`.`${ident(tb)}`")
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val wanted = colTypes.toSeq.sortBy(_._1).flatMap { case (c, csv) =>
-        val k = typesKey(c)
-        if (existing.get(k).contains(csv)) None else Some(k -> csv)
-      } ++ (if (existing.get(PiiFlagKey).contains("true")) None else Some(PiiFlagKey -> "true"))
-      if (wanted.nonEmpty) {
-        val props = wanted.map { case (k, v) => s"'${sqlStr(k)}'='${sqlStr(v)}'" }.mkString(", ")
-        spark.sql(s"ALTER TABLE `${ident(db)}`.`${ident(tb)}` SET TBLPROPERTIES ($props)")
-        applied += 1
+  /** Apply PII notes to column comments (S15/S17 application path) with
+    * append-if-absent change detection: re-running is a no-op. Returns
+    * comments changed. Each table's comments are read ONCE, not once per
+    * finding; `listDescriptions` is injectable so specs can count reads. */
+  def applyColumnComments(spark: SparkSession, findings: DataFrame, maxLen: Int = 255,
+                          listDescriptions: (String, String) => Map[String, String] = null): Int =
+    alterPerTable(spark, findings.select("schema", "table", "column", "types").collect().toSeq) { (id, table, cols) =>
+      val existingByCol =
+        if (listDescriptions != null) listDescriptions(id.namespace.head, id.name)
+        else table.columns.map(c => c.name -> Option(c.comment).getOrElse("")).toMap
+      cols.flatMap { case (c, types) =>
+        val existing = existingByCol.getOrElse(c, "")
+        val merged = appendComment(existing, s"PII: ${sortedCsv(types)}", maxLen)
+        if (merged == existing) None else Some(TableChange.updateColumnComment(Array(c), merged))
       }
-    }
-    applied
-  }
+    }.sum
+
+  /** Apply findings as table properties: the `pii` flag and one sorted-CSV
+    * types key per column, set only where they differ. Metastore calls
+    * only, no Spark job. Returns tables altered. */
+  def applyTags(spark: SparkSession, findings: Seq[Row]): Int =
+    alterPerTable(spark, findings) { (_, table, cols) =>
+      ((PiiFlagKey -> "true") +: cols.map { case (c, ts) => typesKey(c) -> sortedCsv(ts) })
+        .collect { case (k, v) if table.properties.get(k) != v => TableChange.setProperty(k, v) }
+    }.count(_ > 0)
+
+  /** [[applyTags]] over a findings frame, collected on the driver. */
+  def applyTags(spark: SparkSession, findings: DataFrame): Int =
+    applyTags(spark, findings.select("schema", "table", "column", "types").collect().toSeq)
 }

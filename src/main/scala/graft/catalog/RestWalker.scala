@@ -44,12 +44,11 @@ object RestWalker {
       catalogPatterns: Seq[String] = Seq("*"),
       schemaPatterns: Seq[String] = Seq("*"),
       tablePatterns: Seq[String] = Seq("*")): Seq[CatalogColumn] = {
-    def matches(pats: Seq[String], s: String) =
-      pats.isEmpty || pats.exists(Connectors.globMatch(_, s))
+    import Connectors.anyMatch
     for {
-      cat <- drain(listCatalogs) if matches(catalogPatterns, cat)
-      sch <- drain(listSchemas(cat)) if matches(schemaPatterns, sch)
-      tbl <- drain(listTables(cat, sch)) if matches(tablePatterns, tbl)
+      cat <- drain(listCatalogs) if anyMatch(catalogPatterns, cat)
+      sch <- drain(listSchemas(cat)) if anyMatch(schemaPatterns, sch)
+      tbl <- drain(listTables(cat, sch)) if anyMatch(tablePatterns, tbl)
       c <- getColumns(TableRef(cat, sch, tbl))
     } yield CatalogColumn("unity", cat, sch, tbl, c.name, c.dataType, c.comment, c.properties)
   }

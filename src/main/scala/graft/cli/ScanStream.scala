@@ -89,7 +89,7 @@ object ScanStream {
     val (inDir, outDir) = args match {
       case Array(i, o, _*) => (i, o)
       case _ =>
-        val tmp = java.nio.file.Files.createTempDirectory("scanstream").toString
+        val tmp = graft.util.SharedStages.scratch("scanstream") // deleted at JVM exit
         graft.queries.PiiInputs.df(spark, "/root/testdata/sf0.001")
           .write.parquet(s"$tmp/in")
         (s"$tmp/in", s"$tmp/out")

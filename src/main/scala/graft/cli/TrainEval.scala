@@ -35,7 +35,7 @@ object TrainEval {
     import spark.implicits._
 
     // 1. gen-synth (+ JSONL roundtrip like the CLI does)
-    val dir = java.nio.file.Files.createTempDirectory("traineval").toString
+    val dir = graft.util.SharedStages.scratch("traineval") // deleted at JVM exit
     Synth.saveJsonl(Synth.generate(spark, n, seed), s"$dir/synth.jsonl")
     val ds = Synth.loadJsonl(spark, s"$dir/synth.jsonl").toDF()
       .withColumn("doc_id", monotonically_increasing_id())

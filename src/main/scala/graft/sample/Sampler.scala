@@ -1,6 +1,7 @@
 package graft.sample
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIdentifier
 import org.apache.spark.sql.functions._
 
 /** Column value sampling (reference: sampler.py:85-220, athena.py:97-254).
@@ -19,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * All modes apply the reference's implicit predicates: IS NOT NULL (F1),
   * optional user `where` (F2), non-empty (F6), then distinct (F5) before the
-  * limit.
+  * limit. `column` is taken literally: `a.b` is not field `b` of struct `a`.
   */
 object Sampler {
 
@@ -31,7 +32,7 @@ object Sampler {
   def sampleColumn(df: DataFrame, column: String, n: Int,
                    where: Option[String] = None,
                    mode: Mode = Rand()): DataFrame = {
-    val c = col(column)
+    val c = col(quoteIdentifier(column))
     val base0 = df.filter(c.isNotNull && length(c.cast("string")) > 0)
     val base = where.fold(base0)(w => base0.filter(expr(w)))
     val picked = mode match {

@@ -28,8 +28,10 @@ object FindingsStore {
   val ExportColumns = Seq("id", "column_ref", "types", "confidence", "hit_rate",
     "model_version", "scanned_at", "source")
 
-  /** Build finding rows from per-(column_ref, label) detection output. */
-  def toFindings(detections: DataFrame, modelVersion: String, source: String): DataFrame =
+  /** Build finding rows from per-(column_ref, label) detection output. `scanned_at`
+    * is one instant per call, read by a UDF so the projection compiles once per JVM. */
+  def toFindings(detections: DataFrame, modelVersion: String, source: String): DataFrame = {
+    val scannedAt = java.time.Instant.now()
     detections
       .groupBy("column_ref")
       .agg(
@@ -37,8 +39,9 @@ object FindingsStore {
         round(max(col("score")), 6).as("confidence"),
         round(avg(when(col("label").isNotNull, 1.0).otherwise(0.0)), 6).as("hit_rate"))
       .withColumn("model_version", lit(modelVersion))
-      .withColumn("scanned_at", current_timestamp())
+      .withColumn("scanned_at", udf(() => scannedAt).asNonNullable()())
       .withColumn("source", lit(source))
+  }
 
   def writeParquet(findings: DataFrame, path: String): Unit = {
     LocalFs.register(findings.sparkSession.sparkContext)

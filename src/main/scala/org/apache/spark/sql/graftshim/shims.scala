@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.connector.catalog.{SupportsNamespaces, TableCatalog}
 
 /** Bridge to the `private[sql]` Column↔Expression converters, the supported
   * route for third-party Catalyst expression libraries on Spark 4.x (the
@@ -18,4 +19,8 @@ object shims {
     ext.registerFunctions(spark.sessionState.functionRegistry)
     ()
   }
+
+  /** The session catalog as a v2 catalog (`catalogManager` is `private[sql]`). */
+  def sessionCatalog(spark: org.apache.spark.sql.SparkSession): TableCatalog with SupportsNamespaces =
+    spark.sessionState.catalogManager.v2SessionCatalog.asInstanceOf[TableCatalog with SupportsNamespaces]
 }

@@ -97,22 +97,31 @@ class ConfigSpec extends AnyFunSuite {
 }
 
 class SamplerSpec extends SparkSpec {
+  // `a.b` and `na`me` copy c_name: each name is one column, taken literally
   private lazy val customers = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    .withColumn("a.b", col("c_name")).withColumn("na`me", col("c_name"))
+  private val names = Seq("c_name", "a.b", "na`me")
 
   test("rand mode: n distinct non-null values, seed-deterministic") {
-    val a = Sampler.sampleColumn(customers, "c_name", 5, mode = Sampler.Rand(42)).collect().toSet
-    val b = Sampler.sampleColumn(customers, "c_name", 5, mode = Sampler.Rand(42)).collect().toSet
-    assert(a.size == 5)
-    assert(a == b)
+    val byName = names.map { c =>
+      val a = Sampler.sampleColumn(customers, c, 5, mode = Sampler.Rand(42)).collect().toSet
+      val b = Sampler.sampleColumn(customers, c, 5, mode = Sampler.Rand(42)).collect().toSet
+      assert(a.size == 5, c)
+      assert(a == b, c)
+      a
+    }
+    assert(byName.distinct.size == 1)
   }
 
   test("where predicate narrows the pool (F2)") {
-    val got = Sampler.sampleColumn(customers, "c_name", 100,
-      where = Some("c_mktsegment = 'BUILDING'"), mode = Sampler.HashPrefix(Seq("0", "1", "2", "3")))
-      .collect().map(_.getString(0)).toSet
     val pool = customers.filter(col("c_mktsegment") === "BUILDING")
       .select("c_name").collect().map(_.getString(0)).toSet
-    assert(got.nonEmpty && got.subsetOf(pool))
+    for (c <- names) {
+      val got = Sampler.sampleColumn(customers, c, 100,
+        where = Some("c_mktsegment = 'BUILDING'"), mode = Sampler.HashPrefix(Seq("0", "1", "2", "3")))
+        .collect().map(_.getString(0)).toSet
+      assert(got.nonEmpty && got.subsetOf(pool), c)
+    }
   }
 
   test("hit rate over sampled values") {
