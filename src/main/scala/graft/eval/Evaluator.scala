@@ -56,52 +56,21 @@ object Evaluator {
     * @param gold  (doc_id, gold_idx, start, end, type)
     * @return (doc_id, kind, label) where kind ∈ tp|fp|fn — one row per
     *         matched pred, unmatched pred, and unused gold. */
-  def matchOutcomes(preds: DataFrame, gold: DataFrame): DataFrame = {
-    val spark = preds.sparkSession
-    import spark.implicits._
-    val p = preds.select(col("doc_id").cast("long"), col("pred_idx").cast("long"),
-      col("start").cast("int"), col("end").cast("int"), col("label"))
-      .as[(Long, Long, Int, Int, String)]
-      .map { case (d, i, s, e, l) => (d, 0, i, s, e, l) }
-    val g = gold.select(col("doc_id").cast("long"), col("gold_idx").cast("long"),
-      col("start").cast("int"), col("end").cast("int"), col("type"))
-      .as[(Long, Long, Int, Int, String)]
-      .map { case (d, i, s, e, l) => (d, 1, i, s, e, l) }
-    p.union(g)
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, rows) =>
-        val all = rows.toVector
-        val ps = all.filter(_._2 == 0).sortBy(_._3).map(r => (r._4, r._5, r._6))
-        val gs = all.filter(_._2 == 1).sortBy(_._3).map(r => (r._4, r._5, r._6))
-        val used = Array.fill(gs.size)(false)
-        val out = Vector.newBuilder[(Long, String, String)]
-        for ((s, e, l) <- ps) {
-          var matched = false
-          var j = 0
-          while (!matched && j < gs.size) {
-            val (g2s, g2e, gt) = gs(j)
-            if (!used(j) && s < g2e && g2s < e && l == gt) {
-              used(j) = true; matched = true
-              out += ((docId, "tp", gt))
-            }
-            j += 1
-          }
-          if (!matched) out += ((docId, "fp", Option(l).getOrElse(PiiTypes.ALL.head)))
-        }
-        for (j <- gs.indices; if !used(j)) out += ((docId, "fn", gs(j)._3))
-        out.result()
-      }
-      .toDF("doc_id", "kind", "label")
-  }
+  def matchOutcomes(preds: DataFrame, gold: DataFrame): DataFrame =
+    matchOutcomesTagged(
+      preds.select(col("doc_id"), lit(0).as("role"), col("pred_idx").as("ord"),
+        col("start"), col("end"), col("label"))
+        .unionByName(gold.select(col("doc_id"), lit(1).as("role"), col("gold_idx").as("ord"),
+          col("start"), col("end"), col("type").as("label"))))
 
-  /** Single-pass form of [[matchOutcomes]]: both preds and golds arrive in ONE
-    * frame, so the upstream candidate pipeline is scanned once (no cache /
-    * checkpoint needed to feed separate pred and gold branches).
+  /** The one distributed matcher: both preds and golds arrive in ONE frame,
+    * so a caller can feed them from a single scan of its candidate pipeline
+    * (no cache / checkpoint needed to feed separate pred and gold branches).
     *
     * @param tagged (doc_id, role 0=pred | 1=gold, ord, start, end, label);
     *               preds matched in `ord` order, golds claimed in
-    *               (start, label) order — the same orders matchOutcomes gets
-    *               from pred_idx and a (start, type) row_number. */
+    *               (ord, start, label) order — a caller with no gold order
+    *               of its own passes ord 0 to get (start, label). */
   def matchOutcomesTagged(tagged: DataFrame): DataFrame = {
     val spark = tagged.sparkSession
     import spark.implicits._
@@ -113,7 +82,7 @@ object Evaluator {
       .flatMapGroups { (docId, rows) =>
         val all = rows.toVector
         val ps = all.filter(_._2 == 0).sortBy(_._3).map(r => (r._4, r._5, r._6))
-        val gs = all.filter(_._2 == 1).map(r => (r._4, r._5, r._6)).sortBy(g => (g._1, g._3))
+        val gs = all.filter(_._2 == 1).sortBy(r => (r._3, r._4, r._6)).map(r => (r._4, r._5, r._6))
         val used = Array.fill(gs.size)(false)
         val out = Vector.newBuilder[(Long, String, String)]
         for ((s, e, l) <- ps) {

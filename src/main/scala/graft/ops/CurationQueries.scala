@@ -756,8 +756,7 @@ object CurationQueries {
            coalesce(agg.mr, 0) >= 9 AS quarantine
          FROM documents d LEFT JOIN agg ON agg.doc_id = d.doc_id
          WHERE d.doc_id >= 10""") { (s, d) =>
-      val name = "s17_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runDecontamGate(s, d, name))
+      EventStream.sinkTable(EventStream.runDecontamGate(s, d, "s17_sink"))
         .select(col("doc_id"), col("n_bench_hits"),
           col("max_span_tokens"), col("quarantine"))
     },
@@ -796,9 +795,8 @@ object CurationQueries {
             coalesce(pb.nblk, 0) = 0 AS admitted,
             CAST(pb.blocker AS BIGINT) AS first_blocker
           FROM documents d LEFT JOIN pb USING (doc_id)""") { (s, d) =>
-      val name = "s25_sink_" + math.abs(d.hashCode).toString
       val sink = EventStream.sinkTable(
-        EventStream.runLshAdmission(s, d, name, OpsQueries.stagedBands))
+        EventStream.runLshAdmission(s, d, "s25_sink", OpsQueries.stagedBands))
       val pb = sink.groupBy("doc_id").agg(
         count(lit(1)).as("nb"),
         sum(when(col("blocked"), 1L).otherwise(0L)).as("nblk"),
@@ -851,9 +849,8 @@ object CurationQueries {
            coalesce(pb.nblk, 0) = 0 AS admitted,
            CAST(pb.blocker AS BIGINT) AS first_blocker
          FROM documents d LEFT JOIN pb USING (doc_id)""") { (s, d) =>
-      val name = "s26_sink_" + math.abs(d.hashCode).toString
       val sink = EventStream.sinkTable(
-        EventStream.runLshAdmission(s, d, name, graft.ops.Multimodal.phashBands))
+        EventStream.runLshAdmission(s, d, "s26_sink", graft.ops.Multimodal.phashBands))
       val pb = sink.groupBy("doc_id").agg(
         count(lit(1)).as("nb"),
         sum(when(col("blocked"), 1L).otherwise(0L)).as("nblk"),
@@ -1002,8 +999,7 @@ object CurationQueries {
     // exact oracle. Runner in EventStream.runEventDedup.
     QueryDef("s18_stream_event_dedup",
       "SELECT DISTINCT user_id, event_type, ts FROM events") { (s, d) =>
-      val name = "s18_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runEventDedup(s, d, name))
+      EventStream.sinkTable(EventStream.runEventDedup(s, d, "s18_sink"))
         .select(col("user_id"), col("event_type"), col("ts"))
     },
 
@@ -1057,8 +1053,7 @@ object CurationQueries {
           n AS (SELECT nation, seg, band, count(*) AS cn FROM c GROUP BY 1, 2, 3)
           SELECT c.c_custkey, c.nation, c.seg, c.band
           FROM c JOIN n USING (nation, seg, band) WHERE n.cn >= 5""") { (s, d) =>
-      val name = "s19_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runKAnonGate(s, d, name))
+      EventStream.sinkTable(EventStream.runKAnonGate(s, d, "s19_sink"))
         .select(col("c_custkey"), col("nation"), col("seg"), col("band"))
     },
 
@@ -1086,8 +1081,7 @@ object CurationQueries {
                          < len(string_split(text, ' ')) THEN 'low_stopword'
                     ELSE 'keep' END AS disposition
              FROM documents))""") { (s, d) =>
-      val name = "s16_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runIngestGate(s, d, name))
+      EventStream.sinkTable(EventStream.runIngestGate(s, d, "s16_sink"))
         .select(col("source"), col("doc_id"), col("n_tokens"),
           col("disposition"), col("accepted"))
     },
@@ -1112,8 +1106,7 @@ object CurationQueries {
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_doc,
              (1 + CAST(substr(source, 4) AS INT) % 3) * 3000 AS budget
            FROM documents)""") { (s, d) =>
-      val name = "s15_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runQuotaMaintain(s, d, name))
+      EventStream.sinkTable(EventStream.runQuotaMaintain(s, d, "s15_sink"))
         .select(col("source"), col("doc_id"), col("n_tokens"), col("accepted"))
     })
 }

@@ -632,8 +632,7 @@ object PqQueries {
           SELECT vec_id, CAST(vd2 AS BIGINT) AS q_err_micro,
             vd2 * 10 > (SELECT base FROM b) * 12 AS drifted
           FROM vd""") { (s, d) =>
-      val name = "s22_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runDriftGate(s, d, name))
+      EventStream.sinkTable(EventStream.runDriftGate(s, d, "s22_sink"))
         .select(col("vec_id"), col("q_err_micro"), col("drifted"))
     },
 

@@ -122,9 +122,8 @@ object SketchQueries {
     // regardless of how the input was batched. Gate: the streamed grid
     // must yield EXACTLY x41's estimates — same oracle, verbatim.
     QueryDef("s09_stream_cms", CmsHeavyHittersSql) { (s, d) =>
-      val name = "s09_sink_" + math.abs(d.hashCode).toString
       val sink = EventStream.sinkTable(
-        EventStream.runCmsMaintain(s, d, name, CmsDepth, CmsWidth))
+        EventStream.runCmsMaintain(s, d, "s09_sink", CmsDepth, CmsWidth))
       // The grid is ≤ depth×width cells BY CONSTRUCTION (the sketch
       // property) — small enough to lift onto the parent session as a
       // local relation, so the verify tail runs where the pass-wide
@@ -274,8 +273,7 @@ object SketchQueries {
     // quantile scan and the gate is x76's batch oracle VERBATIM — nobody
     // can tell the streamed sketch from the batch one.
     QueryDef("s12_stream_histogram", HistQuantilesSql) { (s, d) =>
-      val name = "s12_sink_" + math.abs(d.hashCode).toString
-      val sink = EventStream.sinkTable(EventStream.runHistMaintain(s, d, name))
+      val sink = EventStream.sinkTable(EventStream.runHistMaintain(s, d, "s12_sink"))
       // ONE aggregation reshapes the cell state into (n, hb, vc) — three
       // filtered branches would self-join the memory-sink view, which the
       // analyzer cannot deduplicate (MemoryPlan attrs are fixed).
@@ -308,8 +306,7 @@ object SketchQueries {
                PARTITION BY lang ORDER BY doc_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_doc
            FROM documents)""") { (s, d) =>
-      val name = "s13_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runPackingMaintain(s, d, name))
+      EventStream.sinkTable(EventStream.runPackingMaintain(s, d, "s13_sink"))
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("bin_id"))
     },
 
@@ -330,8 +327,7 @@ object SketchQueries {
               PARTITION BY source ORDER BY w * 65536.0 / (h + 1) DESC, doc_id) AS rn FROM r)
           WHERE rn <= 25""") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val name = "s14_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runWeightedSampleMaintain(s, d, name))
+      EventStream.sinkTable(EventStream.runWeightedSampleMaintain(s, d, "s14_sink"))
         .select(col("source"), explode(col("top")).as("p"))
         .select(col("source"), col("p.np").as("np"), col("p.doc_id").as("doc_id"),
           col("p.w").as("w"), col("p.priority").as("priority"))

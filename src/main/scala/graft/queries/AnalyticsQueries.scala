@@ -698,8 +698,7 @@ object AnalyticsQueries {
           UNION ALL
           SELECT user_id, 'purchase_after_click', t3 FROM z WHERE t3 IS NOT NULL""") {
       (s, d) =>
-      val name = "s20_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runFunnel(s, d, name))
+      EventStream.sinkTable(EventStream.runFunnel(s, d, "s20_sink"))
         .select(col("user_id"), col("stage"), col("ts"))
     },
 
@@ -719,8 +718,7 @@ object AnalyticsQueries {
              FROM events)
           SELECT f AS from_type, t AS to_type, CAST(count(*) AS BIGINT) AS n
           FROM seq WHERE t IS NOT NULL GROUP BY 1, 2""") { (s, d) =>
-      val name = "s21_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runTransitions(s, d, name))
+      EventStream.sinkTable(EventStream.runTransitions(s, d, "s21_sink"))
         .groupBy("from_type", "to_type")
         .agg(count(lit(1)).cast("long").as("n"))
         .select(col("from_type"), col("to_type"), col("n"))
@@ -944,8 +942,7 @@ object AnalyticsQueries {
          SELECT user_id, version, event_type, valid_from_us, valid_to_us, n_events,
            valid_to_us IS NULL AS is_current
          FROM fin""") { (s, d) =>
-      val name = "s27_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runScd2(s, d, name))
+      EventStream.sinkTable(EventStream.runScd2(s, d, "s27_sink"))
         .groupBy("user_id", "version")
         .agg(max(struct(
           when(col("is_current"), 0).otherwise(1).as("cl"),

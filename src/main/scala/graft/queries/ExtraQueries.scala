@@ -170,8 +170,7 @@ object ExtraQueries {
          count(*) AS n,
          CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS sum_value
          FROM events GROUP BY 1, 2""") { (s, d) =>
-      val name = "s01_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runOnce(s, d, name))
+      EventStream.sinkTable(EventStream.runOnce(s, d, "s01_sink"))
     },
 
     // Stateful streaming with CUSTOM state (flatMapGroupsWithState): per-user
@@ -185,8 +184,7 @@ object ExtraQueries {
            CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS sum_value
          FROM events e JOIN customer c ON c.c_custkey = e.user_id
          GROUP BY 1""") { (s, d) =>
-      val name = "s03_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runEnriched(s, d, name))
+      EventStream.sinkTable(EventStream.runEnriched(s, d, "s03_sink"))
     },
 
     // Streaming dedup chained into a stateful aggregate: watermarked
@@ -195,8 +193,7 @@ object ExtraQueries {
     QueryDef("s04_stream_dedup",
       """SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
          FROM events GROUP BY 1""") { (s, d) =>
-      val name = "s04_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runDistinctUsers(s, d, name))
+      EventStream.sinkTable(EventStream.runDistinctUsers(s, d, "s04_sink"))
     },
 
     QueryDef("s02_stream_sessionize",
@@ -205,10 +202,9 @@ object ExtraQueries {
              CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
                   THEN 1 ELSE 0 END AS is_new
            FROM events) GROUP BY user_id""") { (s, d) =>
-      val name = "s02_sink_" + math.abs(d.hashCode).toString
       // update-mode memory sink appends per batch; take the latest emission
       EventStream.sessionTotals(
-        EventStream.sinkTable(EventStream.runSessionize(s, d, name)))
+        EventStream.sinkTable(EventStream.runSessionize(s, d, "s02_sink")))
     },
 
     // NATIVE session_window streaming aggregation (s23) — the built-in
@@ -224,9 +220,8 @@ object ExtraQueries {
              CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
                   THEN 1 ELSE 0 END AS is_new
            FROM events) GROUP BY user_id""") { (s, d) =>
-      val name = "s23_sink_" + math.abs(d.hashCode).toString
       EventStream.sessionWindowTotals(
-        EventStream.sinkTable(EventStream.runSessionWindow(s, d, name)))
+        EventStream.sinkTable(EventStream.runSessionWindow(s, d, "s23_sink")))
         .select(col("user_id"), col("n_sessions").cast("long").as("n_sessions"),
           col("n_events").cast("long").as("n_events"))
     },
@@ -252,9 +247,8 @@ object ExtraQueries {
             CAST(count(DISTINCT CASE WHEN late = 1 THEN user_id END) AS BIGINT)
               AS n_users_late
           FROM l""") { (s, d) =>
-      val name = "s24_sink_" + math.abs(d.hashCode).toString
       EventStream.latenessTotals(
-        EventStream.sinkTable(EventStream.runLatenessAudit(s, d, name)))
+        EventStream.sinkTable(EventStream.runLatenessAudit(s, d, "s24_sink")))
     },
 
     // The exactly-once foreachBatch sink through the correctness gate: the
@@ -268,17 +262,15 @@ object ExtraQueries {
          count(*) AS n,
          CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS sum_value
          FROM events GROUP BY 1, 2""") { (s, d) =>
-      import graft.streaming.{Ckpt, ExactlyOnceSink}
+      import graft.streaming.ExactlyOnceSink
       // Runs on the replay's child session: the trailing no-data batch of
       // an update-mode agg emits nothing, it only evicts state the replay
-      // discards. The checkpoint rides tmpfs, while the parquet OUTPUT
-      // stays on disk — that's the sink's durable product, the checkpoint
-      // is replay scaffolding. The returned frame reads the output lazily,
-      // so it lives in a pass-scoped scratch dir.
+      // discards. The returned frame reads the output lazily, so output
+      // and checkpoint share one pass-scoped scratch dir.
       val tmp = graft.util.SharedStages.scratch("s05_eo")
       EventStream.awaitDone(EventStream.toParquetBatches(
         EventStream.tumblingAgg(EventStream.readEvents(EventStream.replayChild(s), d)),
-        s"$tmp/out", Ckpt.fresh("s05")))
+        s"$tmp/out", s"$tmp/_checkpoint"))
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("window_start", "event_type")
         .orderBy(col("batch_id").desc)
@@ -303,12 +295,11 @@ object ExtraQueries {
           AND p.user_id = c.user_id
           AND date_trunc('second', p.ts) >= date_trunc('second', c.ts)
           AND date_trunc('second', p.ts) <= date_trunc('second', c.ts) + INTERVAL 1 HOUR""") { (s, d) =>
-      val name = "s07_sink_" + math.abs(d.hashCode).toString
       // The replay's 4 state partitions: a stream-stream join keeps TWO
       // keyed state stores per partition (one per side); state cardinality
       // is the user count, so 8 partitions paid 16 store inits per
       // micro-batch for no parallelism the 150-key state can use.
-      EventStream.sinkTable(EventStream.runAttribution(s, d, name))
+      EventStream.sinkTable(EventStream.runAttribution(s, d, "s07_sink"))
     },
 
     // Stream-stream LEFT OUTER interval join — the null-emitting semantics
@@ -338,8 +329,7 @@ object ExtraQueries {
          WHERE NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
              AND p.p_ts >= c.c_ts AND p.p_ts <= c.c_ts + INTERVAL 1 HOUR)
            AND c.c_ts + INTERVAL 1 HOUR < wm.wm""") { (s, d) =>
-      val name = "s11_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.runAttributionOuter(s, d, name))
+      EventStream.sinkTable(EventStream.runAttributionOuter(s, d, "s11_sink"))
     },
 
     // INCREMENTAL PII scan — the reference's core batch use case run as a
@@ -351,7 +341,7 @@ object ExtraQueries {
     // tell it apart from the batch one.
     QueryDef("s06_stream_pii_scan",
       PiiQueries.defs.find(_.name == "p01_pii_candidates").get.oracle.get) { (s, d) =>
-      import graft.streaming.{Ckpt, ExactlyOnceSink}
+      import graft.streaming.ExactlyOnceSink
       // FileStreamSource takes a directory; select the customer file by glob.
       // Stateless append pipeline on the replay's child session: no state
       // stores, and no trailing no-data batch to write (and commit) an
@@ -367,7 +357,7 @@ object ExtraQueries {
           EventStream.streamReader(EventStream.replayChild(s), d, "customer.parquet"))
         .repartition(16))
       val tmp = graft.util.SharedStages.scratch("s06_eo")
-      EventStream.awaitDone(EventStream.toParquetBatches(detected, s"$tmp/out", Ckpt.fresh("s06")))
+      EventStream.awaitDone(EventStream.toParquetBatches(detected, s"$tmp/out", s"$tmp/_checkpoint"))
       ExactlyOnceSink.readCommitted(s, s"$tmp/out")
         .select("doc_id", "candidate_idx", "value", "rule_label", "rule_confidence")
     },
@@ -409,8 +399,7 @@ object ExtraQueries {
       val corpSh = OpsQueries.sharedShingles(s, d)
         .select(col("doc_id").as("corp_id"), col("s").as("corp_s"))
         .join(corpIds, Seq("corp_id"), "left_semi")
-      val name = "s08_sink_" + math.abs(d.hashCode).toString
-      val fd = EventStream.sinkTable(EventStream.replay(s, name, "append") { child =>
+      val fd = EventStream.sinkTable(EventStream.replay(s, "s08_sink", "append") { child =>
           OpsQueries.stagedBandsWithShingles(
               EventStream.streamReader(child, d, "documents.parquet")
                 .filter(col("source") === "src0"))
@@ -450,8 +439,7 @@ object ExtraQueries {
            count(*) AS n_docs
          FROM q GROUP BY 1, 2""") { (s, d) =>
       val toks = split(col("text"), " ")
-      val name = "s10_sink_" + math.abs(d.hashCode).toString
-      EventStream.sinkTable(EventStream.replay(s, name, "complete") { child =>
+      EventStream.sinkTable(EventStream.replay(s, "s10_sink", "complete") { child =>
         EventStream.streamReader(child, d, "documents.parquet")
           .select(col("source"), size(toks).as("nt"),
             size(filter(toks, t => t.isin("the", "a"))).as("ns"))
@@ -938,9 +926,8 @@ object ExtraQueries {
       import org.apache.spark.sql.expressions.Window
       val dec = "decimal(38,0)"
       val kmvK = EventStream.KmvK
-      val name = "s28_sink_" + math.abs(d.hashCode).toString
       val sink = EventStream.sinkTable(
-        EventStream.runKmvDistinct(s, d, name, k = kmvK))
+        EventStream.runKmvDistinct(s, d, "s28_sink", k = kmvK))
       val last = sink
         .withColumn("__rn", row_number().over(
           Window.partitionBy("source").orderBy(col("rows_seen").desc)))
@@ -1109,9 +1096,8 @@ object ExtraQueries {
            coalesce(hits.n_hit_classes, 0) = 0 AS admitted
          FROM documents d LEFT JOIN nw USING (doc_id) LEFT JOIN hits USING (doc_id)
          WHERE d.source = 'src0'""") { (s, d) =>
-      val name = "s29_sink_" + math.abs(d.hashCode).toString
       val art = graft.ops.Dedup.substringLabelArtifact(s, d)
-      EventStream.sinkTable(EventStream.runSubstringGate(s, d, name,
+      EventStream.sinkTable(EventStream.runSubstringGate(s, d, "s29_sink",
         storedLabelsPath = Some(art)))
         .groupBy("doc_id")
         .agg(max(col("n_windows")).as("n_windows"),

@@ -274,16 +274,12 @@ object PiiQueries {
             substr(value, start + 1, length(kw)) AS value, 0.6::DOUBLE AS rule_confidence
           FROM hits WHERE rn = 1"""
     }) { (s, d) =>
-      import s.implicits._
       val meta = t(s, d, "customer").select(col("c_custkey").as("doc_id"), lit("comment").as("field"),
         element_at(
           array(lit("primary_email for account"), lit("phone and mobile contact"),
             lit("social_security number"), lit("aadhaar uid record"),
             lit("cc_number on file"), lit("plain description")),
           (col("c_custkey") % 6).cast("int") + 1).as("value"))
-      val kw = graft.detect.Rules.KEYWORDS.zipWithIndex.flatMap { case ((tp, kws), tr) =>
-        kws.zipWithIndex.map { case (k, kr) => (tp, tr, k, kr) }
-      }.toDF("label", "type_rank", "kw", "kw_rank")
-      graft.detect.Metadata.keywordCandidates(meta, broadcast(kw))
+      graft.detect.Metadata.keywordCandidates(meta, graft.detect.Metadata.keywordTable(s))
     })
 }

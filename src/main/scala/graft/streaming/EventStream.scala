@@ -187,14 +187,16 @@ object EventStream {
 
   /** The replay primitive: `plan`, built on a [[replayChild]] session of
     * `spark`, runs as a finite AvailableNow query into a memory sink named
-    * `queryName`, on a fresh checkpoint ([[Ckpt.fresh]]). Returns the
-    * running query; [[sinkTable]] awaits it and reads the sink. */
+    * `queryName`, on a fresh checkpoint in a pass-scoped
+    * [[graft.util.SharedStages.scratch]] dir, freed by the pass's
+    * `releaseAll`. Returns the running query; [[sinkTable]] awaits it and
+    * reads the sink. */
   def replay(spark: SparkSession, queryName: String, outputMode: String,
              keepNoDataBatches: Boolean = false)(plan: SparkSession => DataFrame): StreamingQuery =
     plan(replayChild(spark, keepNoDataBatches))
       .writeStream.outputMode(outputMode)
       .format("memory").queryName(queryName)
-      .option("checkpointLocation", Ckpt.fresh(queryName))
+      .option("checkpointLocation", graft.util.SharedStages.scratch(queryName))
       .trigger(Trigger.AvailableNow())
       .start()
 

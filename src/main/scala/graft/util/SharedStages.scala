@@ -1,7 +1,7 @@
 package graft.util
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -24,11 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * session), holding the session itself so a frame never crosses or
   * outlives it; an artifact keys on (name, dir, source stamp of the table
   * it derives from), so a table rewritten in place is never served a stale
-  * artifact. Artifacts and scratch dirs live under one process-unique root
-  * in `java.io.tmpdir`, deleted by [[releaseAll]] and at JVM exit: no
-  * invocation can read what a PREVIOUS run built. `computeIfAbsent` gives
-  * compute-once under Verify's concurrent query pool — a second query
-  * needing the same entry blocks on the first one's build and shares it.
+  * artifact. Artifacts and scratch dirs (replay checkpoints among them)
+  * live under one process-unique [[root]], deleted by [[releaseAll]] and at
+  * JVM exit: no invocation can read what a PREVIOUS run built.
+  * `computeIfAbsent` gives compute-once under Verify's concurrent query
+  * pool — a second query needing the same entry blocks on the first one's
+  * build and shares it.
   */
 object SharedStages {
 
@@ -75,10 +76,17 @@ object SharedStages {
     cache.computeIfAbsent(key, _ => new Memo[A](() => build, free, orphan))
       .asInstanceOf[Memo[A]].value
 
-  /** Process-unique root for artifacts and scratch dirs, removed at JVM
-    * exit (a killed JVM leaks at most this one dir). */
-  private lazy val root: File = {
-    val d = Files.createTempDirectory("graft-stages-").toFile
+  /** The process's one scratch root: artifacts, scratch dirs and replay
+    * checkpoints all live here, removed at JVM exit (a killed JVM leaks at
+    * most this one dir). It sits on `/dev/shm` (tmpfs) when that is a
+    * writable directory, else in `java.io.tmpdir`: a finite replay's
+    * checkpoint has no durability value, and its per-batch WAL and
+    * state-store writes cost less on tmpfs. */
+  private[graft] lazy val root: File = {
+    val shm = Paths.get("/dev/shm")
+    val base = if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+      else Paths.get(sys.props("java.io.tmpdir"))
+    val d = Files.createTempDirectory(base, "graft-stages-").toFile
     Runtime.getRuntime.addShutdownHook(new Thread(() => delete(d.getPath)))
     d
   }
@@ -130,8 +138,8 @@ object SharedStages {
   }
 
   /** A fresh empty directory under the stage root for output a query reads
-    * back lazily (a sink's files behind its returned frame); it lives until
-    * [[releaseAll]] ends the pass. */
+    * back lazily (a sink's files behind its returned frame) or for a finite
+    * replay's checkpoint; it lives until [[releaseAll]] ends the pass. */
   def scratch(tag: String): String = {
     val dir = Files.createTempDirectory(root.toPath, tag + "-").toString
     cell[String](Key(tag, dir, dir), dir, delete, identity)

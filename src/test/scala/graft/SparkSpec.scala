@@ -9,6 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * follow the box. */
 object SparkSpec {
   lazy val spark: SparkSession = util.Sessions.build("local[4]", "4")
+
+  /** A fresh empty directory under the process's one scratch root
+    * ([[util.SharedStages.root]]). It is not a pass-scoped scratch dir, so
+    * a suite's fixture survives other suites' `releaseAll` calls; the
+    * root's shutdown hook deletes it at JVM exit. */
+  def tempDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(util.SharedStages.root.toPath, tag + "-").toString
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -10,7 +10,7 @@ import graft.SparkSpec
   * pushdown into the remote SQL. */
 class JdbcSpec extends SparkSpec {
   private val url = {
-    val dir = java.nio.file.Files.createTempDirectory("derby").toString
+    val dir = SparkSpec.tempDir("derby")
     s"jdbc:derby:$dir/db;create=true"
   }
 

@@ -10,7 +10,7 @@ class CurateCorpusSpec extends SparkSpec {
 
   test("curate pipeline writes every stage artifact with consistent counts") {
     val sf = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("curate_spec").toString
+    val out = SparkSpec.tempDir("curate_spec")
     val counts = CurateCorpus.run(spark, sf, out).toMap
     assert(counts.keySet == CurateCorpus.stages.map(_._1).toSet)
     // per-doc artifacts carry the whole corpus

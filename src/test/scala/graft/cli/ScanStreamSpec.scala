@@ -17,7 +17,7 @@ import graft.util.ProcessStarts
 class ScanStreamSpec extends SparkSpec {
 
   test("incremental scan equals batch detection and re-runs commit nothing new") {
-    val tmp = java.nio.file.Files.createTempDirectory("scanstream_spec").toString
+    val tmp = SparkSpec.tempDir("scanstream_spec")
     val inputs = graft.queries.PiiInputs.df(spark, "/root/testdata/sf0.001")
     inputs.write.parquet(s"$tmp/in")
     val n1 = ScanStream.run(spark, s"$tmp/in", s"$tmp/out")
@@ -46,7 +46,7 @@ class ScanStreamSpec extends SparkSpec {
     val key = "spark.sql.artifact.isolation.enabled"
     val child = spark.newSession()
     child.conf.set(key, "true")
-    val tmp = java.nio.file.Files.createTempDirectory("scanstream_loader").toString
+    val tmp = SparkSpec.tempDir("scanstream_loader")
     val inputs = child.range(40).select(col("id").as("doc_id"),
       concat(lit("card 4111 1111 1111 1111, mail user"), col("id"), lit("@example.com")).as("text"))
     inputs.write.parquet(s"$tmp/in")
@@ -94,7 +94,7 @@ class ScanStreamSpec extends SparkSpec {
 
   /** A 40-doc input dir and an `append(k)` that drops 7 more docs. */
   private def stream(name: String): (String, Int => Unit) = {
-    val tmp = Files.createTempDirectory(name).toString
+    val tmp = SparkSpec.tempDir(name)
     val tagged = new MetadataBuilder().putString("pii", "free text").build()
     val inputs = spark.range(40).select(col("id").as("doc_id"),
       concat(lit("card 4111 1111 1111 1111, mail user"), col("id"), lit("@example.com"))

@@ -62,7 +62,7 @@ class EnsembleSpec extends SparkSpec {
 
   test("calibrator json roundtrip and identity fallback") {
     val c = Calibrator(PiiTypes.ALL.map(t => t -> (1.5, -0.25)).toMap)
-    val f = java.io.File.createTempFile("calib", ".json")
+    val f = new java.io.File(SparkSpec.tempDir("calib"), "calib.json")
     Calibrator.save(c, f.getAbsolutePath)
     val back = Calibrator.load(f.getAbsolutePath)
     assert(back.models == c.models)

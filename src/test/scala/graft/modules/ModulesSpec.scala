@@ -30,7 +30,7 @@ class SynthSpec extends SparkSpec {
   }
 
   test("jsonl roundtrip") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString + "/out"
+    val dir = SparkSpec.tempDir("jsonl") + "/out"
     val ds = Synth.generate(spark, 10, seed = 3)
     Synth.saveJsonl(ds, dir)
     val back = Synth.loadJsonl(spark, dir).collect().sortBy(_.text)
@@ -212,7 +212,7 @@ class EmbedSpec extends SparkSpec {
     val labeled = Seq(("mail ctx one", "EMAIL"), ("mail ctx two", "EMAIL"),
       ("phone ctx one", "PHONE_NUMBER"), ("phone ctx two", "PHONE_NUMBER")).toDF("context", "label")
     val m = EmbedModel.fit(labeled, "context", "label")
-    val f = java.io.File.createTempFile("embed", ".json").getAbsolutePath
+    val f = SparkSpec.tempDir("embed") + "/model.json"
     EmbedModel.save(m, f)
     val back = EmbedModel.load(f)
     // same predictions after roundtrip

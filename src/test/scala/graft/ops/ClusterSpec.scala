@@ -144,7 +144,7 @@ class ClusterSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
     // copy of vector 42 at a new max id, scaled: identical int8 codes
     val copy = (e.map(_._1).max + 1, e.find(_._1 == 42L).get._2.map(_ * 1.02f))
-    val tmp = java.nio.file.Files.createTempDirectory("semdedup").toString
+    val tmp = SparkSpec.tempDir("semdedup")
     (e :+ copy).toSeq.toDF("vec_id", "embedding")
       .withColumn("label", lit(0)) // schema parity with the real table
       .write.parquet(s"$tmp/embeddings.parquet")

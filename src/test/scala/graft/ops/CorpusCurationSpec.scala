@@ -43,7 +43,7 @@ class CorpusCurationSpec extends SparkSpec {
     // tie-broken by outer_id ascending.
     val text = (1 to 30).map(i => s"c$i").mkString(" ")
     val docs = (0 until 12).map(k => (k.toLong, text, "en", "srcA", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("clique").toString
+    val tmp = SparkSpec.tempDir("clique")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val rows = graft.SparkEntry.queries("x86_containment_pairs")(spark, tmp)
@@ -67,7 +67,7 @@ class CorpusCurationSpec extends SparkSpec {
     val docs = Seq((0L, quote, "en", "srcA", quote.length.toLong),
       (1L, s"$quote $tail", "en", "srcA", (quote.length + tail.length + 1).toLong),
       (2L, other, "en", "srcB", other.length.toLong))
-    val tmp = java.nio.file.Files.createTempDirectory("contain").toString
+    val tmp = SparkSpec.tempDir("contain")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val rows = graft.SparkEntry.queries("x86_containment_pairs")(spark, tmp)
@@ -108,7 +108,7 @@ class CorpusCurationSpec extends SparkSpec {
       val tail = (1 to 10).map(i => s"u${k}_$i").mkString(" ")
       (k.toLong, s"$prefix $tail", "en", s"src$k", 0L)
     } :+ (5L, (1 to 12).map(i => s"solo$i").mkString(" "), "en", "src9", 0L)
-    val tmp = java.nio.file.Files.createTempDirectory("boiler").toString
+    val tmp = SparkSpec.tempDir("boiler")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val rows = graft.SparkEntry.queries("x87_boilerplate_coverage")(spark, tmp)
@@ -197,7 +197,7 @@ class CorpusCurationSpec extends SparkSpec {
     val real = (1 to 40).map(i => s"r$i").mkString(" ")
     val docs = (0 until 130).map(k => (k.toLong, boiler, "en", "srcA", 0L)) ++
       Seq((200L, real, "en", "srcB", 0L), (201L, real, "en", "srcB", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("x90cap").toString
+    val tmp = SparkSpec.tempDir("x90cap")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val rows = graft.SparkEntry.queries("x90_lsh_tuning_curve")(spark, tmp)
@@ -229,7 +229,7 @@ class CorpusCurationSpec extends SparkSpec {
     val clean = (1 to 30).map(i => s"c$i").mkString(" ")
     val docs = Seq((0L, bench, "en", "srcB", 0L), (10L, quoted, "en", "srcA", 0L),
       (11L, scattered, "en", "srcA", 0L), (12L, clean, "en", "srcA", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("spancontam").toString
+    val tmp = SparkSpec.tempDir("spancontam")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val rows = graft.SparkEntry.queries("x95_span_contamination")(spark, tmp)
@@ -250,7 +250,7 @@ class CorpusCurationSpec extends SparkSpec {
     val clean = (1 to 30).map(i => s"c$i").mkString(" ")
     val docs = Seq((0L, bench, "en", "srcB", 0L), (10L, quoted, "en", "srcA", 0L),
       (11L, scattered, "en", "srcA", 0L), (12L, clean, "en", "srcA", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("s17gate").toString
+    val tmp = SparkSpec.tempDir("s17gate")
     val inDir = new java.io.File(tmp); // two files -> >= 2 micro-batches
     val df = docs.toDF("doc_id", "text", "lang", "source", "n_chars")
     for (i <- 0 to 1) {
@@ -282,7 +282,7 @@ class CorpusCurationSpec extends SparkSpec {
       (10 to 12).map(i => (i.toLong, s"c$i", 2, 1100.0, "B")) ++
       (13 to 14).map(i => (i.toLong, s"c$i", 3, 100.0, "C")) ++
       (15 to 16).map(i => (i.toLong, s"c$i", 3, 100.0, "D"))
-    val tmp = java.nio.file.Files.createTempDirectory("kanon").toString
+    val tmp = SparkSpec.tempDir("kanon")
     rows0.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.parquet(s"$tmp/customer.parquet")
     val got = graft.SparkEntry.queries("x96_k_anonymity")(spark, tmp)
@@ -317,7 +317,7 @@ class CorpusCurationSpec extends SparkSpec {
       (1L, "x y x y z", "en", "srcA", 0L),                         // repeated bigram
       (2L, (1 to 30).map(i => s"t$i").mkString(" "), "en", "srcA", 0L), // clean
       (3L, "w", "en", "srcA", 0L))                                 // no grams at all
-    val tmp = java.nio.file.Files.createTempDirectory("gopher").toString
+    val tmp = SparkSpec.tempDir("gopher")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val got = graft.SparkEntry.queries("x97_doc_repetition")(spark, tmp)
@@ -338,7 +338,7 @@ class CorpusCurationSpec extends SparkSpec {
     val t20 = (1 to 20).map(i => s"t$i")
     val docs = Seq((0L, t20.mkString(" "), "en", "srcA", 0L),
       (1L, "u1 u2 u3", "en", "srcA", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("chunk").toString
+    val tmp = SparkSpec.tempDir("chunk")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val got = graft.SparkEntry.queries("x98_chunk_overlap")(spark, tmp)
@@ -359,7 +359,7 @@ class CorpusCurationSpec extends SparkSpec {
     // logical key — the at-least-once shape) plus new event C.
     val b1 = Seq((1L, ts(0), 10L, "click", 1.0, "{}"), (2L, ts(1), 20L, "view", 2.0, "{}"))
     val b2 = Seq((3L, ts(0), 10L, "click", 9.0, "{}"), (4L, ts(2), 30L, "click", 3.0, "{}"))
-    val tmp = java.nio.file.Files.createTempDirectory("s18dedup").toString
+    val tmp = SparkSpec.tempDir("s18dedup")
     for ((rows, i) <- Seq(b1, b2).zipWithIndex) {
       val part = s"$tmp/stage$i"
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -384,7 +384,7 @@ class CorpusCurationSpec extends SparkSpec {
     val a = (1 to 6).map(i => (i.toLong, s"c$i", 1, 100.0, "A"))
     val b = (7 to 10).map(i => (i.toLong, s"c$i", 2, 100.0, "B"))
     val all = a ++ b
-    val tmp = java.nio.file.Files.createTempDirectory("s19kanon").toString
+    val tmp = SparkSpec.tempDir("s19kanon")
     for ((rows, i) <- Seq(all.filter(_._1 % 2 == 1), all.filter(_._1 % 2 == 0)).zipWithIndex) {
       val part = s"$tmp/stage$i"
       rows.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
@@ -411,7 +411,7 @@ class CorpusCurationSpec extends SparkSpec {
       1L - 2L * (java.lang.Long.parseLong(md5hex(t).substring(1, 2), 16) % 2)
     val docs = Seq((0L, "alpha beta alpha", "en", "srcA", 0L),
       (1L, "gamma gamma gamma gamma", "en", "srcA", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("feathash").toString
+    val tmp = SparkSpec.tempDir("feathash")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val got = graft.SparkEntry.queries("x99_feature_hashing")(spark, tmp)
@@ -464,7 +464,7 @@ class CorpusCurationSpec extends SparkSpec {
     val front = (0 until 10).map(i => (i.toLong, (1 to 30).map(j => s"alpha${j % 5}").mkString(" "), "en", "srcdrift", 0L))
     val back = (10 until 20).map(i => (i.toLong, (1 to 30).map(j => s"beta${j % 5}").mkString(" "), "en", "srcdrift", 0L))
     val flat = (20 until 40).map(i => (i.toLong + 80, (1 to 30).map(j => s"gamma${j % 5}").mkString(" "), "en", "srcflat", 0L))
-    val tmp = java.nio.file.Files.createTempDirectory("drift").toString
+    val tmp = SparkSpec.tempDir("drift")
     (front ++ back ++ flat).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
     val planted = graft.SparkEntry.queries("x92_source_drift")(spark, tmp)

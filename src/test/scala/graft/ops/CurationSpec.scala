@@ -29,7 +29,7 @@ class CurationSpec extends SparkSpec {
       1L -> Array.fill(64)(-0.5f),                    // constant negative: all codes -127
       2L -> (Array.fill(63)(1e-6f) :+ 8f),            // spike: tiny dims quantize to 0
       3L -> Array.fill(64)((rnd.nextFloat() - 0.5f) * 10f))
-    val tmp = java.nio.file.Files.createTempDirectory("quant_adv").toString
+    val tmp = SparkSpec.tempDir("quant_adv")
     vecs.toDF("vec_id", "embedding").write.parquet(s"$tmp/embeddings.parquet")
     val rows = graft.SparkEntry.queries("x26_quantize_embeddings")(spark, tmp)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getString(2), r.getDouble(3)))).toMap

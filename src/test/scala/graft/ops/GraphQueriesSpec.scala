@@ -6,9 +6,6 @@ import graft.{SparkEntry, SparkSpec}
   * composition/drift audits (x116/x117). */
 class GraphQueriesSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("x115 pagerank: clone triangle is stationary, isolated doc keeps teleport only") {
     import spark.implicits._
     // Three exact clones band-collide into a triangle (each deg 2); doc 4
@@ -19,7 +16,7 @@ class GraphQueriesSpec extends SparkSpec {
     val clone = "alpha beta gamma delta epsilon zeta eta theta"
     val docs = Seq(1L -> clone, 2L -> clone, 3L -> clone,
       4L -> "completely different words about ships and harbors tonight")
-    val dir = tmpDir("pagerank")
+    val dir = SparkSpec.tempDir("pagerank")
     docs.map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -48,7 +45,7 @@ class GraphQueriesSpec extends SparkSpec {
     // query's OWN cell (only the excluded self lives there) plus the true
     // nearest's cell — so n_cand=1, top1 is the true nearest (vec 1,
     // d2 = 64) and recall@10 = 1/10.
-    val dir = tmpDir("ivfpq")
+    val dir = SparkSpec.tempDir("ivfpq")
     (0L to 5L).map { id =>
       val v = Array.fill(64)(0f); v(0) = 127f; v(1) = 8f * id
       (id, v, 0)
@@ -82,7 +79,7 @@ class GraphQueriesSpec extends SparkSpec {
     // base = 0 makes drift_ratio NULL by the explicit guard.
     val x = Array.tabulate(64)(i => if (i % 2 == 0) 127f else 0f)
     val y = Array.tabulate(64)(i => if (i % 2 == 1) 127f else 0f)
-    val dir = tmpDir("pqdrift")
+    val dir = SparkSpec.tempDir("pqdrift")
     ((0L to 7L).map(id => (id, x, 0)) ++ (8L to 11L).map(id => (id, x, 1)) ++
       (12L to 15L).map(id => (id, y, 2)))
       .toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
@@ -103,7 +100,7 @@ class GraphQueriesSpec extends SparkSpec {
     // 64·101.6² — beyond 2× the median -> exactly the 4 Y flag.
     val x = Array.tabulate(64)(i => if (i % 2 == 0) 127f else 0f)
     val y = Array.tabulate(64)(i => if (i % 2 == 1) 127f else 0f)
-    val dir = tmpDir("semout")
+    val dir = SparkSpec.tempDir("semout")
     ((0L until 16L).map(id => (id, x, 0)) ++ (16L until 20L).map(id => (id, y, 0)))
       .toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("x119_semantic_outliers")(spark, dir).collect()
@@ -129,7 +126,7 @@ class GraphQueriesSpec extends SparkSpec {
     // label-2 = Y (every subspace 16·127² off in micros).
     val x = Array.tabulate(64)(i => if (i % 2 == 0) 127f else 0f)
     val y = Array.tabulate(64)(i => if (i % 2 == 1) 127f else 0f)
-    val dir = tmpDir("s22drift")
+    val dir = SparkSpec.tempDir("s22drift")
     ((0L to 7L).map(id => (id, x, 0)) ++ (8L to 11L).map(id => (id, x, 1)) ++
       (12L to 15L).map(id => (id, y, 2)))
       .toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
@@ -150,7 +147,7 @@ class GraphQueriesSpec extends SparkSpec {
     val clone = "alpha beta gamma delta epsilon zeta eta theta"
     val docs = Seq(1L -> clone, 2L -> clone, 3L -> clone,
       9L -> "totally unrelated text about lighthouse maintenance schedules")
-    val dir = tmpDir("canonical")
+    val dir = SparkSpec.tempDir("canonical")
     docs.map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -221,7 +218,7 @@ class GraphQueriesSpec extends SparkSpec {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val near = base + " lambda" // shingle sets overlap 8/11 >= 0.8? verify below
     val clone = "one two three four five six seven eight"
-    val dir = tmpDir("cohesion")
+    val dir = SparkSpec.tempDir("cohesion")
     Seq(1L -> base, 2L -> near, 10L -> clone, 11L -> clone, 12L -> clone)
       .map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -13,7 +13,7 @@ class PipelineComposeSpec extends SparkSpec {
     (1 to n).map(i => s"$prefix$i").mkString(" ")
 
   test("curation pipeline: all four dispositions, bins only for kept docs") {
-    val tmp = java.nio.file.Files.createTempDirectory("x50spec").toString
+    val tmp = SparkSpec.tempDir("x50spec")
     val bench = (0L until 10L).map(i => (i, words(s"b$i", 30), "en", s"src$i", 0L))
     val a = words("a", 30)
     val b = words("c", 30)

@@ -7,9 +7,6 @@ import graft.{SparkEntry, SparkSpec}
   * quantization is lossless and every expected value is hand-computable. */
 class PqQueriesSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def writeEmb(dir: String, vecs: Seq[(Long, Array[Float])]): Unit = {
     import spark.implicits._
     vecs.map { case (id, v) => (id, v, 0) }
@@ -24,7 +21,7 @@ class PqQueriesSpec extends SparkSpec {
     // centroids resolve to the min cid: X -> cid 0, Y -> cid 1.
     val x = Array.tabulate(64)(i => if (i % 2 == 0) 127f else 0f)
     val y = Array.tabulate(64)(i => if (i % 2 == 1) 127f else 0f)
-    val dir = tmpDir("pqcb")
+    val dir = SparkSpec.tempDir("pqcb")
     writeEmb(dir, (0L until 32L).map(id => id -> (if (id % 2 == 0) x else y)))
     val got = SparkEntry.queries("x112_pq_codebooks")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -41,7 +38,7 @@ class PqQueriesSpec extends SparkSpec {
     // Query vec 0 = [127, 0...]; candidate k differs only in dim 1 by 8k.
     // Every vector is its own (singleton) codebook cell in sub 0, so the
     // ADC lookup IS the exact distance: rank k -> vec k, d2 = (8k)^2.
-    val dir = tmpDir("pqadc")
+    val dir = SparkSpec.tempDir("pqadc")
     writeEmb(dir, (0L to 5L).map { id =>
       val v = Array.fill(64)(0f); v(0) = 127f; v(1) = 8f * id
       id -> v

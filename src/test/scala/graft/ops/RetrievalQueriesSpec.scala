@@ -5,9 +5,6 @@ import graft.{SparkEntry, SparkSpec}
 /** Planted-fixture specs for the retrieval/audit family (x109–x111). */
 class RetrievalQueriesSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit = {
     import spark.implicits._
     docs.map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
@@ -39,7 +36,7 @@ class RetrievalQueriesSpec extends SparkSpec {
 
   test("x110 BM25: tf raises score, doc length penalizes, query doc excluded") {
     // query doc 0 (0 % 97 == 0) emits its tokens; candidates differ in tf/dl.
-    val dir = tmpDir("bm25")
+    val dir = SparkSpec.tempDir("bm25")
     writeDocs(dir, Seq(
       0L -> "apple banana",
       1L -> "apple apple apple",             // high tf, short
@@ -69,7 +66,7 @@ class RetrievalQueriesSpec extends SparkSpec {
       (1L, "a", "A", 10L), (2L, "a", "A", 10L), (3L, "a", "A", 20L), (4L, "a", "A", 20L),
       (5L, "a", "B", 15L), (6L, "a", "B", 15L), (7L, "a", "B", 15L), (8L, "a", "B", 15L),
       (9L, "a", "C", 0L), (10L, "a", "C", 30L))
-    val dir = tmpDir("neyman")
+    val dir = SparkSpec.tempDir("neyman")
     rows.map { case (id, tx, src, nc) => (id, tx, "en", src, nc) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -92,7 +89,7 @@ class RetrievalQueriesSpec extends SparkSpec {
 
   test("x126 novelty: clones score 0, a fully original doc scores 1") {
     val clone = "alpha beta gamma delta epsilon zeta eta theta"
-    val dir = tmpDir("novelty")
+    val dir = SparkSpec.tempDir("novelty")
     writeDocs(dir, Seq(
       1L -> clone, 2L -> clone, // every shingle shared -> novelty 0
       3L -> "completely different words about ships and harbors tonight",
@@ -133,7 +130,7 @@ class RetrievalQueriesSpec extends SparkSpec {
 
   test("x111 candidate degree: clone triple lands in bucket 2, loner in bucket 0") {
     val clone = "alpha beta gamma delta epsilon zeta eta theta"
-    val dir = tmpDir("degree")
+    val dir = SparkSpec.tempDir("degree")
     writeDocs(dir, Seq(
       1L -> clone, 2L -> clone, 3L -> clone,  // 3-clique of band collisions
       4L -> "completely different words about ships and harbors tonight"))

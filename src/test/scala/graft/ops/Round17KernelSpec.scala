@@ -67,7 +67,7 @@ class Round17KernelSpec extends SparkSpec {
   }
 
   test("x90 cap path: a >128-doc clone group caps every band and is audited") {
-    val dir = java.nio.file.Files.createTempDirectory("r17x90").toString
+    val dir = SparkSpec.tempDir("r17x90")
     // 130 identical docs (one text → one rep with m=130, every band bucket
     // has docs=130 > 128 in every config) + two near-ish docs that bucket
     // together benignly.

@@ -21,9 +21,9 @@ class SketchesSpec extends SparkSpec {
     // two parquet files -> two micro-batches (maxFilesPerTrigger=1): proves
     // CROSS-BATCH state accumulation and the update-mode max-per-cell
     // recovery, not just a single-batch replay of the batch plan
-    val dir = java.nio.file.Files.createTempDirectory("s09spec").toFile
+    val dir = new java.io.File(SparkSpec.tempDir("s09spec"))
     def writeOne(texts: Seq[String], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("s09w").toFile
+      val tmp = new java.io.File(SparkSpec.tempDir("s09w"))
       texts.toDF("text").coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
       val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.copy(part.toPath, new java.io.File(dir, name).toPath)
@@ -52,9 +52,9 @@ class SketchesSpec extends SparkSpec {
   test("streaming histogram maintenance: multi-batch state equals batch cells") {
     // two files -> two micro-batches: the (source, kind, key) counts must
     // accumulate ACROSS batches, recovered by max-per-key from update mode
-    val dir = java.nio.file.Files.createTempDirectory("s12spec").toFile
+    val dir = new java.io.File(SparkSpec.tempDir("s12spec"))
     def writeOne(rows: Seq[(String, String)], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("s12w").toFile
+      val tmp = new java.io.File(SparkSpec.tempDir("s12w"))
       rows.toDF("source", "text").coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
       val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.copy(part.toPath, new java.io.File(dir, name).toPath)

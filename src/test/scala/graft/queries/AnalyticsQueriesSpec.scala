@@ -10,9 +10,6 @@ import graft.{SparkEntry, SparkSpec}
 class AnalyticsQueriesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("x100 l-diversity: balanced passes, homogeneous and skewed flag") {
     import spark.implicits._
     // class A: 6 members over 3 balanced bands -> distinct_ok AND entropy_ok
@@ -23,7 +20,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
         (0L, "A", 1500.0), (0L, "A", 2500.0), (0L, "A", 2500.0)) ++
         (1 to 6).map(_ => (1L, "B", 500.0)) ++
         ((1 to 8).map(_ => (2L, "C", 500.0)) ++ Seq((2L, "C", 1500.0), (2L, "C", 2500.0)))
-    val dir = tmpDir("ldiv")
+    val dir = SparkSpec.tempDir("ldiv")
     rows.toDF("c_nationkey", "c_mktsegment", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
     val got = SparkEntry.queries("x100_l_diversity")(spark, dir)
@@ -60,7 +57,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (7L, ts(0), 3L, "click", 1.0, "{}"), (8L, ts(1), 3L, "purchase", 1.0, "{}"),
       // user 4: view -> click, no purchase
       (9L, ts(0), 4L, "view", 1.0, "{}"), (10L, ts(20), 4L, "click", 1.0, "{}"))
-    val dir = tmpDir("funnel")
+    val dir = SparkSpec.tempDir("funnel")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("x101_event_funnel")(spark, dir)
@@ -83,7 +80,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (3L, ts(23, 9), 1L, "view", 1.0, "{}"),  // u1 active W3 (Jan 22)
       (4L, ts(8, 9), 2L, "view", 1.0, "{}"),   // u2 cohort W1, active W1 only
       (5L, ts(3, 9), 3L, "view", 1.0, "{}"))   // u3 cohort W0, active W0 only
-    val dir = tmpDir("cohort")
+    val dir = SparkSpec.tempDir("cohort")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("x102_cohort_retention")(spark, dir)
@@ -108,7 +105,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (4L, ts(0), 2L, "view", 1.0, "{}"), (5L, ts(10), 2L, "click", 1.0, "{}"),
       // u3: equal-ts pair — order must resolve by event_id (view then error)
       (7L, ts(5), 3L, "error", 1.0, "{}"), (6L, ts(5), 3L, "view", 1.0, "{}"))
-    val dir = tmpDir("trans")
+    val dir = SparkSpec.tempDir("trans")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("x103_event_transitions")(spark, dir)
@@ -139,7 +136,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
           k.toLong, "view", 0.0, "{}"))
       earlier :+ ((k * 100L, last, k.toLong, "purchase", k.toDouble, "{}"))
     }
-    val dir = tmpDir("rfm")
+    val dir = SparkSpec.tempDir("rfm")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("x104_rfm_segments")(spark, dir)
@@ -166,7 +163,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (1L, ts(0), 1L, "view", 1.0, "{}"), (2L, ts(10), 1L, "view", 1.0, "{}"),
       (3L, ts(20), 1L, "view", 1.0, "{}"), (4L, ts(140), 1L, "view", 1.0, "{}"),
       (5L, ts(0), 2L, "view", 1.0, "{}"))
-    val dir = tmpDir("sessstats")
+    val dir = SparkSpec.tempDir("sessstats")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("x105_session_stats")(spark, dir).collect().head
@@ -186,7 +183,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
     // the click timestamp carried in state from batch 1).
     val b1 = Seq((1L, ts(0), 1L, "view", 1.0, "{}"), (2L, ts(10), 1L, "click", 1.0, "{}"))
     val b2 = Seq((3L, ts(20), 1L, "click", 1.0, "{}"), (4L, ts(30), 1L, "purchase", 1.0, "{}"))
-    val tmp = tmpDir("s20funnel")
+    val tmp = SparkSpec.tempDir("s20funnel")
     for ((rows, i) <- Seq(b1, b2).zipWithIndex) {
       val part = s"$tmp/stage$i"
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -215,7 +212,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       }
     val rows = members(0L, "A", Seq(2, 2, 2)) ++ members(1L, "B", Seq(6, 0, 0)) ++
       members(2L, "C", Seq(4, 1, 1))
-    val dir = tmpDir("tclose")
+    val dir = SparkSpec.tempDir("tclose")
     rows.toDF("c_nationkey", "c_mktsegment", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
     val got = SparkEntry.queries("x114_t_closeness")(spark, dir)
@@ -234,7 +231,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
     // CARRIED click from batch 1, purchase(30) pairs with click(20).
     val b1 = Seq((1L, ts(0), 1L, "view", 1.0, "{}"), (2L, ts(10), 1L, "click", 1.0, "{}"))
     val b2 = Seq((3L, ts(20), 1L, "click", 1.0, "{}"), (4L, ts(30), 1L, "purchase", 1.0, "{}"))
-    val tmp = tmpDir("s21trans")
+    val tmp = SparkSpec.tempDir("s21trans")
     for ((rows, i) <- Seq(b1, b2).zipWithIndex) {
       val part = s"$tmp/stage$i"
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -267,7 +264,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (7L, ts(10), 3L, "purchase", 2.0, "{}"),
       // u4: view at the purchase's own ts but a smaller event_id -> attributed, gap 0
       (8L, ts(0), 4L, "view", 1.0, "{}"), (9L, ts(0), 4L, "purchase", 3.0, "{}"))
-    val dir = tmpDir("lasttouch")
+    val dir = SparkSpec.tempDir("lasttouch")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("x118_last_touch")(spark, dir)
@@ -288,7 +285,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (2L, d1, 2L, "view", 1.0, """{"a": 3}"""),
       (3L, d2, 1L, "view", 1.0, """{"a": 4, "c": 5}"""),
       (4L, d2, 2L, "view", 1.0, """{"c": 6}"""))
-    val dir = tmpDir("drift")
+    val dir = SparkSpec.tempDir("drift")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("x122_props_schema_drift")(spark, dir)
@@ -311,7 +308,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
       (1L, ts(0), 1L, "view", 1.0, "{}"), (2L, ts(10), 1L, "click", 1.0, "{}"),
       (3L, ts(0), 2L, "view", 1.0, "{}"), (4L, ts(60), 2L, "click", 1.0, "{}"),
       (5L, ts(20), 2L, "purchase", 1.0, "{}"))
-    val dir = tmpDir("order")
+    val dir = SparkSpec.tempDir("order")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("x123_event_order_audit")(spark, dir).collect().head
@@ -328,7 +325,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
     // total: 3 keys, 11 rows, max 9 -> skew = round(9*3/11) = round(2.45) = 2.
     val ev = (1L to 9L).map(i => (i, ts(i), 1L, "view", 1.0, "{}")) ++
       Seq((10L, ts(10), 2L, "view", 1.0, "{}"), (11L, ts(11), 3L, "view", 1.0, "{}"))
-    val dir = tmpDir("skew")
+    val dir = SparkSpec.tempDir("skew")
     ev.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val rows = SparkEntry.queries("x128_key_skew_audit")(spark, dir).collect()

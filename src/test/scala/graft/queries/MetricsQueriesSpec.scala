@@ -7,9 +7,6 @@ import graft.{SparkEntry, SparkSpec}
   * corpora where the expected values are hand-computable. */
 class MetricsQueriesSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("x106 dim correlation: duplicate dim redundant, constant dim null, negated dim -1") {
     import spark.implicits._
     // dims: d1 = v, d2 = v (corr +1), d3 = const (var 0), d4 = -v (corr -1)
@@ -17,7 +14,7 @@ class MetricsQueriesSpec extends SparkSpec {
       (1L, Array(1.0f, 1.0f, 5.0f, -1.0f), 0),
       (2L, Array(2.0f, 2.0f, 5.0f, -2.0f), 1),
       (3L, Array(3.0f, 3.0f, 5.0f, -3.0f), 2))
-    val dir = tmpDir("dimcorr")
+    val dir = SparkSpec.tempDir("dimcorr")
     rows.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("x106_dim_correlation")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
@@ -43,7 +40,7 @@ class MetricsQueriesSpec extends SparkSpec {
     val rows = Seq(
       (1L, Array(0.003f), 0), (2L, Array(0.002f), 0),
       (3L, Array(0.001f), 1), (4L, Array(0.002f), 1))
-    val dir = tmpDir("auc")
+    val dir = SparkSpec.tempDir("auc")
     rows.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
     val r = SparkEntry.queries("x107_score_auc")(spark, dir).collect()
     assert(r.length == 1)
@@ -54,7 +51,7 @@ class MetricsQueriesSpec extends SparkSpec {
   test("x107 AUC: single-class corpus emits null, not a crash") {
     import spark.implicits._
     val rows = Seq((1L, Array(0.001f), 0), (2L, Array(0.002f), 0))
-    val dir = tmpDir("auc1c")
+    val dir = SparkSpec.tempDir("auc1c")
     rows.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
     val r = SparkEntry.queries("x107_score_auc")(spark, dir).collect()
     assert(r.length == 1 && r(0).getLong(0) == 2L && r(0).getLong(1) == 0L && r(0).isNullAt(3))

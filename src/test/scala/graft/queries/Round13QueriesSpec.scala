@@ -14,9 +14,6 @@ class Round13QueriesSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit = {
     import spark.implicits._
     docs.map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
@@ -61,7 +58,7 @@ class Round13QueriesSpec extends SparkSpec {
     // 12/13 and 12/14 — all >= 0.8 — and token-set similarity high enough
     // that every pair shares a MinHash band. Doc 4 is unrelated.
     val base = (1 to 14).map(i => s"tok$i").mkString(" ")
-    val dir = tmpDir("tri")
+    val dir = SparkSpec.tempDir("tri")
     writeDocs(dir, Seq(1L -> base, 2L -> s"$base zq1", 3L -> s"$base zq2",
       4L -> "entirely different words about ships and harbors tonight friend"))
     val got = SparkEntry.queries("x134_triangle_count")(spark, dir)
@@ -101,7 +98,7 @@ class Round13QueriesSpec extends SparkSpec {
     // x113's fixture: vec 0 queries; candidate k differs only in dim 1 by
     // 8k; singleton PQ cells make ADC exact, so the brute-force nearest
     // (vec 1) sits at ADC rank 1 and MRR over the one query is 1.
-    val dir = tmpDir("mrr")
+    val dir = SparkSpec.tempDir("mrr")
     (0L to 5L).map { id =>
       val v = Array.fill(64)(0f); v(0) = 127f; v(1) = 8f * id
       (id, v, 0)
@@ -140,7 +137,7 @@ class Round13QueriesSpec extends SparkSpec {
     // edges (A,B), (A,C) only. Degrees 2/1/1: r = (M·P − S²)/(M·Q − S²)
     // = (32−36)/(40−36) = −1.
     val base = (1 to 19).map(i => s"tok$i").mkString(" ")
-    val star = tmpDir("star")
+    val star = SparkSpec.tempDir("star")
     writeDocs(star, Seq(1L -> base, 2L -> s"$base xa1 xa2 xa3",
       3L -> s"$base yb1 yb2 yb3"))
     val s1 = SparkEntry.queries("x136_degree_assortativity")(spark, star).collect()
@@ -150,7 +147,7 @@ class Round13QueriesSpec extends SparkSpec {
     assert(s1.head.getDouble(2) == -1.0)
     // Triangle (x134's fixture): all degrees equal -> zero variance ->
     // assortativity undefined (NULL), never a divide-by-zero.
-    val tri = tmpDir("tri2")
+    val tri = SparkSpec.tempDir("tri2")
     val b2 = (1 to 14).map(i => s"tok$i").mkString(" ")
     writeDocs(tri, Seq(1L -> b2, 2L -> s"$b2 zq1", 3L -> s"$b2 zq2"))
     val s2 = SparkEntry.queries("x136_degree_assortativity")(spark, tri).collect()
@@ -166,7 +163,7 @@ class Round13QueriesSpec extends SparkSpec {
     // byte-shifted (different hash). Doc 4 is under one tile -> no row.
     val tile = (0 until 256).map(i => ('a' + (i * 7 + i / 16) % 26).toChar).mkString
     val other = (0 until 256).map(i => ('a' + (i * 11 + 3) % 26).toChar).mkString
-    val dir = tmpDir("phash")
+    val dir = SparkSpec.tempDir("phash")
     writeDocs(dir, Seq(1L -> (tile + " first continuation"),
       2L -> (tile + " second continuation entirely"),
       3L -> (other + " third"), 4L -> "short doc"))
@@ -219,7 +216,7 @@ class Round13QueriesSpec extends SparkSpec {
     }
     // planted independence: identical lang mix in every source -> MI = 0
     import spark.implicits._
-    val dir = tmpDir("mi0")
+    val dir = SparkSpec.tempDir("mi0")
     (for (s <- Seq("sA", "sB"); (l, k) <- Seq("en" -> 2, "de" -> 1); i <- 1 to k)
       yield (s, l, i))
       .zipWithIndex.map { case ((s, l, _), i) => (i.toLong, s"text $i", l, s, 10L) }
@@ -445,7 +442,7 @@ class Round13QueriesSpec extends SparkSpec {
 
   test("x141 planted: a tiny group is exact (every hash known)") {
     import spark.implicits._
-    val dir = tmpDir("kmv")
+    val dir = SparkSpec.tempDir("kmv")
     (1 to 40).map(i => (s"F", i.toLong, 1.0, 1.0, 1.0,
       java.sql.Timestamp.valueOf("1995-01-01 00:00:00")))
       .toDF("l_returnflag", "l_partkey", "l_quantity", "l_extendedprice",

@@ -49,7 +49,7 @@ class Round14QueriesSpec extends SparkSpec {
   }
 
   test("x145 planted: block + length-prune + levenshtein verify; zero-match names survive") {
-    val dir = java.nio.file.Files.createTempDirectory("x145").toString
+    val dir = SparkSpec.tempDir("x145")
     import spark.implicits._
     // Block "ring": "red ring" vs "rad ring" (d=1), "mauve ring" (d=5/4
     // to the other ring names -> pruned by DISTANCE not length).
@@ -129,9 +129,9 @@ class Round14QueriesSpec extends SparkSpec {
       Files.move(part.toPath, Paths.get(s"$dir/$name"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    val one = java.nio.file.Files.createTempDirectory("s28one").toString
+    val one = SparkSpec.tempDir("s28one")
     writeFlat(one, "docs_all.parquet", docs)
-    val many = java.nio.file.Files.createTempDirectory("s28many").toString
+    val many = SparkSpec.tempDir("s28many")
     for (b <- 0 until 3)
       writeFlat(many, s"docs_$b.parquet", docs.filter(_._1 % 3 == b))
     val a = run(one, "docs_*.parquet", None)

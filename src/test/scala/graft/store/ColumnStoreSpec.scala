@@ -30,7 +30,7 @@ class ColumnStoreSpec extends SparkSpec {
   }
 
   test("upsertParquet creates, merges, and is idempotent under re-runs") {
-    val path = java.nio.file.Files.createTempDirectory("colstore").toString + "/columns"
+    val path = SparkSpec.tempDir("colstore") + "/columns"
     ColumnStore.upsertParquet(spark, path, df(("c", "s", "t", "email", "string", "e")))
     val v1 = snap(spark.read.parquet(path))
     assert(v1 == Set(Row("c", "s", "t", "email", "string", "e")))
@@ -49,7 +49,7 @@ class ColumnStoreSpec extends SparkSpec {
   }
 
   test("recovers a store moved aside by a crash between the swap renames") {
-    val path = java.nio.file.Files.createTempDirectory("colstore").toString + "/columns"
+    val path = SparkSpec.tempDir("colstore") + "/columns"
     ColumnStore.upsertParquet(spark, path, df(("c", "s", "t", "email", "string", "e")))
     // Simulate the crash window: store renamed to .old, staging never landed
     val dir = java.nio.file.Paths.get(path)
@@ -72,7 +72,7 @@ class ColumnStoreSpec extends SparkSpec {
     // lockstep); readers hammer readStore the whole time. Snapshot
     // isolation = every read returns ALL 40 keys carrying ONE version
     // string — a mixed-version result or a not-found is a torn read.
-    val path = java.nio.file.Files.createTempDirectory("colstore_si").toString + "/columns"
+    val path = SparkSpec.tempDir("colstore_si") + "/columns"
     val keys = (1 to 40).map(i => s"col_$i")
     def version(v: Int) = df(keys.map(k => ("c", "s", "t", k, "string", s"v$v")): _*)
     ColumnStore.upsertParquet(spark, path, version(1)) // seed: a store always exists
@@ -112,7 +112,7 @@ class ColumnStoreSpec extends SparkSpec {
   }
 
   test("ParquetSwapBackend routes the same upsert/read semantics through the trait") {
-    val path = java.nio.file.Files.createTempDirectory("colstore_be").toString + "/columns"
+    val path = SparkSpec.tempDir("colstore_be") + "/columns"
     val be: MergeBackend = ParquetSwapBackend(path)
     be.upsert(spark, df(("c", "s", "t", "email", "string", "e")))
     be.upsert(spark, spark.createDataFrame(
@@ -143,7 +143,7 @@ class ColumnStoreSpec extends SparkSpec {
     // missing row-level-operation support (what the format jar provides),
     // never a ParseException. With such a jar on the classpath the
     // identical upsert() call commits transactionally.
-    val warehouse = java.nio.file.Files.createTempDirectory("lake_tbl").toString
+    val warehouse = SparkSpec.tempDir("lake_tbl")
     spark.sql("DROP TABLE IF EXISTS lake_merge_probe")
     df(("c", "s", "t", "email", "string", "e")).write
       .option("path", s"$warehouse/lake_merge_probe").saveAsTable("lake_merge_probe")

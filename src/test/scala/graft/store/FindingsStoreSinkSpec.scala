@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.util.{LocalFs, ProcessStarts}
 
@@ -16,7 +14,7 @@ class FindingsStoreSinkSpec extends SparkSpec {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val saved = keys.map(k => k -> Option(conf.get(k)))
-    val tmp = Files.createTempDirectory("findings_sink").toString
+    val tmp = SparkSpec.tempDir("findings_sink")
     val findings = FindingsStore.toFindings(
       Seq(("t.c1", Some("EMAIL"), 0.9), ("t.c1", None, 0.1), ("t.c2", Some("SSN"), 0.8))
         .toDF("column_ref", "label", "score"), "offline-0.1", "spec")

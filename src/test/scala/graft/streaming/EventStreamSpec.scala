@@ -44,12 +44,25 @@ class EventStreamSpec extends SparkSpec {
     assert(q2.recentProgress.map(_.numInputRows).sum == events)
   }
 
+  test("a replay's checkpoint lives under the scratch root until the pass's releaseAll") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val q = EventStream.replay(spark, "ckpt_spec", "append")(
+      child => EventStream.readEvents(child, sf).select("event_id"))
+    assert(EventStream.sinkTable(q).count() == QueryDef.events(spark, sf).count())
+    val ckpt = new java.io.File(new java.net.URI(
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.resolvedCheckpointRoot).getPath)
+    assert(ckpt.getParentFile == graft.util.SharedStages.root, ckpt)
+    assert(new java.io.File(ckpt, "commits").isDirectory, ckpt)
+    graft.util.SharedStages.releaseAll()
+    assert(!ckpt.exists(), s"$ckpt survived releaseAll")
+  }
+
   test("streamReader probes the schema again after the table is rewritten in place") {
     import org.apache.spark.sql.functions.lit
-    val tmp = java.nio.file.Files.createTempDirectory("schema_rewrite").toString
+    val tmp = SparkSpec.tempDir("schema_rewrite")
     val target = new java.io.File(tmp, "events.parquet").toPath
     def writeSingleFile(df: org.apache.spark.sql.DataFrame): Unit = {
-      val part = java.nio.file.Files.createTempDirectory("schema_part").toString
+      val part = SparkSpec.tempDir("schema_part")
       df.coalesce(1).write.mode("overwrite").parquet(part)
       val f = new java.io.File(part).listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(f.toPath, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -102,7 +115,7 @@ class EventStreamSpec extends SparkSpec {
     // order is preserved across batches, which is the audit's contract
     // (lateness is relative to ARRIVAL history; a %-split would reorder it).
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("stream_lateness").toString
+    val tmp = SparkSpec.tempDir("stream_lateness")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     val ids = raw.select("event_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids((ids.length / 3).min(ids.length - 1)),
@@ -142,7 +155,7 @@ class EventStreamSpec extends SparkSpec {
     // is preserved across batches — s27's in-order delivery contract —
     // and a run that spans a batch boundary must continue, not restart.
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("stream_scd2").toString
+    val tmp = SparkSpec.tempDir("stream_scd2")
     val raw = spark.read.parquet(s"$sf/events.parquet")
     val tsu = expr("unix_micros(CAST(ts AS TIMESTAMP))")
     val tss = raw.select(tsu).collect().map(_.getLong(0)).sorted
@@ -192,7 +205,7 @@ class EventStreamSpec extends SparkSpec {
     // delivers events out of order relative to previous batches. The
     // interval-merge state must still converge to the batch oracle.
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("stream_multibatch").toString
+    val tmp = SparkSpec.tempDir("stream_multibatch")
     val raw = spark.read.parquet(s"$sf/events.parquet") // ts stays raw nanos-long
     for (i <- 0 until 3) {
       val sub = s"$tmp/split_$i"
@@ -241,7 +254,7 @@ class EventStreamSpec extends SparkSpec {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, ntile}
-    val tmp = Files.createTempDirectory("stream_attr_batches").toString
+    val tmp = SparkSpec.tempDir("stream_attr_batches")
     val raw = spark.read.parquet(s"$sf/events.parquet") // ts stays raw nanos-long
       .withColumn("__b", ntile(3).over(Window.orderBy(col("ts"), col("event_id"))))
     for (i <- 1 to 3) {
@@ -302,7 +315,7 @@ class EventStreamSpec extends SparkSpec {
     import java.nio.file.Files
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
-    val tmp = Files.createTempDirectory("stream_evict").toString
+    val tmp = SparkSpec.tempDir("stream_evict")
     val t0 = 1704067200L // 2024-01-01T00:00:00Z, seconds
     def ns(sec: Long): Long = sec * 1000000000L
     // f1: both users active; f2/f3: only user 1, three hours later — far past
@@ -364,7 +377,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch parquet sink writes the aggregate") {
-    val tmp = java.nio.file.Files.createTempDirectory("stream").toString
+    val tmp = SparkSpec.tempDir("stream")
     val q = EventStream.toParquetBatches(
       EventStream.tumblingAgg(EventStream.readEvents(spark, sf)),
       s"$tmp/out", s"$tmp/ckpt")
@@ -375,7 +388,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("exactly-once sink: replays, torn writes, and checkpoint loss do not duplicate") {
-    val tmp = java.nio.file.Files.createTempDirectory("stream_eo").toString
+    val tmp = SparkSpec.tempDir("stream_eo")
     val out = s"$tmp/out"
     val q = EventStream.toParquetBatches(
       EventStream.tumblingAgg(EventStream.readEvents(spark, sf)), out, s"$tmp/ckpt")
@@ -412,7 +425,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("exactly-once sink across many micro-batches equals the batch computation") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("s06_multi").toString
+    val tmp = SparkSpec.tempDir("s06_multi")
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     // three input files -> maxFilesPerTrigger=1 forces >= 3 micro-batches
@@ -442,7 +455,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("quality-router counters accumulate across micro-batches to the batch counts") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("s10_multi").toString
+    val tmp = SparkSpec.tempDir("s10_multi")
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // three input files -> maxFilesPerTrigger=1 forces >= 3 micro-batches,
@@ -488,7 +501,7 @@ class EventStreamSpec extends SparkSpec {
     // picked, with state carried between batches).
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val tmp = Files.createTempDirectory("stream_packing").toString
+    val tmp = SparkSpec.tempDir("stream_packing")
     val raw = spark.read.parquet(s"$sf/documents.parquet")
     for (i <- 0 until 3) {
       val sub = s"$tmp/split_$i"
@@ -532,7 +545,7 @@ class EventStreamSpec extends SparkSpec {
     // doc of that source is rejected no matter its size.
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val tmp = Files.createTempDirectory("stream_quota").toString
+    val tmp = SparkSpec.tempDir("stream_quota")
     // sf0.1: the only SF whose per-source token mass EXCEEDS the budgets
     // (~13k tokens vs 3k-9k) — at sf0.001 every doc is admitted and the
     // rejected branch this test exists to pin would be dead.
@@ -592,7 +605,7 @@ class EventStreamSpec extends SparkSpec {
     // are live: keep+accepted, keep+over-budget, short, low_stopword.
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val tmp = Files.createTempDirectory("stream_gate").toString
+    val tmp = SparkSpec.tempDir("stream_gate")
     val raw = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     for (i <- 0 until 3) {
       val sub = s"$tmp/split_$i"
@@ -647,7 +660,7 @@ class EventStreamSpec extends SparkSpec {
     // corpus was batched — the strongest possible cross-batch assertion.
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val tmp = Files.createTempDirectory("stream_wsample").toString
+    val tmp = SparkSpec.tempDir("stream_wsample")
     val raw = spark.read.parquet(s"$sf/documents.parquet")
     for (i <- 0 until 3) {
       val sub = s"$tmp/split_$i"
@@ -689,7 +702,7 @@ class EventStreamSpec extends SparkSpec {
     // per (doc, band) against the owner.
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val tmp = Files.createTempDirectory("stream_lsh").toString
+    val tmp = SparkSpec.tempDir("stream_lsh")
     val raw = spark.read.parquet(s"$sf/documents.parquet")
     for (i <- 0 until 3) {
       val sub = s"$tmp/split_$i"
@@ -743,7 +756,7 @@ class EventStreamSpec extends SparkSpec {
     // ownership MUST cross batches for the verdict to be right).
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val tmp = Files.createTempDirectory("stream_phash").toString
+    val tmp = SparkSpec.tempDir("stream_phash")
     val tile = (0 until 256).map(i => ('a' + (i * 7 + i / 16) % 26).toChar).mkString
     import spark.implicits._
     val planted = Seq(

@@ -21,7 +21,7 @@ object SchemeFs { val Scheme = "eotest" }
 class ExactlyOnceSinkSpec extends SparkSpec {
 
   test("committedCount equals readCommitted's count, with no Spark job") {
-    val out = java.nio.file.Files.createTempDirectory("eo_count").toString
+    val out = SparkSpec.tempDir("eo_count")
     val rows = spark.range(0, 500).select(col("id").as("doc_id"), (col("id") % 7).as("v"))
     assert(ExactlyOnceSink.writeBatch(rows.filter(col("doc_id") < 120), 0L, out))
     assert(ExactlyOnceSink.writeBatch(rows.limit(0), 1L, out)) // empty batch
@@ -42,7 +42,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
   }
 
   test("committedCount throws like readCommitted when nothing has committed") {
-    val out = java.nio.file.Files.createTempDirectory("eo_none").toString
+    val out = SparkSpec.tempDir("eo_none")
     spark.range(3).write.parquet(s"$out/batch_id=0") // torn only
     val read = intercept[IllegalArgumentException](ExactlyOnceSink.readCommitted(spark, out))
     val count = intercept[IllegalArgumentException](ExactlyOnceSink.committedCount(spark, out))
@@ -51,7 +51,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
 
   test("markers, listings and counts follow outDir's Hadoop filesystem") {
     spark.sparkContext.hadoopConfiguration.set(s"fs.${SchemeFs.Scheme}.impl", classOf[SchemeFs].getName)
-    val local = java.nio.file.Files.createTempDirectory("eo_scheme").toString
+    val local = SparkSpec.tempDir("eo_scheme")
     val out = s"${SchemeFs.Scheme}://$local"
     val rows = spark.range(0, 90).select(col("id").as("doc_id"), (col("id") % 4).as("v"))
     assert(ExactlyOnceSink.writeBatch(rows.filter(col("v") === 1), 0L, out))

@@ -21,7 +21,7 @@ class SoakSpec extends SparkSpec {
     * cross-batch disorder — only valid for chains without a watermark). */
   private def sliceEvents(byTime: Boolean): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("soak").toString
+    val tmp = SparkSpec.tempDir("soak")
     val raw = spark.read.parquet(s"$sf/events.parquet") // ts stays raw nanos-long
     val sliced =
       if (byTime) raw.withColumn("__slice",

@@ -2,7 +2,7 @@ package graft.util
 
 import java.io.File
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -58,7 +58,7 @@ class LocalFsSpec extends SparkSpec {
   test("files and directories get the stock classes' modes under umask 022 and 077, with no process") {
     val seen = Seq("022", "077").map { umask =>
       val (stock, ours) = confs(umask)
-      val (a, b) = (Files.createTempDirectory("localfs_stock").toFile, Files.createTempDirectory("localfs_ours").toFile)
+      val (a, b) = (new java.io.File(SparkSpec.tempDir("localfs_stock")), new java.io.File(SparkSpec.tempDir("localfs_ours")))
       populate(stock, a)
       val (_, starts) = ProcessStarts.during(populate(ours, b))
       assert(starts.isEmpty, ProcessStarts.describe(starts))
@@ -74,7 +74,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("a sticky bit still reaches the file") {
     val (_, ours) = confs("022")
-    val dir = Files.createTempDirectory("localfs_sticky")
+    val dir = Paths.get(SparkSpec.tempDir("localfs_sticky"))
     val fs = FileSystem.newInstance(root, ours)
     try fs.setPermission(new Path(dir.toUri.toString), new FsPermission(Integer.parseInt("1777", 8).toShort))
     finally fs.close()
@@ -85,7 +85,7 @@ class LocalFsSpec extends SparkSpec {
     val (_, ours) = confs("022")
     val fc = FileContext.getFileContext(root, ours)
     assert(fc.getDefaultFileSystem.isInstanceOf[LocalFs.Afs])
-    val dir = Files.createTempDirectory("localfs_rename").toUri.toString
+    val dir = Paths.get(SparkSpec.tempDir("localfs_rename")).toUri.toString
     val (src, dst) = (new Path(dir + "src"), new Path(dir + "dst"))
     for ((f, body) <- Seq(src -> "new", dst -> "old")) {
       val out = fc.create(f, java.util.EnumSet.of(CreateFlag.CREATE))
@@ -100,7 +100,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("link status equals the stock class's for files, directories and symlinks") {
-    val dir = Files.createTempDirectory("localfs_links")
+    val dir = Paths.get(SparkSpec.tempDir("localfs_links"))
     val file = Files.write(dir.resolve("f"), "abc".getBytes)
     val link = Files.createSymbolicLink(dir.resolve("l"), file)
     val (stock, ours) = (new RawLocalFileSystem, new LocalFs.Raw)

@@ -103,7 +103,7 @@ class PersistScopeSpec extends SparkSpec {
     // The artifact form of the same race: a build that finishes after
     // releaseAll dropped its cell must not hand back a path the release
     // deletes — the finished artifact joins the next pass instead.
-    val dir = java.nio.file.Files.createTempDirectory("race-art").toString
+    val dir = SparkSpec.tempDir("race-art")
     Seq(1, 2).toDF("n").write.parquet(s"$dir/t.parquet")
     val artEntered = new java.util.concurrent.CountDownLatch(1)
     val artRelease = new java.util.concurrent.CountDownLatch(1)
@@ -138,7 +138,7 @@ class PersistScopeSpec extends SparkSpec {
   test("SharedStages.artifact: stamped on its source, deleted by releaseAll, rebuilt fresh") {
     import spark.implicits._
     SharedStages.releaseAll()
-    val dir = java.nio.file.Files.createTempDirectory("spec-art").toString
+    val dir = SparkSpec.tempDir("spec-art")
     val table = s"$dir/t.parquet"
     Seq(1, 2).toDF("n").write.parquet(table)
     var builds = 0
@@ -150,8 +150,10 @@ class PersistScopeSpec extends SparkSpec {
     val p1 = art()
     assert(published(p1))
     assert(new java.io.File(p1).getParentFile.getName.startsWith("graft-stages-"))
-    assert(new java.io.File(p1).getParentFile.getParent ==
-      new java.io.File(sys.props("java.io.tmpdir")).getPath, s"stage root outside java.io.tmpdir: $p1")
+    val shm = new java.io.File("/dev/shm")
+    val base = if (shm.isDirectory && shm.canWrite) shm.getPath else sys.props("java.io.tmpdir")
+    assert(new java.io.File(p1).getParentFile.getParent == new java.io.File(base).getPath,
+      s"stage root outside $base: $p1")
     assert(art() == p1 && builds == 1, "same stamp: the published artifact is reused")
     // Rewriting the source table in place changes its length and mtime.
     Thread.sleep(10)
@@ -181,6 +183,18 @@ class PersistScopeSpec extends SparkSpec {
       java.nio.file.Files.readString(p).contains("identityHashCode")
     }.map(_.getFileName.toString).toList finally files.close()
     assert(sites.isEmpty, s"hand-built identity keys in: $sites")
+  }
+
+  test("SharedStages owns all scratch space: no other temp dir or shutdown hook under src/main/scala") {
+    import scala.jdk.CollectionConverters._
+    def sites(word: String): List[String] = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        Iterator.fill(word.r.findAllMatchIn(java.nio.file.Files.readString(p)).size)(p.getFileName.toString)
+      }.toList finally files.close()
+    }
+    assert(sites("createTempDirectory").distinct == List("SharedStages.scala"))
+    assert(sites("addShutdownHook") == List("SharedStages.scala"))
   }
 
   test("track returns the dataset unchanged and releaseAll is idempotent") {

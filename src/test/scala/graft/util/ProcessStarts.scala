@@ -19,7 +19,7 @@ object ProcessStarts {
       rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
       val out = try body finally rec.stop()
-      val file = java.nio.file.Files.createTempFile("process_starts", ".jfr")
+      val file = java.nio.file.Paths.get(graft.SparkSpec.tempDir("process_starts"), "rec.jfr")
       try {
         rec.dump(file)
         (out, RecordingFile.readAllEvents(file).asScala.toSeq

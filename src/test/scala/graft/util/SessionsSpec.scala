@@ -10,7 +10,7 @@ class SessionsSpec extends AnyFunSuite {
 
   /** A directory whose one sparse file reports `mib` MiB. */
   private def dirOf(mib: Long): String = {
-    val d = java.nio.file.Files.createTempDirectory("benchconf").toFile
+    val d = new java.io.File(graft.SparkSpec.tempDir("benchconf"))
     d.deleteOnExit()
     val file = new java.io.File(d, "t.parquet")
     file.deleteOnExit()
